@@ -67,7 +67,7 @@ object Bench {
 
     val sfName = Paths.get(sfDir).getFileName.toString
     // warm the session (JVM/codegen/FS init charged to nobody)
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    graft.io.Parquet.read(spark, s"$sfDir/region.parquet").count()
 
     // -- headline: ingest -> melt -> parquet (reference semantics) -----
     val meltValues = Seq("l_partkey", "l_suppkey", "l_quantity",
@@ -76,7 +76,7 @@ object Bench {
     def tsvFor(dir: String): String = {
       val tsv = graft.queries.CoreQueries.fixDir(dir) + "/bench_lineitem_tsv"
       if (!Files.exists(Paths.get(s"$tsv/_SUCCESS")))
-        spark.read.parquet(s"$dir/lineitem.parquet")
+        graft.io.Parquet.read(spark, s"$dir/lineitem.parquet")
           .write.mode("overwrite").option("sep", "\t")
           .option("header", "true").csv(tsv)
       tsv

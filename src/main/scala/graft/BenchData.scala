@@ -42,7 +42,7 @@ object BenchData {
       val p = Paths.get(s"$srcDir/$t.parquet")
       // a scaled source dir holds directory-parquet; driver testdata
       // single files — the reader takes both
-      spark.read.parquet(p.toString)
+      graft.io.Parquet.read(spark, p.toString)
     }
     // key-domain offsets: next power of 10 above the max, so offset
     // arithmetic is readable in any debug dump

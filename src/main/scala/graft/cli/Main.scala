@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.exec.{Annotator, Runner}
-import graft.io.Hdf5Source
+import graft.io.{Hdf5Source, Parquet}
 import graft.model.{FieldsCatalog, ManifestParser, ManifestWriter}
 import org.apache.spark.sql.SparkSession
 
@@ -71,7 +71,7 @@ object Main {
     val t = req(opts, "table")
     verb match {
       case "append" =>
-        val df = spark.read.parquet(req(opts, "input"))
+        val df = Parquet.read(spark, req(opts, "input"))
         val files = opts.getOrElse("target-files", "4").toInt
         val notNull = opts.get("not-null").toSeq
           .flatMap(_.split(",")).filter(_.nonEmpty)
@@ -113,7 +113,7 @@ object Main {
         println(s"""{"version":$v,"delete_vectors":${
           TxLog.deleteVectorCount(t)}}""")
       case "merge" =>
-        val v = TxLog.merge(spark, t, spark.read.parquet(req(opts, "input")),
+        val v = TxLog.merge(spark, t, Parquet.read(spark, req(opts, "input")),
           req(opts, "keys").split(",").toSeq,
           opts.getOrElse("target-files", "4").toInt)
         println(s"""{"version":$v}""")
@@ -161,7 +161,7 @@ object Main {
         println(s"""{"branch":"$b","version":$v}""")
       case "branch-append" =>
         val v = TxLog.branchAppend(spark, t, req(opts, "name"),
-          spark.read.parquet(req(opts, "input")),
+          Parquet.read(spark, req(opts, "input")),
           opts.getOrElse("target-files", "4").toInt)
         println(s"""{"branch":"${opts("name")}","version":$v}""")
       case "branch-read" =>
@@ -287,7 +287,7 @@ object Main {
     val out = req(opts, "out")
     val spark = session()
     try {
-      val base = spark.read.parquet(in)
+      val base = Parquet.read(spark, in)
       val df = opts.get("partitions").map(_.toInt)
         .fold(base)(base.repartition(_))
       val n = graft.io.Hdf5Export.write(df, out)
@@ -306,7 +306,7 @@ object Main {
     val in = req(opts, "input")
     val spark = session()
     try {
-      val df = spark.read.parquet(in)
+      val df = Parquet.read(spark, in)
       graft.ops.Profile.profile(df, exact = !opts.contains("approx"))
         .show(200, truncate = false)
       if (opts.contains("keys")) {
@@ -364,7 +364,7 @@ object Main {
     val in = req(opts, "input")
     val spark = session()
     try {
-      val df = spark.read.parquet(in)
+      val df = Parquet.read(spark, in)
       graft.ops.ext.Eval.centroidAuc(df,
         opts.getOrElse("vec-col", "embedding"),
         opts.getOrElse("id-col", "vec_id"),
@@ -391,9 +391,9 @@ object Main {
     }.toMap).getOrElse(Map.empty[String, Double])
     val spark = session()
     try {
-      val docs = spark.read.parquet(in)
+      val docs = Parquet.read(spark, in)
       // no benchmark given -> an empty one (decontamination passes all)
-      val bench = opts.get("benchmark").map(spark.read.parquet(_))
+      val bench = opts.get("benchmark").map(Parquet.read(spark, _))
         .getOrElse(docs.filter(org.apache.spark.sql.functions.lit(false)))
       val curated = graft.ops.ext.Curation.curate(docs, bench, textCol,
         idCol, strataCol,
@@ -403,7 +403,7 @@ object Main {
         rates = rates,
         defaultRate = opts.getOrElse("default-rate", "1.0").toDouble)
       curated.write.mode("overwrite").parquet(out)
-      val n = spark.read.parquet(out).count()
+      val n = Parquet.read(spark, out).count()
       println(s"$in -> $out ($n surviving rows)")
     } finally spark.stop()
   }
@@ -422,7 +422,7 @@ object Main {
     val minCount = opts.getOrElse("vocab-min-count", "5").toLong
     val spark = session()
     try {
-      val docs = spark.read.parquet(in)
+      val docs = Parquet.read(spark, in)
       val quality = graft.ops.ext.TextAnalysis
         .logisticQuality(docs, textCol)
       val nll = graft.ops.ext.LmScore.unigramNll(docs, textCol, idCol)
@@ -431,7 +431,7 @@ object Main {
         .select(col(idCol), col("oov_rate"))
       quality.join(nll, Seq(idCol), "left").join(oov, Seq(idCol), "left")
         .write.mode("overwrite").parquet(out)
-      val n = spark.read.parquet(out).count()
+      val n = Parquet.read(spark, out).count()
       println(s"$in -> $out ($n scored rows)")
     } finally spark.stop()
   }
@@ -451,7 +451,7 @@ object Main {
     val budget = opts.getOrElse("budget", "1000000").toLong
     val spark = session()
     try {
-      val docs0 = spark.read.parquet(in)
+      val docs0 = Parquet.read(spark, in)
       val docs = opts.get("tokens-col") match {
         case Some(c) => docs0.withColumn("__toks", col(c).cast("long"))
         case None => docs0.withColumn("__toks",
@@ -461,7 +461,7 @@ object Main {
         .assignShards(docs, idCol, "__toks", budget)
         .drop("__toks")
       sharded.write.mode("overwrite").partitionBy("shard").parquet(out)
-      val n = spark.read.parquet(out).select("shard").distinct().count()
+      val n = Parquet.read(spark, out).select("shard").distinct().count()
       println(s"$in -> $out ($n shards at <= $budget tokens)")
     } finally spark.stop()
   }
@@ -480,7 +480,7 @@ object Main {
     val minDocs = opts.getOrElse("min-docs", "10").toInt
     val spark = session()
     try {
-      val docs = spark.read.parquet(in)
+      val docs = Parquet.read(spark, in)
       val cleaned = mode match {
         case "paragraphs" =>
           graft.ops.ext.CorpusClean.paragraphDedup(docs, textCol, idCol)
@@ -493,7 +493,7 @@ object Main {
       docs.drop(textCol)
         .join(cleaned.withColumnRenamed("doc_id", idCol), Seq(idCol))
         .write.mode("overwrite").parquet(out)
-      val kept = spark.read.parquet(out)
+      val kept = Parquet.read(spark, out)
         .agg(org.apache.spark.sql.functions.sum(col("n_removed"))).head().getLong(0)
       println(s"$in -> $out ($kept paragraphs removed)")
     } finally spark.stop()
@@ -509,13 +509,13 @@ object Main {
     val key = req(opts, "key")
     val spark = session()
     try {
-      val o = spark.read.parquet(oldP)
-      val n = spark.read.parquet(newP)
+      val o = Parquet.read(spark, oldP)
+      val n = Parquet.read(spark, newP)
       val cols = opts.get("cols").map(_.split(",").toSeq)
         .getOrElse(o.columns.filterNot(_ == key).toSeq)
       val d = graft.ops.Diff.snapshots(o, n, key, cols)
       d.write.mode("overwrite").parquet(out)
-      val byType = spark.read.parquet(out).groupBy("change_type").count()
+      val byType = Parquet.read(spark, out).groupBy("change_type").count()
         .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted
       println(s"$oldP vs $newP -> $out (${byType.mkString(", ")})")
     } finally spark.stop()
@@ -533,7 +533,7 @@ object Main {
     val shards = opts.getOrElse("shards", "8").toInt
     val spark = session()
     try {
-      val docs = spark.read.parquet(in)
+      val docs = Parquet.read(spark, in)
       graft.ops.ext.TrainOrder.shuffled(docs, idCol, seed, shards)
         .write.mode("overwrite").partitionBy("shard")
         .parquet(out)

@@ -29,7 +29,7 @@ object Runner {
       if (glob.matches(".*\\.json(\\.gz)?$"))
         spark.read.option("multiLine", "false").json(glob)
       else if (glob.endsWith(".parquet"))
-        spark.read.parquet(glob)
+        graft.io.Parquet.read(spark, glob)
       else DsvReader.read(spark, glob, cmd.read)
     if (cmd.cols.nonEmpty) {
       // a melt needs its value columns to survive the projection: they

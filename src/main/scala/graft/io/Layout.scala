@@ -112,7 +112,7 @@ object Layout {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(hPath).getLength
     val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(inPath).repartition(files)
+    Parquet.read(spark, inPath).repartition(files)
       .write.mode("overwrite").parquet(outPath)
     files.toLong
   }

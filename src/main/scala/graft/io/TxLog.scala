@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * last-wins), and the loser's data directory is left for [[vacuum]].
   * Version numbers are dense; the current version is the max log file.
   *
-  * Scale: a snapshot read is `spark.read.parquet(dirs*)` — partition
+  * Scale: a snapshot read is `Parquet.read(spark, dirs*)` — partition
   * pruning, pushdown and split planning all apply per directory;
   * compaction rewrites data ONCE into a target-sized layout and
   * commits the swap as one rename. The log itself is O(versions) tiny
@@ -240,7 +240,7 @@ object TxLog {
     val v = version.orElse(currentVersion(table))
       .getOrElse(sys.error(s"no committed version in $table"))
     val dirs = readEntry(table, v).map(resolveDir(table, _))
-    spark.read.parquet(dirs: _*)
+    Parquet.read(spark, dirs: _*)
   }
 
   /** Snapshot read with schema merge across commits — the
@@ -297,7 +297,7 @@ object TxLog {
       dels: Seq[String], df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     dels.foldLeft(df) { (d, sub) =>
-      val vec = spark.read.parquet(resolveDir(table, sub))
+      val vec = Parquet.read(spark, resolveDir(table, sub))
       val cond = vec.columns.map(c => d(c) <=> vec(c)).reduce(_ && _)
       d.join(broadcast(vec), cond, "left_anti")
     }
@@ -315,7 +315,7 @@ object TxLog {
     val v = version.orElse(currentVersion(table))
       .getOrElse(sys.error(s"no committed version in $table"))
     val (dirs, dels) = readEntryFull(table, v)
-    val base = spark.read.parquet(dirs.map(resolveDir(table, _)): _*)
+    val base = Parquet.read(spark, dirs.map(resolveDir(table, _)): _*)
     applyDels(spark, table, dels, base)
   }
 
@@ -433,7 +433,7 @@ object TxLog {
   private def writeZone(spark: SparkSession, table: String, sub: String,
       zoneCol: String): Unit = {
     import org.apache.spark.sql.functions.{col, max => smax, min => smin}
-    val r = spark.read.parquet(s"$table/$sub")
+    val r = Parquet.read(spark, s"$table/$sub")
       .agg(smin(col(zoneCol)), smax(col(zoneCol))).head()
     if (!r.isNullAt(0) && !r.isNullAt(1))
       writeString(fs(table), zonePath(table, sub),
@@ -481,7 +481,7 @@ object TxLog {
       // NULL for them and the rewrite silently drops them (the round-8
       // advice finding — no-sidecar dirs are always classified touched,
       // so plain-commit data was exposed too)
-      spark.read.parquet(touched.map(resolveDir(table, _)): _*)
+      Parquet.read(spark, touched.map(resolveDir(table, _)): _*)
         .filter(col(zoneCol).isNull ||
           col(zoneCol) < lo || col(zoneCol) > hi)
         .repartition(targetFiles)
@@ -514,7 +514,7 @@ object TxLog {
       keyCol: String, fpp: Double = 1e-6, targetFiles: Int = 4): Int = {
     val v = commit(spark, table, df, targetFiles)
     val sub = f"data/c$v%05d"
-    val committed = spark.read.parquet(s"$table/$sub")
+    val committed = Parquet.read(spark, s"$table/$sub")
     val n = committed.count()
     if (n > 0) {
       val bf = committed.stat.bloomFilter(keyCol, math.max(n, 1L), fpp)
@@ -556,12 +556,12 @@ object TxLog {
     }
     if (kept.isEmpty) {
       val schema =
-        spark.read.parquet(resolveDir(table, dirs.head)).schema
+        Parquet.schema(spark, resolveDir(table, dirs.head))
       (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
         0, dirs.size)
     } else
       (applyDels(spark, table, dels,
-        spark.read.parquet(kept.map(resolveDir(table, _)): _*)),
+        Parquet.read(spark, kept.map(resolveDir(table, _)): _*)),
         kept.size, dirs.size)
   }
 
@@ -593,12 +593,12 @@ object TxLog {
     if (kept.isEmpty) {
       // schema from one footer of the current snapshot — no data read
       val schema =
-        spark.read.parquet(resolveDir(table, dirs.head)).schema
+        Parquet.schema(spark, resolveDir(table, dirs.head))
       (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
         0, dirs.size)
     } else
       (applyDels(spark, table, dels,
-        spark.read.parquet(kept.map(resolveDir(table, _)): _*)),
+        Parquet.read(spark, kept.map(resolveDir(table, _)): _*)),
         kept.size, dirs.size)
   }
 
@@ -627,12 +627,12 @@ object TxLog {
     }
     if (kept.isEmpty) {
       val schema =
-        spark.read.parquet(resolveDir(table, dirs.head)).schema
+        Parquet.schema(spark, resolveDir(table, dirs.head))
       (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
         0, dirs.size)
     } else
       (applyDels(spark, table, dels,
-        spark.read.parquet(kept.map(resolveDir(table, _)): _*)),
+        Parquet.read(spark, kept.map(resolveDir(table, _)): _*)),
         kept.size, dirs.size)
   }
 
@@ -668,7 +668,7 @@ object TxLog {
     val added = readEntry(table, toVersion).filterNot(before)
     require(added.nonEmpty,
       s"no appended data between v$fromVersion and v$toVersion")
-    spark.read.parquet(added.map(resolveDir(table, _)): _*)
+    Parquet.read(spark, added.map(resolveDir(table, _)): _*)
   }
 
   /** Row-level diff between two versions, as a CDC frame: the rows of
@@ -766,7 +766,7 @@ object TxLog {
     // (spark reads __b back as a partition column) instead of one
     // read-back aggregation job per bucket — same sidecar values: the
     // min/max of each bucket's rows
-    val zones = spark.read.parquet(tmp.toString)
+    val zones = Parquet.read(spark, tmp.toString)
       .groupBy(col("__b"))
       .agg(org.apache.spark.sql.functions.min(col(zoneCol)).as("mn"),
         org.apache.spark.sql.functions.max(col(zoneCol)).as("mx"))
@@ -1030,7 +1030,7 @@ object TxLog {
     require(vs.nonEmpty, s"branch $branch does not exist in $table")
     val (dirs, dels) = readBranchEntry(table, branch, vs.last)
     applyDels(spark, table, dels,
-      spark.read.parquet(dirs.map(resolveDir(table, _)): _*))
+      Parquet.read(spark, dirs.map(resolveDir(table, _)): _*))
   }
 
   /** Publish the branch onto main: the directories the branch ADDED

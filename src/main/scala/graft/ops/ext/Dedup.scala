@@ -194,7 +194,7 @@ object Dedup {
     * identity, so both divisions see the same operands (and the
     * union-0 ⇔ both-empty guard is preserved).
     */
-  private[ext] def withJaccard(pairs: DataFrame, a: Column, b: Column,
+  private[ext] def withJaccardOfSets(pairs: DataFrame, a: Column, b: Column,
       name: String): DataFrame = {
     val uni = size(a) + size(b) - col("__ji")
     evalOnce(pairs, "__ji", size(array_intersect(a, b)))
@@ -335,7 +335,8 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
     val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val b = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    val repPairs = withJaccard(cand.join(a, Seq("id_a")).join(b, Seq("id_b")),
+    val repPairs = withJaccardOfSets(
+        cand.join(a, Seq("id_a")).join(b, Seq("id_b")),
         col("sh_a"), col("sh_b"), "jaccard")
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
@@ -397,7 +398,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
     // candidates are tiny post-prefilter: broadcast them through the
     // history probe so the wide shingle frame streams in place
-    withJaccard(broadcast(cand)
+    withJaccardOfSets(broadcast(cand)
         .join(shH.select(col("id").as("id_a"), col("sh").as("sh_a")),
           Seq("id_a"))
         .join(broadcast(shB.select(col("id").as("id_b"),
@@ -706,7 +707,7 @@ object Dedup {
     // persist the shingling runs twice
     val sh = long.select(col("id"),
       shinglesOfTokens(col("__toks"), shingleSize).as("sh")).persist()
-    withJaccard(broadcast(cand
+    withJaccardOfSets(broadcast(cand
         .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a")))
         .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b")),
         col("sh_a"), col("sh_b"), "jaccard")

@@ -131,12 +131,12 @@ object Oph {
     val cand = l.join(r, Seq("bin", "key"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    // verify via Dedup.withJaccard: |a ∩ b| once behind the Generate
-    // barrier, union by set arithmetic — the round-9 advice finding
+    // verify via Dedup.withJaccardOfSets: |a ∩ b| once behind the
+    // Generate barrier, union by set arithmetic — the round-9 advice finding
     // (threshold predicate re-inlined into the join condition, set ops
     // run 2-3x per candidate) fixed for real this time; interleaved A/B
     // in DevOphProf: this verify stage 5.7 → ~1 s at sf0.1.
-    Dedup.withJaccard(cand
+    Dedup.withJaccardOfSets(cand
         .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b"),
         col("sh_a"), col("sh_b"), "__j")

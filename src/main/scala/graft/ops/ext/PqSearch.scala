@@ -45,11 +45,13 @@ object PqSearch {
   def encode(corpus: DataFrame, vecCol: String, idCol: String,
              cents: DataFrame, subDim: Int, subspaces: Int): DataFrame = {
     // subspaces <= 0 would make the sequence() below DESCEND (e.g.
-    // [0,-1]) instead of failing, and `cents` must cover exactly
-    // subspaces 0..subspaces-1 (the codebookArrays contract): a
-    // subspace absent from cents drops every vector's row for it in
-    // the inner centroid join, silently producing partial codes —
-    // round-9 advice finding, now refused up front.
+    // [0,-1]) instead of failing, and `cents` must cover subspaces
+    // 0..subspaces-1 (the codebookArrays contract): an inner centroid
+    // join would drop every vector's row for a missing subspace and
+    // silently produce partial codes. The join below is a left join
+    // and a (vector, subspace) row without centroids raises in the
+    // argmin aggregation — enforced in the one job encode already
+    // runs, not by an extra check job.
     require(subspaces >= 1, s"subspaces must be >= 1 (got $subspaces)")
     require(subDim >= 1, s"subDim must be >= 1 (got $subDim)")
     val v = corpus.select(col(idCol).as("corpus_id"),
@@ -67,15 +69,19 @@ object PqSearch {
         slice(col("vec"), (col("subspace") * subDim + 1).cast("int"),
           lit(subDim)).as("subv"))
       .withColumn("xx", Similarity.dot(col("subv"), col("subv")))
-    val scored = subs.join(broadcast(cents), Seq("subspace"))
+    val scored = subs.join(broadcast(cents), Seq("subspace"), "left")
       .withColumn("d2", col("xx")
         - lit(2.0) * Similarity.dot(col("subv"), col("centv"))
         + col("cc"))
+    val cid = coalesce(col("cid"), raise_error(concat(
+      lit("PqSearch.encode: cents has no centroid for subspace "),
+      col("subspace").cast("string"),
+      lit(s"; it must cover subspaces 0..${subspaces - 1}"))))
     // argmin via MIN(struct) — map-side-combined aggregate instead of
     // a window sort over every (vector × centroid) scored row; same
     // (d2, cid) winner (see KMeans.assign)
     scored.groupBy("corpus_id", "subspace")
-      .agg(min(struct(col("d2"), col("cid"))).as("__m"))
+      .agg(min(struct(col("d2"), cid.as("cid"))).as("__m"))
       .select(col("corpus_id"), col("subspace"), col("__m.cid").as("code"))
   }
 

@@ -17,7 +17,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   */
 object CoreQueries {
   def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.io.Parquet.read(s, s"$dir/$name.parquet")
 
   def sfName(dir: String): String =
     Paths.get(dir).getFileName.toString

@@ -531,20 +531,13 @@ object ExtQueries {
     import graft.streaming.Stateful
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("pathGlobFilter", f.getName).parquet(f.getParent)
+    val f = s"$dir/events.parquet"
+    val src = StreamOps.fileStream(s, f)
       .select(col("user_id"), col("value"))
       .filter(col("value").isNotNull)
       .as[Stateful.Event]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningUserStats(s, src)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("q33_state").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q33_state")
+    StreamOps.runBounded(s, f, "q33_state", "update")(
+      Stateful.runningUserStats(s, src))
       .select(col("user_id"), col("n_events"), col("max_value"))
   }
   val q33Sql: String =
@@ -880,10 +873,8 @@ object ExtQueries {
     import graft.streaming.{Stateful, StatefulTws}
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("pathGlobFilter", f.getName).parquet(f.getParent)
+    val f = s"$dir/events.parquet"
+    val src = StreamOps.fileStream(s, f)
       .select(col("user_id"), col("value"))
       .filter(col("value").isNotNull)
       .as[Stateful.Event]
@@ -891,15 +882,9 @@ object ExtQueries {
     // every later in-session streaming query (see StreamOps scaladoc)
     StreamOps.withStateStoreProvider(s,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      StreamOps.withStatePartitions(s, 8) {
-        val q = StatefulTws.runningUserStats(s, src)
-          .writeStream.outputMode("update")
-          .format("memory").queryName("q51_state").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-    }
-    s.table("q51_state")
-      .select(col("user_id"), col("n_events"), col("max_value"))
+      StreamOps.runBounded(s, f, "q51_state", "update")(
+        StatefulTws.runningUserStats(s, src))
+    }.select(col("user_id"), col("n_events"), col("max_value"))
   }
 
   // ---------------------------------------------------------------- q50
@@ -1399,7 +1384,7 @@ object ExtQueries {
     val tmp = s"${fixDir(dir)}/q68_partitioned"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/_SUCCESS")))
       graft.io.Layout.partitionedWrite(T(s, dir, "documents"), "lang", tmp)
-    s.read.parquet(tmp).filter(col("lang") === "en")
+    graft.io.Parquet.read(s, tmp).filter(col("lang") === "en")
       .select("doc_id", "n_chars", "source")
   }
   val q68Sql: String =

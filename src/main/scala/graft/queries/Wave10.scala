@@ -185,20 +185,14 @@ object Wave10Queries {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
     val m = 127
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.tsAsMicros(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.tsAsMicros(StreamOps.fileStream(s, f))
       .select(col("event_type").as("key"), col("user_id").as("item"),
         col("ts"), col("event_id"))
       .as[Stateful.KeyedItem]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningHeavyHitters(s, src, m)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("q199_mg").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val sketch = s.table("q199_mg")
+    val out = StreamOps.runBounded(s, f, "q199_mg", "update")(
+      Stateful.runningHeavyHitters(s, src, m))
+    val sketch = out
       .select(col("key").as("event_type"), col("item").as("user_id"),
         col("est"))
     val exact = ExtQueries.events(s, dir)

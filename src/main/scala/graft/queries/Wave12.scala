@@ -35,10 +35,8 @@ object Wave12Queries {
         floor(col("value") / 100.0).cast("long").as("tier"))
       .withColumn("valid_to", lead("valid_from", 1).over(wd))
       .drop("event_id")
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val clicks = ExtQueries.normalizeTs(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val clicks = ExtQueries.normalizeTs(StreamOps.fileStream(s, f))
       .filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts"))
     val joined = clicks.join(dim,
@@ -46,12 +44,8 @@ object Wave12Queries {
         col("ts") >= col("valid_from") &&
         (col("valid_to").isNull || col("ts") < col("valid_to")))
       .select(col("click_id"), clicks("user_id").as("user_id"), col("tier"))
-    StreamOps.withStatePartitions(s, 8) {
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName("q206_scd2_enrich").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q206_scd2_enrich").orderBy("click_id")
+    StreamOps.runBounded(s, f, "q206_scd2_enrich", "append")(joined)
+      .orderBy("click_id")
   }
   val q206Sql: String =
     """WITH dim AS (SELECT user_id, ts AS valid_from,

@@ -133,19 +133,12 @@ object Wave13Queries {
   def q213(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.tsAsMicros(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.tsAsMicros(StreamOps.fileStream(s, f))
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Stateful.TimedEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningLatest(s, src)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("q213_upsert").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q213_upsert")
+    StreamOps.runBounded(s, f, "q213_upsert", "update")(
+      Stateful.runningLatest(s, src))
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("value").as("last_value"))
       .orderBy("user_id")

@@ -90,19 +90,12 @@ object Wave18Queries {
   def q228(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.tsAsMicros(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.tsAsMicros(StreamOps.fileStream(s, f))
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Stateful.TimedEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningAnomalies(s, src, minN = 10)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("q228_anomaly").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q228_anomaly")
+    StreamOps.runBounded(s, f, "q228_anomaly", "append")(
+      Stateful.runningAnomalies(s, src, minN = 10))
       .select(col("user_id"), col("event_id"),
         round(col("value"), 6).as("value"), col("n_prior"))
       .orderBy("user_id", "event_id")

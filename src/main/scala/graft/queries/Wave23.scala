@@ -246,21 +246,15 @@ object Wave23Queries {
   def q248(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent)
+    val f = s"$dir/events.parquet"
+    val src = StreamOps.fileStream(s, f)
       .select(col("event_type").as("key"), col("user_id"),
         floor(col("value") * 100.0 + 0.5).cast("long").as("qv"))
       .as[Stateful.ValueEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningLeaderboard(s, src, k = 5)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("q248_lb").start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val out = StreamOps.runBounded(s, f, "q248_lb", "update")(
+      Stateful.runningLeaderboard(s, src, k = 5))
     val w = Window.partitionBy("key")
-    s.table("q248_lb")
+    out
       .withColumn("vmax", max("version").over(w))
       .filter(col("version") === col("vmax"))
       .select(col("key").as("event_type"), col("rank"), col("user_id"),

@@ -25,21 +25,15 @@ object Wave33Queries {
   def q285(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent)
+    val f = s"$dir/events.parquet"
+    val src = StreamOps.fileStream(s, f)
       .select(col("event_type").as("key"), col("event_id").as("user_id"),
         floor(col("value") * 10.0).cast("long").as("qv"))
       .as[Stateful.ValueEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningHistogram(s, src, nBuckets = 64)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("q285_hist").start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val out = StreamOps.runBounded(s, f, "q285_hist", "update")(
+      Stateful.runningHistogram(s, src, nBuckets = 64))
     val w = Window.partitionBy("key")
-    s.table("q285_hist")
+    out
       .withColumn("vmax", max("version").over(w))
       .filter(col("version") === col("vmax"))
       .select(col("key").as("event_type"), col("n"),

@@ -28,20 +28,13 @@ object Wave45Queries {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.tsAsMicros(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.tsAsMicros(StreamOps.fileStream(s, f))
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"))
       .as[Stateful.TypedEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningConversions(s, src)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("q333_conversions").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q333_conversions")
+    StreamOps.runBounded(s, f, "q333_conversions", "append")(
+      Stateful.runningConversions(s, src))
       .select(col("user_id"), col("view_ts"), col("purchase_ts"),
         col("purchase_id"), col("latency_us"))
       .orderBy("user_id")

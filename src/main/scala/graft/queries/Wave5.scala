@@ -1116,19 +1116,12 @@ object Wave5Queries {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.tsAsMicros(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.tsAsMicros(StreamOps.fileStream(s, f))
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Stateful.TimedEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningEwma(s, src, alpha = 0.25)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("q151_ewma").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q151_ewma")
+    StreamOps.runBounded(s, f, "q151_ewma", "update")(
+      Stateful.runningEwma(s, src, alpha = 0.25))
       .select(col("user_id"), col("n_events"),
         round(col("ewma"), 6).as("ewma"))
       .orderBy("user_id")

@@ -26,20 +26,13 @@ object Wave53Queries {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.tsAsMicros(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.tsAsMicros(StreamOps.fileStream(s, f))
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Stateful.TimedEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningBucket(s, src, capU = 3000000L,
-          refillUsPerToken = 600000000L)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("q365_bucket").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q365_bucket")
+    StreamOps.runBounded(s, f, "q365_bucket", "append")(
+      Stateful.runningBucket(s, src, capU = 3000000L,
+        refillUsPerToken = 600000000L))
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"),

@@ -77,7 +77,7 @@ object Wave75Queries {
     val src = streamFixture(s, dir)
     val table = CoreQueries.fixDir(dir) + "/txlog_stream"
     rmTree(table)
-    val schema = s.read.parquet(s"$src/b0_1996.parquet").schema
+    val schema = graft.io.Parquet.schema(s, s"$src/b0_1996.parquet")
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "*.parquet").parquet(src)
@@ -117,7 +117,7 @@ object Wave75Queries {
     val src = streamFixture(s, dir)
     val table = CoreQueries.fixDir(dir) + "/txlog_stream_zone"
     rmTree(table)
-    val schema = s.read.parquet(s"$src/b0_1996.parquet").schema
+    val schema = graft.io.Parquet.schema(s, s"$src/b0_1996.parquet")
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "*.parquet").parquet(src)

@@ -108,7 +108,7 @@ object Wave79Queries {
     }
     val table = fix + "/txlog_stream_merge"
     rmTree(table)
-    val schema = s.read.parquet(s"$src/b0_1996.parquet").schema
+    val schema = graft.io.Parquet.schema(s, s"$src/b0_1996.parquet")
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "*.parquet").parquet(src)

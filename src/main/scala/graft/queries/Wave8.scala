@@ -264,18 +264,13 @@ object Wave8Queries {
         }
       Files.createFile(ready)
     }
-    val schema = s.read.parquet(s"$tmp/b0_ontime.parquet").schema
+    val schema = graft.io.Parquet.schema(s, s"$tmp/b0_ontime.parquet")
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp)
     val agg = src.withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour")).agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("n"))
-    StreamOps.withStatePartitions(s, 8) {
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName("q181_late").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    s.table("q181_late")
+    StreamOps.runBounded(s, tmp, "q181_late", "append")(agg)
   }
   val q181Sql: String =
     """WITH ot AS (SELECT ts FROM events WHERE event_id % 2 = 0),
@@ -451,7 +446,7 @@ object Wave8Queries {
       ExtQueries.events(s, dir)
         .select(col("event_type"), col("value"), to_date(col("ts")).as("d"))
         .write.partitionBy("d").mode("overwrite").parquet(tmp)
-    val fact = s.read.parquet(tmp)
+    val fact = graft.io.Parquet.read(s, tmp)
     val dim = ExtQueries.events(s, dir)
       .select(to_date(col("ts")).as("d")).distinct()
       .filter(weekday(col("d")) <= 1)
@@ -513,24 +508,18 @@ object Wave8Queries {
     */
   def q188(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamOps
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.normalizeTs(s.readStream.schema(schema)
-      .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.normalizeTs(StreamOps.fileStream(s, f))
     val agg = src
       .groupBy(window(col("ts"), "1 day"))
       .agg(approx_count_distinct(col("user_id"), 0.05).as("approx_users"))
       .select(col("window.start").as("window_start"), col("approx_users"))
-    StreamOps.withStatePartitions(s, 8) {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName("q188_hll").start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val approx = StreamOps.runBounded(s, f, "q188_hll", "complete")(agg)
     val exact = ExtQueries.events(s, dir)
       .groupBy(window(col("ts"), "1 day"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
       .select(col("window.start").as("window_start"), col("exact_users"))
-    s.table("q188_hll").join(exact, Seq("window_start"))
+    approx.join(exact, Seq("window_start"))
       .select(col("window_start"), col("exact_users"),
         (abs(col("approx_users") - col("exact_users")) <=
           col("exact_users") * 0.2).as("hll_within_bound"))

@@ -123,20 +123,14 @@ object Wave9Queries {
   def q193(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{Stateful, StreamOps}
     import s.implicits._
-    val f = new java.io.File(s"$dir/events.parquet")
-    val schema = s.read.parquet(f.toString).schema
-    val src = ExtQueries.tsAsMicros(s.readStream.schema(schema)
-        .option("pathGlobFilter", f.getName).parquet(f.getParent))
+    val f = s"$dir/events.parquet"
+    val src = ExtQueries.tsAsMicros(StreamOps.fileStream(s, f))
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Stateful.TimedEvent]
-    StreamOps.withStatePartitions(s, 8) {
-      val q = Stateful.runningMoments(s, src)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("q193_moments").start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    val out = StreamOps.runBounded(s, f, "q193_moments", "update")(
+      Stateful.runningMoments(s, src))
     val m = col("s1").cast("double") / col("n")
-    s.table("q193_moments")
+    out
       .select(col("user_id"), col("n").as("n_events"),
         round(m / 10000.0, 6).as("mean_value"),
         round((col("s2").cast("double") / col("n") - m * m) / 100000000.0, 6)

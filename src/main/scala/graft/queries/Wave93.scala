@@ -120,7 +120,7 @@ object Wave93Queries {
     rmTree(table)
     TxLog.commit(s, table, yearSlice(s, dir, 1996), targetFiles = 2)
     TxLog.branchCreate(table, "ingest")
-    val schema = s.read.parquet(s"$src/b0_1996.parquet").schema
+    val schema = graft.io.Parquet.schema(s, s"$src/b0_1996.parquet")
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "*.parquet").parquet(src)

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Streaming surface (SURVEY §2.11 — extension; the reference is batch
   * only). The engine's `stream` command maps to Structured Streaming:
@@ -19,22 +22,54 @@ object StreamOps {
     df.groupBy(date_trunc(unit, col(tsCol)).as("window_start"), col(keyCol))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
 
-  /** State sizing for bounded smokes: the state-store INSTANCE count is
-    * the shuffle-partition setting at stream start, and every instance
-    * pays a fixed maintenance cost per micro-batch (snapshot, purge,
-    * commit-log round trip) regardless of how little state it holds —
-    * measured locally, q60's join drops 13 s -> 3 s going 32 -> 8
-    * instances over the same data. A bounded local run therefore wants
-    * a handful; a cluster deployment passes its real parallelism so
-    * state SCALES OUT. Wraps `f` with the given shuffle-partition
-    * setting and restores the previous value.
+  /** Drive a streaming query over a bounded file source to completion
+    * and return its result: start `query` on a memory sink named
+    * `queryName`, `processAllAvailable`, stop, and read the table.
+    *
+    * The state-store instance count is fixed at query start from
+    * `spark.sql.shuffle.partitions`, and every instance pays a fixed
+    * cost per micro-batch (state-store load, delta write, commit, and
+    * the task that hosts it) however little state it holds: q177's
+    * left-outer stream-stream join over 10 k events takes 3.5 s at 8
+    * instances and 1.7 s at 1 (local[4] on a 4-core VM). So the count
+    * is sized from the input the replay reads, like AQE sizes a
+    * shuffle:
+    * `ceil(bytes(source) / spark.sql.adaptive.advisoryPartitionSizeInBytes)`
+    * clamped to `[1, spark.sql.shuffle.partitions]` — one instance for a
+    * gate-scale smoke, the session's full parallelism once the input
+    * is large enough to need it. The session setting is restored
+    * afterwards, also when the query fails.
     */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
+  def runBounded(spark: SparkSession, source: String, queryName: String,
+                 outputMode: String)(query: Dataset[_]): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
+    spark.conf.set(key, stateInstances(spark, inputBytes(spark, source)))
+    try {
+      val q = query.writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(queryName)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally spark.conf.set(key, prev)
+    spark.table(queryName)
   }
+
+  /** State-store instances for a bounded replay of `bytes` input bytes. */
+  private def stateInstances(spark: SparkSession, bytes: Long)
+      : Int = {
+    val conf = spark.sessionState.conf
+    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val wanted = (bytes + advisory - 1) / advisory
+    val cap = conf.getConf(SQLConf.SHUFFLE_PARTITIONS).toLong
+    math.max(1L, math.min(wanted, cap)).toInt
+  }
+
+  /** Bytes of the files a file-stream source over `path` reads. */
+  private def inputBytes(spark: SparkSession, path: String): Long =
+    new InMemoryFileIndex(spark, Seq(new Path(path)), Map.empty, None)
+      .sizeInBytes
 
   /** Run `f` under a specific state-store provider, restoring the prior
     * session setting afterwards. A bare conf.set leaks the provider to
@@ -53,13 +88,13 @@ object StreamOps {
     }
   }
 
-  /** File-stream source over a parquet path, schema from a batch peek.
-    * The file-stream source requires a directory; a single-file path is
-    * rewritten to parent dir + pathGlobFilter.
+  /** File-stream source over a parquet path, schema read from the
+    * footer on the driver ([[graft.io.Parquet]]). The file-stream source
+    * requires a directory; a single-file path is rewritten to parent
+    * dir + pathGlobFilter.
     */
-  private def fileStream(spark: SparkSession, parquetPath: String)
-      : DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
+  def fileStream(spark: SparkSession, parquetPath: String): DataFrame = {
+    val schema = graft.io.Parquet.schema(spark, parquetPath)
     val f = new java.io.File(parquetPath)
     val reader0 = spark.readStream.schema(schema)
     val reader =
@@ -80,8 +115,7 @@ object StreamOps {
                            window: String = "1 hour",
                            watermark: String = "1 hour",
                            queryName: String = "stream_counts",
-                           prepare: DataFrame => DataFrame = identity,
-                           statePartitions: Int = 8)
+                           prepare: DataFrame => DataFrame = identity)
       : DataFrame = {
     val src = prepare(fileStream(spark, parquetPath))
     val agg = src
@@ -93,15 +127,7 @@ object StreamOps {
           .cast("double").as("total_value"))
       .select(col("window.start").as("window_start"), col(keyCol),
         col("n"), col("total_value"))
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "complete")(agg)
   }
 
   /** Streaming exact deduplication: dropDuplicates on a content digest
@@ -116,21 +142,12 @@ object StreamOps {
     */
   def streamDistinctDigests(spark: SparkSession, parquetPath: String,
                             textCol: String,
-                            queryName: String = "stream_dedup",
-                            statePartitions: Int = 8)
+                            queryName: String = "stream_dedup")
       : DataFrame = {
     val distinct = fileStream(spark, parquetPath)
       .select(md5(col(textCol)).as("digest"))
       .dropDuplicates("digest")
-    withStatePartitions(spark, statePartitions) {
-      val q = distinct.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "append")(distinct)
   }
 
   /** Streaming distinct over ARBITRARY derived keys (the generalized
@@ -142,18 +159,9 @@ object StreamOps {
     */
   def streamDistinct(spark: SparkSession, parquetPath: String,
                      keyed: DataFrame => DataFrame,
-                     queryName: String = "stream_distinct",
-                     statePartitions: Int = 8): DataFrame = {
+                     queryName: String = "stream_distinct"): DataFrame = {
     val distinct = keyed(fileStream(spark, parquetPath)).dropDuplicates()
-    withStatePartitions(spark, statePartitions) {
-      val q = distinct.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "append")(distinct)
   }
 
   /** Streaming deterministic hash-sample — data curation applied AT
@@ -171,13 +179,7 @@ object StreamOps {
       : DataFrame = {
     val sampled = graft.ops.ext.Sampling.sample(
       fileStream(spark, parquetPath), keyCol, rate)
-    val q = sampled.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "append")(sampled)
   }
 
   /** Stream-static enrichment: join a stream to a STATIC dimension
@@ -194,8 +196,7 @@ object StreamOps {
                          window: String = "1 hour",
                          watermark: String = "1 hour",
                          queryName: String = "stream_enrich",
-                         prepare: DataFrame => DataFrame = identity,
-                         statePartitions: Int = 8)
+                         prepare: DataFrame => DataFrame = identity)
       : DataFrame = {
     val enriched = prepare(fileStream(spark, parquetPath))
       .join(broadcast(dim), keyCol)
@@ -208,15 +209,7 @@ object StreamOps {
           .cast("double").as("total_value"))
       .select(col("window.start").as("window_start"), col(segCol),
         col("n"), col("total_value"))
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "complete")(agg)
   }
 
   /** Production sink shape: stream to a DIRECTORY parquet sink with a
@@ -260,7 +253,6 @@ object StreamOps {
                        watermark: String = "1 hour",
                        queryName: String = "stream_join",
                        prepare: DataFrame => DataFrame = identity,
-                       statePartitions: Int = 8,
                        joinType: String = "inner")
       : DataFrame = {
     val src = prepare(fileStream(spark, parquetPath))
@@ -282,15 +274,7 @@ object StreamOps {
                right_ts >= left_ts AND
                right_ts <= left_ts + interval $within"""), joinType)
       .select(col("l_key").as(keyCol), col("left_id"), col("right_id"))
-    withStatePartitions(spark, statePartitions) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "append")(joined)
   }
 
   /** CHAINED stateful operators in one streaming query: watermarked
@@ -312,8 +296,7 @@ object StreamOps {
                             dedupCols: Seq[String], sentinelKey: Long,
                             window: String = "1 hour",
                             watermark: String = "1 hour",
-                            queryName: String = "stream_dedup_window",
-                            statePartitions: Int = 8)
+                            queryName: String = "stream_dedup_window")
       : DataFrame = {
     val agg = fileStream(spark, parquetPath)
       .withWatermark(tsCol, watermark)
@@ -323,15 +306,7 @@ object StreamOps {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col(keyCol), col("n"))
       .filter(col(keyCol) =!= sentinelKey)
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "append")(agg)
   }
 
   /** Sessionization: session_window with gap — batch twin. */
@@ -356,22 +331,14 @@ object StreamOps {
                           gap: String = "30 minutes",
                           watermark: String = "1 hour",
                           queryName: String = "stream_sessions",
-                          prepare: DataFrame => DataFrame = identity,
-                          statePartitions: Int = 8): DataFrame = {
+                          prepare: DataFrame => DataFrame = identity)
+      : DataFrame = {
     val agg = prepare(fileStream(spark, parquetPath))
       .withWatermark(tsCol, watermark)
       .groupBy(session_window(col(tsCol), gap), col(keyCol))
       .agg(count(lit(1)).as("n"))
       .select(col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"), col(keyCol), col("n"))
-    withStatePartitions(spark, statePartitions) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    spark.table(queryName)
+    runBounded(spark, parquetPath, queryName, "append")(agg)
   }
 }

@@ -444,4 +444,25 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("shingle_hashes"),
       s"expected the native codegen'd shingle kernel:\n$plan")
   }
+
+  test("q445 near-dup verify keeps the Generate barrier under its threshold Filter") {
+    val plan = planOf("q445_oph_neardup")
+    val lines = plan.linesIterator.toIndexedSeq
+    def depth(l: String) = l.indexWhere(_.isLetter)
+    // |a ∩ b| is evaluated once, by a one-element explode...
+    val gen = lines.indexWhere(l => l.contains("Generate explode(array(" +
+      "size(array_intersect("))
+    assert(gen >= 0, s"no one-element-explode Generate:\n$plan")
+    assert("array_intersect".r.findAllIn(plan).size == 1,
+      s"the intersection is computed more than once:\n$plan")
+    // ...and the jaccard threshold filters its output, above it
+    val filter = lines.lastIndexWhere(l => l.contains("Filter") &&
+      l.contains(">= 0.8"), gen)
+    assert(filter >= 0 && depth(lines(filter)) < depth(lines(gen)),
+      s"threshold Filter is not above the Generate:\n$plan")
+    val between = lines.slice(filter + 1, gen)
+    assert(!between.exists(l => l.contains("Exchange") ||
+        l.contains("Join")),
+      s"the Filter must sit directly over the Generate's stage:\n$plan")
+  }
 }

@@ -65,4 +65,20 @@ class PqSearchSpec extends AnyFunSuite {
     val scores = out.collect().map(r => r.getLong(2) -> r.getLong(3)).toMap
     assert(scores(0L) == scores(1L) && scores(1L) == scores(2L))
   }
+
+  test("encode refuses a cents frame that misses a subspace") {
+    val cb = KMeans.pqTrain(corpus, "embedding", "vec_id",
+      subspaces = 2, subDim = 2, centroidEvery = 25, iters = 2)
+    val cents = PqSearch.codebookArrays(cb)
+    val onlySub0 = cents.filter(col("subspace") === 0L)
+    val e = intercept[Exception] {
+      PqSearch.encode(corpus, "embedding", "vec_id", onlySub0, 2, 2)
+        .collect()
+    }
+    assert(e.getMessage.contains("no centroid for subspace 1"),
+      e.getMessage)
+    // extra subspaces beyond `subspaces` are not a gap: still accepted
+    assert(PqSearch.encode(corpus, "embedding", "vec_id", cents, 2, 1)
+      .count() == 8)
+  }
 }

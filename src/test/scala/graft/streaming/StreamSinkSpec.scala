@@ -2,8 +2,11 @@ package graft.streaming
 
 import graft.TestSpark
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
 class StreamSinkSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -46,18 +49,11 @@ class StreamSinkSpec extends AnyFunSuite {
       yield (u, (40 - i) * 1000L, u * 100 + i, (i % 7).toDouble + u)
     rows.toDF("user_id", "ts", "event_id", "value")
       .write.mode("overwrite").parquet(src)
-    val streamed = StreamOps.withStatePartitions(spark, 4) {
-      val ds = spark.readStream
-        .schema(spark.read.parquet(src).schema).parquet(src)
-        .as[Stateful.TimedEvent]
-      val q = Stateful.runningEwma(spark, ds, alpha = 0.25)
-        .writeStream.outputMode("update")
-        .format("memory").queryName("ewma_spec").start()
-      try q.processAllAvailable() finally q.stop()
-      spark.table("ewma_spec")
-        .select("user_id", "n_events", "ewma")
-        .as[(Long, Long, Double)].collect().toSet
-    }
+    val ds = StreamOps.fileStream(spark, src).as[Stateful.TimedEvent]
+    val streamed = StreamOps.runBounded(spark, src, "ewma_spec", "update")(
+        Stateful.runningEwma(spark, ds, alpha = 0.25))
+      .select("user_id", "n_events", "ewma")
+      .as[(Long, Long, Double)].collect().toSet
     val batch = graft.ops.Rolling.ewma(
       spark.read.parquet(src), Seq("user_id"),
       Seq(col("ts"), col("event_id")), "value", alpha = 0.25)
@@ -108,5 +104,117 @@ class StreamSinkSpec extends AnyFunSuite {
     val want = Seq(1L, 2L).flatMap(u => Seq(
       (ts(0), u, 1L), (ts(60), u, 1L), (ts(120), u, 2L))).toSet
     assert(got == want)
+  }
+
+  // ---- bounded-replay runner: state sized from the input ------------
+
+  private val shufflePartitions = "spark.sql.shuffle.partitions"
+  private val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `f`'s result and the state-store instance count the progress of
+    * the streaming query `name` reports (`stateOperators(0)`).
+    */
+  private def stateInstancesOf[T](name: String)(f: => T): (T, Long) = {
+    val seen = new ConcurrentLinkedQueue[Long]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == name)
+          e.progress.stateOperators.headOption
+            .foreach(o => seen.add(o.numShufflePartitions))
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = f
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(!seen.isEmpty, s"no state-operator progress for $name")
+      (out, seen.peek())
+    } finally spark.streams.removeListener(listener)
+  }
+
+  /** Settings under which the runner picks exactly 8 instances: every
+    * input byte asks for one, clamped to 8 shuffle partitions.
+    */
+  private val fixed8 = Seq(advisory -> "1b", shufflePartitions -> "8")
+
+  test("runner: sentinel left-outer stream join equals 8 fixed instances") {
+    val src = Files.createTempDirectory("sized_join").toString + "/ev"
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    def ts(min: Long) = new java.sql.Timestamp(base + min * 60000)
+    val events = for (u <- 1L to 20L; i <- 0L until 10L; e <- Seq(
+        Some((u, u * 1000 + i, ts(u * 7 + i * 13), "click")),
+        if (i % 3 == 0) Some((u, u * 1000 + 500 + i,
+          ts(u * 7 + i * 13 + (i % 4) * 10), "purchase")) else None).flatten)
+      yield e
+    val end = 20L * 7 + 9 * 13 + 180
+    val sentinels = Seq((-1L, -1L, ts(end), "click"),
+      (-2L, -2L, ts(end), "purchase"))
+    (events ++ sentinels).toDF("user_id", "event_id", "ts", "event_type")
+      .coalesce(1).write.parquet(src)
+    def run(name: String) = stateInstancesOf(name) {
+      StreamOps.streamStreamJoin(spark, src, "event_type", "click",
+          "purchase", "ts", "event_id", "user_id", within = "30 minutes",
+          watermark = "1 hour", queryName = name, joinType = "left_outer")
+        .filter(col("user_id") >= 0)
+        .as[(Long, Long, Option[Long])].collect().toSet
+    }
+    val (sized, n) = run("sized_join")
+    val (fixed, n8) = withConf(fixed8: _*)(run("fixed_join"))
+    assert(n == 1, "a KB-sized replay needs one state-store instance")
+    assert(n8 == 8)
+    assert(sized == fixed)
+    // every click is emitted, matched or null-extended
+    assert(sized.map(_._2) ==
+      (for (u <- 1L to 20L; i <- 0L until 10L) yield u * 1000 + i).toSet)
+    assert(sized.exists(_._3.isEmpty) && sized.exists(_._3.nonEmpty))
+    assert(spark.conf.get(shufflePartitions) == "4")
+  }
+
+  test("runner: flatMapGroupsWithState update query sized from its input") {
+    val src = Files.createTempDirectory("sized_fmgws").toString + "/ev"
+    (1L to 40000L).map(i => (i % 97, i * 1000, i, (i % 13).toDouble))
+      .toDF("user_id", "ts", "event_id", "value")
+      .coalesce(1).write.parquet(src)
+    val bytes = new java.io.File(src).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    def run(name: String) = stateInstancesOf(name) {
+      val ds = StreamOps.fileStream(spark, src).as[Stateful.TimedEvent]
+      StreamOps.runBounded(spark, src, name, "update")(
+          Stateful.runningMoments(spark, ds))
+        .as[Stateful.MomentsState].collect().toSet
+    }
+    val (small, n1) = run("moments_small")
+    // the advisory size below the input: more than one instance,
+    // clamped to the session's 4 shuffle partitions
+    assert(bytes > 4 * 8192, s"fixture too small: $bytes bytes")
+    val (large, nLarge) = withConf(advisory -> "8k")(run("moments_large"))
+    val (fixed, n8) = withConf(fixed8: _*)(run("moments_fixed"))
+    assert(n1 == 1)
+    assert(nLarge == 4)
+    assert(n8 == 8)
+    assert(small.size == 97 && small == large && small == fixed)
+    assert(spark.conf.get(shufflePartitions) == "4")
+  }
+
+  test("runner restores spark.sql.shuffle.partitions after a failed query") {
+    val src = Files.createTempDirectory("sized_fail").toString + "/ev"
+    (1L to 10L).toDF("id").write.parquet(src)
+    intercept[Exception] {
+      StreamOps.runBounded(spark, src, "fail_spec", "append")(
+        StreamOps.fileStream(spark, src)
+          .select(raise_error(concat(lit("boom "), col("id").cast("string")))))
+    }
+    assert(spark.conf.get(shufflePartitions) == "4")
   }
 }
