@@ -198,7 +198,7 @@ object Bench {
     // back-to-back passes over the top 50 (r1/r2 agreement is the
     // in-record noise witness) inside 2400 s.
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
-      "/root/repo/benchdata/sf1")
+      s"${graft.queries.CoreQueries.benchdataRoot}/sf1")
     // best observed sf1 seconds per query + the e2e best, kept as data
     // for the sf10 probe's ratios (parsing them back out of the JSON
     // string would also match the loadavg map)
@@ -303,7 +303,7 @@ object Bench {
           if (fullProfile) "1" else "0") == "1") {
         try {
           val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR",
-            "/root/repo/benchdata/sf10")
+            s"${graft.queries.CoreQueries.benchdataRoot}/sf10")
           BenchData.ensureScaledTables(spark, sf1Dir, sf10Dir, factor = 10,
             tables = Some(Set("lineitem", "documents", "embeddings")))
           val e2e10 = runE2eIn(sf10Dir, graft.model.ReadOpts())

@@ -2,16 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** THE engine session config, in one place. Bench (the timed runs),
-  * Verify (the correctness gate) and the dev plan dumper (`DevPlan`,
-  * the committed before/after plan evidence) must all run the same
-  * session — round 9 duplicated the config across the three and the
-  * advisor caught the drift risk: DevPlan was missing the two
-  * shuffled-hash-join knobs, so committed plan evidence could show a
-  * different join strategy than the bench actually executes.
+/** THE engine session config, in one place, and the only
+  * `SparkSession.builder()` in the codebase (`SourceGuardSpec` enforces
+  * it). Its callers:
   *
-  * Knobs (all env-overridable, local defaults keep the driver's bench
-  * comparable; production values are a cluster submit's concern):
+  *  - `graft.Bench` (the timed runs) and `graft.Verify` (the correctness
+  *    gate);
+  *  - the CLI (`graft.cli.Main`), adding its app name and the
+  *    `SPARK_GRAFT_MASTER` deployment override;
+  *  - the test suites (`TestSpark`, at 4 cores), so the plan specs
+  *    assert join shapes under the config the bench times;
+  *  - `perfbench` (the seeded benchmark);
+  *  - the dev mains `DevPlan` (committed plan evidence) and `DevQTime`
+  *    (per-query timings).
+  *
+  * Knobs (local defaults keep the driver's bench comparable; production
+  * values are a cluster submit's concern):
   *
   *  - `spark.sql.shuffle.partitions` = the session's core count — the
   *    scale-adaptive part is AQE coalescing, on everywhere.
@@ -30,10 +36,8 @@ object Sessions {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64m"))
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 }

@@ -1,31 +1,60 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import graft.queries.{CoreQueries, ExtQueries, PipeQueries, Wave4Queries, Wave5Queries, Wave6Queries, Wave7Queries, Wave8Queries, Wave9Queries, Wave10Queries, Wave11Queries, Wave12Queries, Wave13Queries, Wave14Queries, Wave15Queries, Wave16Queries, Wave17Queries, Wave18Queries, Wave19Queries, Wave20Queries, Wave21Queries, Wave22Queries, Wave23Queries, Wave24Queries, Wave25Queries, Wave26Queries, Wave27Queries, Wave28Queries, Wave29Queries, Wave30Queries, Wave31Queries, Wave32Queries, Wave33Queries, Wave34Queries, Wave35Queries, Wave36Queries, Wave37Queries, Wave38Queries, Wave39Queries, Wave40Queries, Wave41Queries, Wave42Queries, Wave43Queries, Wave44Queries, Wave45Queries, Wave46Queries, Wave47Queries, Wave48Queries, Wave49Queries, Wave50Queries, Wave51Queries, Wave52Queries, Wave53Queries, Wave54Queries, Wave55Queries, Wave56Queries, Wave57Queries, Wave58Queries, Wave59Queries, Wave60Queries, Wave61Queries, Wave62Queries, Wave63Queries, Wave64Queries, Wave65Queries, Wave66Queries, Wave67Queries, Wave68Queries, Wave69Queries, Wave70Queries, Wave71Queries, Wave72Queries, Wave73Queries, Wave74Queries, Wave75Queries, Wave76Queries, Wave77Queries, Wave78Queries, Wave79Queries, Wave80Queries, Wave81Queries, Wave82Queries, Wave83Queries, Wave84Queries, Wave85Queries, Wave86Queries, Wave87Queries, Wave88Queries, Wave89Queries, Wave90Queries, Wave91Queries, Wave92Queries, Wave93Queries, Wave94Queries, Wave95Queries}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Queries live in graft.queries.{CoreQueries, ExtQueries}; operator
-  * implementations in graft.{io, ops, exec, streaming, model}.
+/** Driver contract — see SURVEY.md §7. Queries live in `graft.queries`,
+  * one `Seq[Query]` per set; operator implementations in
+  * graft.{io, ops, exec, streaming, model}.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.q07(spark, "/root/testdata/sf0.001")
 
+  /** Every query set, listed once; a name declared twice fails here. */
+  private val registry: Map[String, Query] = Query.index(Seq(
+      CoreQueries.queries, ExtQueries.queries, PipeQueries.queries,
+      Wave4Queries.queries, Wave5Queries.queries, Wave6Queries.queries,
+      Wave7Queries.queries, Wave8Queries.queries, Wave9Queries.queries,
+      Wave10Queries.queries, Wave11Queries.queries, Wave12Queries.queries,
+      Wave13Queries.queries, Wave14Queries.queries, Wave15Queries.queries,
+      Wave16Queries.queries, Wave17Queries.queries, Wave18Queries.queries,
+      Wave19Queries.queries, Wave20Queries.queries, Wave21Queries.queries,
+      Wave22Queries.queries, Wave23Queries.queries, Wave24Queries.queries,
+      Wave25Queries.queries, Wave26Queries.queries, Wave27Queries.queries,
+      Wave28Queries.queries, Wave29Queries.queries, Wave30Queries.queries,
+      Wave31Queries.queries, Wave32Queries.queries, Wave33Queries.queries,
+      Wave34Queries.queries, Wave35Queries.queries, Wave36Queries.queries,
+      Wave37Queries.queries, Wave38Queries.queries, Wave39Queries.queries,
+      Wave40Queries.queries, Wave41Queries.queries, Wave42Queries.queries,
+      Wave43Queries.queries, Wave44Queries.queries, Wave45Queries.queries,
+      Wave46Queries.queries, Wave47Queries.queries, Wave48Queries.queries,
+      Wave49Queries.queries, Wave50Queries.queries, Wave51Queries.queries,
+      Wave52Queries.queries, Wave53Queries.queries, Wave54Queries.queries,
+      Wave55Queries.queries, Wave56Queries.queries, Wave57Queries.queries,
+      Wave58Queries.queries, Wave59Queries.queries, Wave60Queries.queries,
+      Wave61Queries.queries, Wave62Queries.queries, Wave63Queries.queries,
+      Wave64Queries.queries, Wave65Queries.queries, Wave66Queries.queries,
+      Wave67Queries.queries, Wave68Queries.queries, Wave69Queries.queries,
+      Wave70Queries.queries, Wave71Queries.queries, Wave72Queries.queries,
+      Wave73Queries.queries, Wave74Queries.queries, Wave75Queries.queries,
+      Wave76Queries.queries, Wave77Queries.queries, Wave78Queries.queries,
+      Wave79Queries.queries, Wave80Queries.queries, Wave81Queries.queries,
+      Wave82Queries.queries, Wave83Queries.queries, Wave84Queries.queries,
+      Wave85Queries.queries, Wave86Queries.queries, Wave87Queries.queries,
+      Wave88Queries.queries, Wave89Queries.queries, Wave90Queries.queries,
+      Wave91Queries.queries, Wave92Queries.queries, Wave93Queries.queries,
+      Wave94Queries.queries, Wave95Queries.queries).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.queries ++ ExtQueries.queries ++ PipeQueries.queries ++
-      Wave4Queries.queries ++ Wave5Queries.queries ++
-      Wave6Queries.queries ++ Wave7Queries.queries ++ Wave8Queries.queries ++
-      Wave9Queries.queries ++ Wave10Queries.queries ++ Wave11Queries.queries ++ Wave12Queries.queries ++ Wave13Queries.queries ++ Wave14Queries.queries ++ Wave15Queries.queries ++ Wave16Queries.queries ++ Wave17Queries.queries ++ Wave18Queries.queries ++ Wave19Queries.queries ++ Wave20Queries.queries ++ Wave21Queries.queries ++ Wave22Queries.queries ++ Wave23Queries.queries ++ Wave24Queries.queries ++ Wave25Queries.queries ++ Wave26Queries.queries ++ Wave27Queries.queries ++ Wave28Queries.queries ++ Wave29Queries.queries ++ Wave30Queries.queries ++ Wave31Queries.queries ++ Wave32Queries.queries ++ Wave33Queries.queries ++ Wave34Queries.queries ++ Wave35Queries.queries ++ Wave36Queries.queries ++ Wave37Queries.queries ++ Wave38Queries.queries ++ Wave39Queries.queries ++ Wave40Queries.queries ++ Wave41Queries.queries ++ Wave42Queries.queries ++ Wave43Queries.queries ++ Wave44Queries.queries ++ Wave45Queries.queries ++ Wave46Queries.queries ++ Wave47Queries.queries ++ Wave48Queries.queries ++ Wave49Queries.queries ++ Wave50Queries.queries ++ Wave51Queries.queries ++ Wave52Queries.queries ++ Wave53Queries.queries ++ Wave54Queries.queries ++ Wave55Queries.queries ++ Wave56Queries.queries ++ Wave57Queries.queries ++ Wave58Queries.queries ++ Wave59Queries.queries ++ Wave60Queries.queries ++ Wave61Queries.queries ++ Wave62Queries.queries ++ Wave63Queries.queries ++ Wave64Queries.queries ++ Wave65Queries.queries ++ Wave66Queries.queries ++ Wave67Queries.queries ++ Wave68Queries.queries ++ Wave69Queries.queries ++ Wave70Queries.queries ++ Wave71Queries.queries ++ Wave72Queries.queries ++ Wave73Queries.queries ++ Wave74Queries.queries ++ Wave75Queries.queries ++ Wave76Queries.queries ++ Wave77Queries.queries ++ Wave78Queries.queries ++ Wave79Queries.queries ++ Wave80Queries.queries ++ Wave81Queries.queries ++ Wave82Queries.queries ++ Wave83Queries.queries ++ Wave84Queries.queries ++ Wave85Queries.queries ++ Wave86Queries.queries ++ Wave87Queries.queries ++ Wave88Queries.queries ++ Wave89Queries.queries ++ Wave90Queries.queries ++ Wave91Queries.queries ++ Wave92Queries.queries ++ Wave93Queries.queries ++ Wave94Queries.queries ++ Wave95Queries.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables — every query is oracle-checked (the two
     * xxhash-based queries check engine-portable INVARIANTS of their
     * results; see q14/q17 scaladoc).
     */
-  def oracleSql: Map[String, String] =
-    CoreQueries.oracles ++ ExtQueries.oracles ++ PipeQueries.oracles ++
-      Wave4Queries.oracles ++ Wave5Queries.oracles ++
-      Wave6Queries.oracles ++ Wave7Queries.oracles ++ Wave8Queries.oracles ++
-      Wave9Queries.oracles ++ Wave10Queries.oracles ++ Wave11Queries.oracles ++ Wave12Queries.oracles ++ Wave13Queries.oracles ++ Wave14Queries.oracles ++ Wave15Queries.oracles ++ Wave16Queries.oracles ++ Wave17Queries.oracles ++ Wave18Queries.oracles ++ Wave19Queries.oracles ++ Wave20Queries.oracles ++ Wave21Queries.oracles ++ Wave22Queries.oracles ++ Wave23Queries.oracles ++ Wave24Queries.oracles ++ Wave25Queries.oracles ++ Wave26Queries.oracles ++ Wave27Queries.oracles ++ Wave28Queries.oracles ++ Wave29Queries.oracles ++ Wave30Queries.oracles ++ Wave31Queries.oracles ++ Wave32Queries.oracles ++ Wave33Queries.oracles ++ Wave34Queries.oracles ++ Wave35Queries.oracles ++ Wave36Queries.oracles ++ Wave37Queries.oracles ++ Wave38Queries.oracles ++ Wave39Queries.oracles ++ Wave40Queries.oracles ++ Wave41Queries.oracles ++ Wave42Queries.oracles ++ Wave43Queries.oracles ++ Wave44Queries.oracles ++ Wave45Queries.oracles ++ Wave46Queries.oracles ++ Wave47Queries.oracles ++ Wave48Queries.oracles ++ Wave49Queries.oracles ++ Wave50Queries.oracles ++ Wave51Queries.oracles ++ Wave52Queries.oracles ++ Wave53Queries.oracles ++ Wave54Queries.oracles ++ Wave55Queries.oracles ++ Wave56Queries.oracles ++ Wave57Queries.oracles ++ Wave58Queries.oracles ++ Wave59Queries.oracles ++ Wave60Queries.oracles ++ Wave61Queries.oracles ++ Wave62Queries.oracles ++ Wave63Queries.oracles ++ Wave64Queries.oracles ++ Wave65Queries.oracles ++ Wave66Queries.oracles ++ Wave67Queries.oracles ++ Wave68Queries.oracles ++ Wave69Queries.oracles ++ Wave70Queries.oracles ++ Wave71Queries.oracles ++ Wave72Queries.oracles ++ Wave73Queries.oracles ++ Wave74Queries.oracles ++ Wave75Queries.oracles ++ Wave76Queries.oracles ++ Wave77Queries.oracles ++ Wave78Queries.oracles ++ Wave79Queries.oracles ++ Wave80Queries.oracles ++ Wave81Queries.oracles ++ Wave82Queries.oracles ++ Wave83Queries.oracles ++ Wave84Queries.oracles ++ Wave85Queries.oracles ++ Wave86Queries.oracles ++ Wave87Queries.oracles ++ Wave88Queries.oracles ++ Wave89Queries.oracles ++ Wave90Queries.oracles ++ Wave91Queries.oracles ++ Wave92Queries.oracles ++ Wave93Queries.oracles ++ Wave94Queries.oracles ++ Wave95Queries.oracles
+  val oracleSql: Map[String, String] =
+    registry.map { case (n, q) => n -> q.oracle }
 }

@@ -23,16 +23,9 @@ object Main {
     }.toMap
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+    val b = graft.Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master).getOrCreate()
   }
 
   def main(args: Array[String]): Unit = {

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.IntegerType
   * `SELECT shingle_hashes(tokens, 3) FROM docs`.
   *
   * Wire-up is the standard Spark mechanism, either of:
-  *   - `SparkSession.builder.withExtensions(new GraftExtensions)`
-  *     (what this repo's Verify/Bench/CLI/test builders do), or
+  *   - `withExtensions(new GraftExtensions)` on the session builder
+  *     (what `graft.Sessions.builder` does for every session here), or
   *   - `--conf spark.sql.extensions=graft.expr.GraftExtensions` on an
   *     unmodified spark-submit/cluster deployment.
   */

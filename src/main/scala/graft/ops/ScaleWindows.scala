@@ -48,13 +48,11 @@ object ScaleWindows {
 
   private val NBuckets = 64
 
-  /** Rows at or under this take the single-window plan. System
-    * property first (tests pin it), env second, 2M default.
+  /** Rows at or under this take the single-window plan: 2M, or the
+    * `graft.scalewin.small` system property (tests pin it).
     */
   private def smallThreshold: Long =
-    sys.props.get("graft.scalewin.small")
-      .orElse(sys.env.get("SPARK_GRAFT_SCALEWIN_SMALL"))
-      .map(_.toLong).getOrElse(2000000L)
+    sys.props.get("graft.scalewin.small").map(_.toLong).getOrElse(2000000L)
 
   /** Schema-metadata marker on gated frames: records that the frame's
     * row count was MEASURED at or under the small threshold before a

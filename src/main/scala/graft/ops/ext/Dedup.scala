@@ -173,7 +173,7 @@ object Dedup {
     * Generate node: a predicate on generator output cannot be pushed
     * below the Generate, so the expression runs once there and the
     * filter plus the output projection read the materialized column.
-    * Interleaved same-session A/B on the q445 verify (DevOphProf,
+    * Interleaved same-session A/B on the q445 verify (OPTIMIZATION_r10.md,
     * 381k candidate pairs): barrier 0.9–1.1 s vs pushed/re-inlined
     * 1.7–1.9 s.
     */

@@ -135,7 +135,7 @@ object Oph {
     // Generate barrier, union by set arithmetic — the round-9 advice finding
     // (threshold predicate re-inlined into the join condition, set ops
     // run 2-3x per candidate) fixed for real this time; interleaved A/B
-    // in DevOphProf: this verify stage 5.7 → ~1 s at sf0.1.
+    // in OPTIMIZATION_r10.md: this verify stage 5.7 → ~1 s at sf0.1.
     Dedup.withJaccardOfSets(cand
         .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b"),

@@ -109,7 +109,7 @@ object PqSearch {
         floor(Similarity.dot(col("subq"), col("centv")) * 1e6 + 0.5)
           .cast("long"))
       .select(col("query_id"), col("subspace"), col("cid"), col("pq"))
-    // Kept deliberately in the LONG form (round-10 A/B, DevPqAb,
+    // Kept deliberately in the LONG form (OPTIMIZATION_r10.md A/B,
     // interleaved in one session at sf0.1 AND the 10× step): a "wide
     // codes + one broadcast LUT join per subspace + inline sum" rewrite
     // that avoids this aggregation exchange measured ~35% SLOWER at

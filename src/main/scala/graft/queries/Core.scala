@@ -22,6 +22,13 @@ object CoreQueries {
   def sfName(dir: String): String =
     Paths.get(dir).getFileName.toString
 
+  /** Root of the generated, gitignored data (`benchdata/`): fixtures,
+    * and Bench's synthesized scale steps. Resolved against the working
+    * directory, which is the checkout root under sbt (runs and tests fork
+    * there), so each checkout keeps its own.
+    */
+  val benchdataRoot: String = Paths.get("benchdata").toAbsolutePath.toString
+
   /** Fixture root for derived test files, FINGERPRINTED by the source
     * table sizes: fixtures under benchdata/graft_fix (repo-local, gitignored — /tmp
     * cleaners reaped fixture parts MID-BENCH in round 5) survive build
@@ -39,7 +46,7 @@ object CoreQueries {
       val sz = if (Files.exists(p)) Files.size(p) else -1L
       crc.update(s"$t=$sz;".getBytes("UTF-8"))
     }
-    f"/root/repo/benchdata/graft_fix/${sfName(d)}_${crc.getValue}%08x"
+    f"$benchdataRoot/graft_fix/${sfName(d)}_${crc.getValue}%08x"
   })
   private val fixDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -302,7 +309,7 @@ object CoreQueries {
     * projection, [GENE] token, melt). Fixture is sf-independent so the
     * oracle can read the same files via DuckDB read_csv.
     */
-  val q25FixtureRoot = "/root/repo/benchdata/graft_fixtures"
+  val q25FixtureRoot = s"$benchdataRoot/graft_fixtures"
   val q25Manifest: String =
     """{"dsv": [{
       |  "source": "$data_directory/mageck/[GENE]/rra.sgrna_summary.txt",
@@ -483,39 +490,21 @@ object CoreQueries {
       |  count(*) AS n
       |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q36_concat_drift" -> (q36 _),
-    "q39_rollup" -> (q39 _),
-    "q27_numeric_summary" -> (q27 _),
-    "q28_setops" -> (q28 _),
-    "q29_pivot" -> (q29 _),
-    "q31_topk_per_group" -> (q31 _),
-    "q01_dsv_ingest" -> (q01 _),
-    "q02_project" -> (q02 _),
-    "q03_melt" -> (q03 _),
-    "q04_concat_tokens" -> (q04 _),
-    "q05_profile" -> (q05 _),
-    "q06_annotate" -> (q06 _),
-    "q07_groupagg" -> (q07 _),
-    "q08_join_topk" -> (q08 _),
-    "q09_dedup_headers" -> (q09 _),
-    "q25_manifest_e2e" -> (q25 _))
-
-  val oracles: Map[String, String] = Map(
-    "q36_concat_drift" -> q36Sql,
-    "q39_rollup" -> q39Sql,
-    "q27_numeric_summary" -> q27Sql,
-    "q28_setops" -> q28Sql,
-    "q29_pivot" -> q29Sql,
-    "q31_topk_per_group" -> q31Sql,
-    "q01_dsv_ingest" -> q01Sql,
-    "q02_project" -> q02Sql,
-    "q03_melt" -> q03Sql,
-    "q04_concat_tokens" -> q04Sql,
-    "q05_profile" -> q05Sql,
-    "q06_annotate" -> q06Sql,
-    "q07_groupagg" -> q07Sql,
-    "q08_join_topk" -> q08Sql,
-    "q09_dedup_headers" -> q09Sql,
-    "q25_manifest_e2e" -> q25Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q36_concat_drift", q36, q36Sql),
+    Query("q39_rollup", q39, q39Sql),
+    Query("q27_numeric_summary", q27, q27Sql),
+    Query("q28_setops", q28, q28Sql),
+    Query("q29_pivot", q29, q29Sql),
+    Query("q31_topk_per_group", q31, q31Sql),
+    Query("q01_dsv_ingest", q01, q01Sql),
+    Query("q02_project", q02, q02Sql),
+    Query("q03_melt", q03, q03Sql),
+    Query("q04_concat_tokens", q04, q04Sql),
+    Query("q05_profile", q05, q05Sql),
+    Query("q06_annotate", q06, q06Sql),
+    Query("q07_groupagg", q07, q07Sql),
+    Query("q08_join_topk", q08, q08Sql),
+    Query("q09_dedup_headers", q09, q09Sql),
+    Query("q25_manifest_e2e", q25, q25Sql))
 }

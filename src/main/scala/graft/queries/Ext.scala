@@ -408,7 +408,7 @@ object ExtQueries {
     * all scalars (the driver canonicalizer cannot sort array columns).
     */
   def q24(s: SparkSession, dir: String): DataFrame = {
-    val base = Paths.get("/root/repo/benchdata/graft_fixtures/media_v2")
+    val base = Paths.get(s"${CoreQueries.benchdataRoot}/graft_fixtures/media_v2")
     java.nio.file.Files.createDirectories(base)
     // a.png: 16x16 gray ramp, v(x,y) = (7x + 13y) % 256 on all channels
     val png = new java.awt.image.BufferedImage(16, 16,
@@ -1705,92 +1705,6 @@ object ExtQueries {
       |  CAST(1 AS BOOLEAN) AS p50_within_bounds
       |FROM g""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q76_scd2" -> (q76 _),
-    "q77_pagerank" -> (q77 _),
-    "q78_resample_ffill" -> (q78 _),
-    "q79_variant" -> (q79 _),
-    "q80_approx_percentile" -> (q80 _),
-    "q68_partition_prune" -> (q68 _),
-    "q69_countmin" -> (q69 _),
-    "q70_inverted_index" -> (q70 _),
-    "q71_pmi_collocations" -> (q71 _),
-    "q72_int8_quantize" -> (q72 _),
-    "q73_stratified_exact" -> (q73 _),
-    "q74_orc_roundtrip" -> (q74 _),
-    "q75_chained_stateful" -> (q75 _),
-    "q66_bloom_decontaminate" -> (q66 _),
-    "q67_jsonl_ingest" -> (q67 _),
-    "q64_random_projection" -> (q64 _),
-    "q65_cap_per_group" -> (q65 _),
-    "q61_centroids" -> (q61 _),
-    "q62_cube" -> (q62 _),
-    "q63_vocab" -> (q63 _),
-    "q60_stream_join" -> (q60 _),
-    "q55_sessionize" -> (q55 _),
-    "q56_rolling" -> (q56 _),
-    "q57_tfidf" -> (q57 _),
-    "q58_salted_join" -> (q58 _),
-    "q59_quantiles" -> (q59 _),
-    "q47_redact" -> (q47 _),
-    "q48_repetition" -> (q48 _),
-    "q49_stream_enrich" -> (q49 _),
-    "q50_seq_packing" -> (q50 _),
-    "q51_tws_stateful" -> (q51 _),
-    "q52_hll_distinct" -> (q52 _),
-    "q53_dup_components" -> (q53 _),
-    "q54_weighted_sample" -> (q54 _),
-    "q43_range_join" -> (q43 _),
-    "q44_curation" -> (q44 _),
-    "q45_chunking" -> (q45 _),
-    "q40_hash_sample" -> (q40 _),
-    "q41_stream_dedup" -> (q41 _),
-    "q42_decontaminate" -> (q42 _),
-    "q26_hdf5_roundtrip" -> (q26 _),
-    "q30_json_extract" -> (q30 _),
-    "q32_salted_agg" -> (q32 _),
-    "q33_stateful_stream" -> (q33 _),
-    "q34_asof_join" -> (q34 _),
-    "q35_embedding_neardup" -> (q35 _),
-    // SimHash-candidates + exact-jaccard-verified near-dup pairs over
-    // the long-doc slice (simhash's honest envelope — see the operator
-    // scaladoc); oracle = exhaustive jaccard restricted the same way
-    "q38_simhash_neardup" -> ((s, dir) =>
-      Dedup.simhashNearDupsVerified(nearDupCorpus(s, dir), "text", "doc_id",
-        shingleSize = 3, maxHamming = 7, bands = 8, threshold = 0.8,
-        minTokens = 50)
-        .select(col("id_a"), col("id_b"),
-          round(col("jaccard"), 6).as("jaccard"))),
-    // length-routed hybrid (simhash long docs + minhash short docs)
-    // converging on the SAME full exhaustive pair set as q13
-    "q46_hybrid_neardup" -> ((s, dir) =>
-      Dedup.hybridNearDups(nearDupCorpus(s, dir), "text", "doc_id",
-        shingleSize = 3, threshold = 0.8, minTokens = 50)
-        .select(col("id_a"), col("id_b"),
-          round(col("jaccard"), 6).as("jaccard"))),
-    "q37_cosine_ivf" -> ((s, dir) => {
-      val emb = T(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 50 === 0),
-        "embedding", "vec_id", k = 5, centroidEvery = 25, nprobe = 2)
-        .select(col("query_id"), col("rank").cast("long").as("rank"),
-          col("corpus_id"), round(col("cosine"), 6).as("cosine"))
-    }),
-    "q10_dedup_exact" -> (q10 _),
-    "q11_top_tokens" -> (q11 _),
-    "q12_window_hourly" -> (q12 _),
-    "q13_minhash_neardup" -> (q13 _),
-    "q14_simhash" -> (q14 _),
-    "q15_ngram_jaccard" -> (q15 _),
-    "q16_cosine_topk" -> (q16 _),
-    "q17_cosine_lsh" -> (q17 _),
-    "q18_langid" -> (q18 _),
-    "q19_quality" -> (q19 _),
-    "q20_fingerprint" -> (q20 _),
-    "q21_token_count" -> (q21 _),
-    "q22_session_window" -> (q22 _),
-    "q23_stream_hourly" -> (q23 _),
-    "q24_multimodal" -> (q24 _))
-
   /** Oracle for the IVF path: the quantizer is deterministic (centroids
     * = every 25th vector, no RNG), so the whole approximate pipeline is
     * reproducible in SQL: assign -> probe 2 cells -> exact top-5.
@@ -1830,69 +1744,91 @@ object ExtQueries {
       |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, corpus_id) AS rank
       |  FROM scored) WHERE rank <= 5""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q76_scd2" -> q76Sql,
-    "q77_pagerank" -> q77Sql,
-    "q78_resample_ffill" -> q78Sql,
-    "q79_variant" -> q79Sql,
-    "q80_approx_percentile" -> q80Sql,
-    "q68_partition_prune" -> q68Sql,
-    "q69_countmin" -> q69Sql,
-    "q70_inverted_index" -> q70Sql,
-    "q71_pmi_collocations" -> q71Sql,
-    "q72_int8_quantize" -> q72Sql,
-    "q73_stratified_exact" -> q73Sql,
-    "q74_orc_roundtrip" -> q74Sql,
-    "q75_chained_stateful" -> q75Sql,
-    "q66_bloom_decontaminate" -> q66Sql,
-    "q67_jsonl_ingest" -> q67Sql,
-    "q64_random_projection" -> q64Sql,
-    "q65_cap_per_group" -> q65Sql,
-    "q61_centroids" -> q61Sql,
-    "q62_cube" -> q62Sql,
-    "q63_vocab" -> q63Sql,
-    "q60_stream_join" -> q60Sql,
-    "q55_sessionize" -> q55Sql,
-    "q56_rolling" -> q56Sql,
-    "q57_tfidf" -> q57Sql,
-    "q58_salted_join" -> q58Sql,
-    "q59_quantiles" -> q59Sql,
-    "q47_redact" -> q47Sql,
-    "q48_repetition" -> q48Sql,
-    "q49_stream_enrich" -> q49Sql,
-    "q50_seq_packing" -> q50Sql,
-    "q43_range_join" -> q43Sql,
-    "q44_curation" -> q44Sql,
-    "q45_chunking" -> q45Sql,
-    "q46_hybrid_neardup" -> q13Sql,
-    "q40_hash_sample" -> q40Sql,
-    "q41_stream_dedup" -> q41Sql,
-    "q42_decontaminate" -> q42Sql,
-    "q14_simhash" -> q14Sql,
-    "q17_cosine_lsh" -> q17Sql,
-    "q24_multimodal" -> q24Sql,
-    "q26_hdf5_roundtrip" -> q26Sql,
-    "q33_stateful_stream" -> q33Sql,
-    "q51_tws_stateful" -> q33Sql,
-    "q52_hll_distinct" -> q52Sql,
-    "q53_dup_components" -> q53Sql,
-    "q54_weighted_sample" -> q54Sql,
-    "q38_simhash_neardup" -> q38Sql,
-    "q30_json_extract" -> q30Sql,
-    "q32_salted_agg" -> q32Sql,
-    "q34_asof_join" -> q34Sql,
-    "q35_embedding_neardup" -> q35Sql,
-    "q37_cosine_ivf" -> q37Sql,
-    "q10_dedup_exact" -> q10Sql,
-    "q11_top_tokens" -> q11Sql,
-    "q12_window_hourly" -> q12Sql,
-    "q13_minhash_neardup" -> q13Sql,
-    "q15_ngram_jaccard" -> q15Sql,
-    "q16_cosine_topk" -> q16Sql,
-    "q18_langid" -> q18Sql,
-    "q19_quality" -> q19Sql,
-    "q20_fingerprint" -> q20Sql,
-    "q21_token_count" -> q21Sql,
-    "q22_session_window" -> q22Sql,
-    "q23_stream_hourly" -> q23Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q76_scd2", q76, q76Sql),
+    Query("q77_pagerank", q77, q77Sql),
+    Query("q78_resample_ffill", q78, q78Sql),
+    Query("q79_variant", q79, q79Sql),
+    Query("q80_approx_percentile", q80, q80Sql),
+    Query("q68_partition_prune", q68, q68Sql),
+    Query("q69_countmin", q69, q69Sql),
+    Query("q70_inverted_index", q70, q70Sql),
+    Query("q71_pmi_collocations", q71, q71Sql),
+    Query("q72_int8_quantize", q72, q72Sql),
+    Query("q73_stratified_exact", q73, q73Sql),
+    Query("q74_orc_roundtrip", q74, q74Sql),
+    Query("q75_chained_stateful", q75, q75Sql),
+    Query("q66_bloom_decontaminate", q66, q66Sql),
+    Query("q67_jsonl_ingest", q67, q67Sql),
+    Query("q64_random_projection", q64, q64Sql),
+    Query("q65_cap_per_group", q65, q65Sql),
+    Query("q61_centroids", q61, q61Sql),
+    Query("q62_cube", q62, q62Sql),
+    Query("q63_vocab", q63, q63Sql),
+    Query("q60_stream_join", q60, q60Sql),
+    Query("q55_sessionize", q55, q55Sql),
+    Query("q56_rolling", q56, q56Sql),
+    Query("q57_tfidf", q57, q57Sql),
+    Query("q58_salted_join", q58, q58Sql),
+    Query("q59_quantiles", q59, q59Sql),
+    Query("q47_redact", q47, q47Sql),
+    Query("q48_repetition", q48, q48Sql),
+    Query("q49_stream_enrich", q49, q49Sql),
+    Query("q50_seq_packing", q50, q50Sql),
+    Query("q51_tws_stateful", q51, q33Sql),
+    Query("q52_hll_distinct", q52, q52Sql),
+    Query("q53_dup_components", q53, q53Sql),
+    Query("q54_weighted_sample", q54, q54Sql),
+    Query("q43_range_join", q43, q43Sql),
+    Query("q44_curation", q44, q44Sql),
+    Query("q45_chunking", q45, q45Sql),
+    Query("q40_hash_sample", q40, q40Sql),
+    Query("q41_stream_dedup", q41, q41Sql),
+    Query("q42_decontaminate", q42, q42Sql),
+    Query("q26_hdf5_roundtrip", q26, q26Sql),
+    Query("q30_json_extract", q30, q30Sql),
+    Query("q32_salted_agg", q32, q32Sql),
+    Query("q33_stateful_stream", q33, q33Sql),
+    Query("q34_asof_join", q34, q34Sql),
+    Query("q35_embedding_neardup", q35, q35Sql),
+    // SimHash-candidates + exact-jaccard-verified near-dup pairs over
+    // the long-doc slice (simhash's honest envelope — see the operator
+    // scaladoc); oracle = exhaustive jaccard restricted the same way
+    Query("q38_simhash_neardup", (s, dir) =>
+      Dedup.simhashNearDupsVerified(nearDupCorpus(s, dir), "text", "doc_id",
+        shingleSize = 3, maxHamming = 7, bands = 8, threshold = 0.8,
+        minTokens = 50)
+        .select(col("id_a"), col("id_b"),
+          round(col("jaccard"), 6).as("jaccard")),
+      q38Sql),
+    // length-routed hybrid (simhash long docs + minhash short docs)
+    // converging on the SAME full exhaustive pair set as q13
+    Query("q46_hybrid_neardup", (s, dir) =>
+      Dedup.hybridNearDups(nearDupCorpus(s, dir), "text", "doc_id",
+        shingleSize = 3, threshold = 0.8, minTokens = 50)
+        .select(col("id_a"), col("id_b"),
+          round(col("jaccard"), 6).as("jaccard")),
+      q13Sql),
+    Query("q37_cosine_ivf", (s, dir) => {
+      val emb = T(s, dir, "embeddings")
+      Similarity.ivfTopK(emb, emb.filter(col("vec_id") % 50 === 0),
+        "embedding", "vec_id", k = 5, centroidEvery = 25, nprobe = 2)
+        .select(col("query_id"), col("rank").cast("long").as("rank"),
+          col("corpus_id"), round(col("cosine"), 6).as("cosine"))
+    }, q37Sql),
+    Query("q10_dedup_exact", q10, q10Sql),
+    Query("q11_top_tokens", q11, q11Sql),
+    Query("q12_window_hourly", q12, q12Sql),
+    Query("q13_minhash_neardup", q13, q13Sql),
+    Query("q14_simhash", q14, q14Sql),
+    Query("q15_ngram_jaccard", q15, q15Sql),
+    Query("q16_cosine_topk", q16, q16Sql),
+    Query("q17_cosine_lsh", q17, q17Sql),
+    Query("q18_langid", q18, q18Sql),
+    Query("q19_quality", q19, q19Sql),
+    Query("q20_fingerprint", q20, q20Sql),
+    Query("q21_token_count", q21, q21Sql),
+    Query("q22_session_window", q22, q22Sql),
+    Query("q23_stream_hourly", q23, q23Sql),
+    Query("q24_multimodal", q24, q24Sql))
 }

@@ -579,47 +579,25 @@ object PipeQueries {
        |FROM cum GROUP BY 1""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q98_stream_sample" -> (q98 _),
-    "q99_federated_union" -> (q99 _),
-    "q100_release_pipeline" -> (q100 _),
-    "q97_kmeans" -> (q97 _),
-    "q96_rank_deciles" -> (q96 _),
-    "q93_quality_classifier" -> (q93 _),
-    "q94_oov_rate" -> (q94 _),
-    "q95_dataset_card" -> (q95 _),
-    "q89_bigram_lm" -> (q89 _),
-    "q90_schema_evolution" -> (q90 _),
-    "q91_incremental_dedup" -> (q91 _),
-    "q92_containment" -> (q92 _),
-    "q81_avro_roundtrip" -> (q81 _),
-    "q82_xml_ingest" -> (q82 _),
-    "q83_span_dedup" -> (q83 _),
-    "q84_unigram_lm" -> (q84 _),
-    "q85_mixture" -> (q85 _),
-    "q86_semdedup" -> (q86 _),
-    "q87_shard_pack" -> (q87 _),
-    "q88_cdc_apply" -> (q88 _))
-
-  val oracles: Map[String, String] = Map(
-    "q98_stream_sample" -> q98Sql,
-    "q99_federated_union" -> q99Sql,
-    "q100_release_pipeline" -> q100Sql,
-    "q97_kmeans" -> q97Sql,
-    "q96_rank_deciles" -> q96Sql,
-    "q93_quality_classifier" -> q93Sql,
-    "q94_oov_rate" -> q94Sql,
-    "q95_dataset_card" -> q95Sql,
-    "q89_bigram_lm" -> q89Sql,
-    "q90_schema_evolution" -> q90Sql,
-    "q91_incremental_dedup" -> q91Sql,
-    "q92_containment" -> q92Sql,
-    "q81_avro_roundtrip" -> q81Sql,
-    "q82_xml_ingest" -> q82Sql,
-    "q83_span_dedup" -> q83Sql,
-    "q84_unigram_lm" -> q84Sql,
-    "q85_mixture" -> q85Sql,
-    "q86_semdedup" -> q86Sql,
-    "q87_shard_pack" -> q87Sql,
-    "q88_cdc_apply" -> q88Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q98_stream_sample", q98, q98Sql),
+    Query("q99_federated_union", q99, q99Sql),
+    Query("q100_release_pipeline", q100, q100Sql),
+    Query("q97_kmeans", q97, q97Sql),
+    Query("q96_rank_deciles", q96, q96Sql),
+    Query("q93_quality_classifier", q93, q93Sql),
+    Query("q94_oov_rate", q94, q94Sql),
+    Query("q95_dataset_card", q95, q95Sql),
+    Query("q89_bigram_lm", q89, q89Sql),
+    Query("q90_schema_evolution", q90, q90Sql),
+    Query("q91_incremental_dedup", q91, q91Sql),
+    Query("q92_containment", q92, q92Sql),
+    Query("q81_avro_roundtrip", q81, q81Sql),
+    Query("q82_xml_ingest", q82, q82Sql),
+    Query("q83_span_dedup", q83, q83Sql),
+    Query("q84_unigram_lm", q84, q84Sql),
+    Query("q85_mixture", q85, q85Sql),
+    Query("q86_semdedup", q86, q86Sql),
+    Query("q87_shard_pack", q87, q87Sql),
+    Query("q88_cdc_apply", q88, q88Sql))
 }

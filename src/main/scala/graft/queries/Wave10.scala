@@ -340,17 +340,10 @@ object Wave10Queries {
        |ORDER BY start""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q197_poisson_bootstrap" -> (q197 _),
-    "q198_kmv_sketch" -> (q198 _),
-    "q199_stream_heavyhitters" -> (q199 _),
-    "q200_lm_perplexity" -> (q200 _),
-    "q201_random_walks" -> (q201 _))
-
-  val oracles: Map[String, String] = Map(
-    "q197_poisson_bootstrap" -> q197Sql,
-    "q198_kmv_sketch" -> q198Sql,
-    "q199_stream_heavyhitters" -> q199Sql,
-    "q200_lm_perplexity" -> q200Sql,
-    "q201_random_walks" -> q201Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q197_poisson_bootstrap", q197, q197Sql),
+    Query("q198_kmv_sketch", q198, q198Sql),
+    Query("q199_stream_heavyhitters", q199, q199Sql),
+    Query("q200_lm_perplexity", q200, q200Sql),
+    Query("q201_random_walks", q201, q201Sql))
 }

@@ -252,7 +252,8 @@ object Wave11Queries {
     */
   def q205(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.ext.Multimodal
-    val base = java.nio.file.Paths.get("/root/repo/benchdata/graft_fixtures/gvid_v1")
+    val base = java.nio.file.Paths.get(
+      s"${CoreQueries.benchdataRoot}/graft_fixtures/gvid_v1")
     java.nio.file.Files.createDirectories(base)
     val sizes = Seq(0 -> 16, 1 -> 24, 2 -> 8)
     sizes.foreach { case (v, n) =>
@@ -283,15 +284,9 @@ object Wave11Queries {
       |FROM frames ORDER BY file, frame_idx""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q202_isotonic" -> (q202 _),
-    "q203_wasserstein" -> (q203 _),
-    "q204_kneser_ney" -> (q204 _),
-    "q205_frame_sample" -> (q205 _))
-
-  val oracles: Map[String, String] = Map(
-    "q202_isotonic" -> q202Sql,
-    "q203_wasserstein" -> q203Sql,
-    "q204_kneser_ney" -> q204Sql,
-    "q205_frame_sample" -> q205Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q202_isotonic", q202, q202Sql),
+    Query("q203_wasserstein", q203, q203Sql),
+    Query("q204_kneser_ney", q204, q204Sql),
+    Query("q205_frame_sample", q205, q205Sql))
 }

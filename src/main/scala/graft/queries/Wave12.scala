@@ -425,17 +425,10 @@ object Wave12Queries {
       |WHERE rn = 1 ORDER BY source""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q206_stream_scd2_enrich" -> (q206 _),
-    "q207_backtest" -> (q207 _),
-    "q208_lsh_eval" -> (q208 _),
-    "q209_twohop_kmv" -> (q209 _),
-    "q210_gini_split" -> (q210 _))
-
-  val oracles: Map[String, String] = Map(
-    "q206_stream_scd2_enrich" -> q206Sql,
-    "q207_backtest" -> q207Sql,
-    "q208_lsh_eval" -> q208Sql,
-    "q209_twohop_kmv" -> q209Sql,
-    "q210_gini_split" -> q210Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q206_stream_scd2_enrich", q206, q206Sql),
+    Query("q207_backtest", q207, q207Sql),
+    Query("q208_lsh_eval", q208, q208Sql),
+    Query("q209_twohop_kmv", q209, q209Sql),
+    Query("q210_gini_split", q210, q210Sql))
 }

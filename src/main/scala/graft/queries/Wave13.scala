@@ -265,17 +265,10 @@ object Wave13Queries {
       |FROM qi GROUP BY lang ORDER BY lang""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q211_seq_patterns" -> (q211 _),
-    "q212_sprt" -> (q212 _),
-    "q213_stream_upsert" -> (q213 _),
-    "q214_texttiling" -> (q214 _),
-    "q215_k_anonymity" -> (q215 _))
-
-  val oracles: Map[String, String] = Map(
-    "q211_seq_patterns" -> q211Sql,
-    "q212_sprt" -> q212Sql,
-    "q213_stream_upsert" -> q213Sql,
-    "q214_texttiling" -> q214Sql,
-    "q215_k_anonymity" -> q215Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q211_seq_patterns", q211, q211Sql),
+    Query("q212_sprt", q212, q212Sql),
+    Query("q213_stream_upsert", q213, q213Sql),
+    Query("q214_texttiling", q214, q214Sql),
+    Query("q215_k_anonymity", q215, q215Sql))
 }

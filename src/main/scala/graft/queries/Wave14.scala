@@ -301,15 +301,9 @@ object Wave14Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q216_temperature_budget" -> (q216 _),
-    "q217_grid_dbscan" -> (q217 _),
-    "q218_ivm_merge" -> (q218 _),
-    "q219_markov_attribution" -> (q219 _))
-
-  val oracles: Map[String, String] = Map(
-    "q216_temperature_budget" -> q216Sql,
-    "q217_grid_dbscan" -> q217Sql,
-    "q218_ivm_merge" -> q218Sql,
-    "q219_markov_attribution" -> q219Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q216_temperature_budget", q216, q216Sql),
+    Query("q217_grid_dbscan", q217, q217Sql),
+    Query("q218_ivm_merge", q218, q218Sql),
+    Query("q219_markov_attribution", q219, q219Sql))
 }

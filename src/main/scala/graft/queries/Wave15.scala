@@ -131,11 +131,7 @@ object Wave15Queries {
       |FROM terms GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q220_conformal" -> (q220 _),
-    "q221_coec" -> (q221 _))
-
-  val oracles: Map[String, String] = Map(
-    "q220_conformal" -> q220Sql,
-    "q221_coec" -> q221Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q220_conformal", q220, q220Sql),
+    Query("q221_coec", q221, q221Sql))
 }

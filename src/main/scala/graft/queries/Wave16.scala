@@ -205,11 +205,7 @@ object Wave16Queries {
       |FROM b""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q222_boosted_stumps" -> (q222 _),
-    "q223_feature_hashing" -> (q223 _))
-
-  val oracles: Map[String, String] = Map(
-    "q222_boosted_stumps" -> q222Sql,
-    "q223_feature_hashing" -> q223Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q222_boosted_stumps", q222, q222Sql),
+    Query("q223_feature_hashing", q223, q223Sql))
 }

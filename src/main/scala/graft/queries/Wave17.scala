@@ -207,13 +207,8 @@ object Wave17Queries {
       |ORDER BY id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q224_successive_halving" -> (q224 _),
-    "q225_qini" -> (q225 _),
-    "q226_entity_resolution" -> (q226 _))
-
-  val oracles: Map[String, String] = Map(
-    "q224_successive_halving" -> q224Sql,
-    "q225_qini" -> q225Sql,
-    "q226_entity_resolution" -> q226Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q224_successive_halving", q224, q224Sql),
+    Query("q225_qini", q225, q225Sql),
+    Query("q226_entity_resolution", q226, q226Sql))
 }

@@ -125,11 +125,7 @@ object Wave18Queries {
       |ORDER BY user_id, event_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q227_maxsim" -> (q227 _),
-    "q228_stream_anomaly" -> (q228 _))
-
-  val oracles: Map[String, String] = Map(
-    "q227_maxsim" -> q227Sql,
-    "q228_stream_anomaly" -> q228Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q227_maxsim", q227, q227Sql),
+    Query("q228_stream_anomaly", q228, q228Sql))
 }

@@ -306,15 +306,9 @@ object Wave19Queries {
       |WHERE rank <= 20 ORDER BY rank""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q229_rank1_als" -> (q229 _),
-    "q230_woe_iv" -> (q230 _),
-    "q231_cuped" -> (q231 _),
-    "q232_bradley_terry" -> (q232 _))
-
-  val oracles: Map[String, String] = Map(
-    "q229_rank1_als" -> q229Sql,
-    "q230_woe_iv" -> q230Sql,
-    "q231_cuped" -> q231Sql,
-    "q232_bradley_terry" -> q232Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q229_rank1_als", q229, q229Sql),
+    Query("q230_woe_iv", q230, q230Sql),
+    Query("q231_cuped", q231, q231Sql),
+    Query("q232_bradley_terry", q232, q232Sql))
 }

@@ -185,15 +185,9 @@ object Wave20Queries {
       |ORDER BY a, b, c""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q233_l_diversity" -> (q233 _),
-    "q234_silhouette" -> (q234 _),
-    "q235_logo_influence" -> (q235 _),
-    "q236_freq_triples" -> (q236 _))
-
-  val oracles: Map[String, String] = Map(
-    "q233_l_diversity" -> q233Sql,
-    "q234_silhouette" -> q234Sql,
-    "q235_logo_influence" -> q235Sql,
-    "q236_freq_triples" -> q236Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q233_l_diversity", q233, q233Sql),
+    Query("q234_silhouette", q234, q234Sql),
+    Query("q235_logo_influence", q235, q235Sql),
+    Query("q236_freq_triples", q236, q236Sql))
 }

@@ -246,15 +246,9 @@ object Wave21Queries {
       |ORDER BY p.ci, p.cj""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q237_label_spread" -> (q237 _),
-    "q238_did" -> (q238 _),
-    "q239_ransac" -> (q239 _),
-    "q240_energy_distance" -> (q240 _))
-
-  val oracles: Map[String, String] = Map(
-    "q237_label_spread" -> q237Sql,
-    "q238_did" -> q238Sql,
-    "q239_ransac" -> q239Sql,
-    "q240_energy_distance" -> q240Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q237_label_spread", q237, q237Sql),
+    Query("q238_did", q238, q238Sql),
+    Query("q239_ransac", q239, q239Sql),
+    Query("q240_energy_distance", q240, q240Sql))
 }

@@ -251,15 +251,9 @@ object Wave22Queries {
       |FROM binned, tot GROUP BY bin, tn, tp ORDER BY bin""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q241_hard_negatives" -> (q241 _),
-    "q242_shapley" -> (q242 _),
-    "q243_rec_coverage" -> (q243 _),
-    "q244_monotone_binning" -> (q244 _))
-
-  val oracles: Map[String, String] = Map(
-    "q241_hard_negatives" -> q241Sql,
-    "q242_shapley" -> q242Sql,
-    "q243_rec_coverage" -> q243Sql,
-    "q244_monotone_binning" -> q244Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q241_hard_negatives", q241, q241Sql),
+    Query("q242_shapley", q242, q242Sql),
+    Query("q243_rec_coverage", q243, q243Sql),
+    Query("q244_monotone_binning", q244, q244Sql))
 }

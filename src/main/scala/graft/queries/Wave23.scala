@@ -280,15 +280,9 @@ object Wave23Queries {
       |WHERE rank <= 5 ORDER BY event_type, rank""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q245_strat_ate" -> (q245 _),
-    "q246_mrmr" -> (q246 _),
-    "q247_fertility" -> (q247 _),
-    "q248_stream_leaderboard" -> (q248 _))
-
-  val oracles: Map[String, String] = Map(
-    "q245_strat_ate" -> q245Sql,
-    "q246_mrmr" -> q246Sql,
-    "q247_fertility" -> q247Sql,
-    "q248_stream_leaderboard" -> q248Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q245_strat_ate", q245, q245Sql),
+    Query("q246_mrmr", q246, q246Sql),
+    Query("q247_fertility", q247, q247Sql),
+    Query("q248_stream_leaderboard", q248, q248Sql))
 }

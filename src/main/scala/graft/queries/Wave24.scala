@@ -246,15 +246,9 @@ object Wave24Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q249_hits" -> (q249 _),
-    "q250_mann_whitney" -> (q250 _),
-    "q251_logrank" -> (q251 _),
-    "q252_textrank" -> (q252 _))
-
-  val oracles: Map[String, String] = Map(
-    "q249_hits" -> q249Sql,
-    "q250_mann_whitney" -> q250Sql,
-    "q251_logrank" -> q251Sql,
-    "q252_textrank" -> q252Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q249_hits", q249, q249Sql),
+    Query("q250_mann_whitney", q250, q250Sql),
+    Query("q251_logrank", q251, q251Sql),
+    Query("q252_textrank", q252, q252Sql))
 }

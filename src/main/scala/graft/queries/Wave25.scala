@@ -193,15 +193,9 @@ object Wave25Queries {
       |FROM units""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q253_kendall_tau" -> (q253 _),
-    "q254_t_closeness" -> (q254 _),
-    "q255_item_cf" -> (q255 _),
-    "q256_mcnemar" -> (q256 _))
-
-  val oracles: Map[String, String] = Map(
-    "q253_kendall_tau" -> q253Sql,
-    "q254_t_closeness" -> q254Sql,
-    "q255_item_cf" -> q255Sql,
-    "q256_mcnemar" -> q256Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q253_kendall_tau", q253, q253Sql),
+    Query("q254_t_closeness", q254, q254Sql),
+    Query("q255_item_cf", q255, q255Sql),
+    Query("q256_mcnemar", q256, q256Sql))
 }

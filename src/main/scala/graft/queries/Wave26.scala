@@ -241,15 +241,9 @@ object Wave26Queries {
       |ORDER BY event_type""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q257_jaro_winkler" -> (q257 _),
-    "q258_second_eigen" -> (q258 _),
-    "q259_cmh" -> (q259 _),
-    "q260_durbin_watson" -> (q260 _))
-
-  val oracles: Map[String, String] = Map(
-    "q257_jaro_winkler" -> q257Sql,
-    "q258_second_eigen" -> q258Sql,
-    "q259_cmh" -> q259Sql,
-    "q260_durbin_watson" -> q260Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q257_jaro_winkler", q257, q257Sql),
+    Query("q258_second_eigen", q258, q258Sql),
+    Query("q259_cmh", q259, q259Sql),
+    Query("q260_durbin_watson", q260, q260Sql))
 }

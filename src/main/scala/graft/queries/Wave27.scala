@@ -190,15 +190,9 @@ object Wave27Queries {
       |FROM fl GROUP BY lang ORDER BY lang""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q261_ppr" -> (q261 _),
-    "q262_bfs" -> (q262 _),
-    "q263_fd_audit" -> (q263 _),
-    "q264_readability" -> (q264 _))
-
-  val oracles: Map[String, String] = Map(
-    "q261_ppr" -> q261Sql,
-    "q262_bfs" -> q262Sql,
-    "q263_fd_audit" -> q263Sql,
-    "q264_readability" -> q264Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q261_ppr", q261, q261Sql),
+    Query("q262_bfs", q262, q262Sql),
+    Query("q263_fd_audit", q263, q263Sql),
+    Query("q264_readability", q264, q264Sql))
 }

@@ -170,15 +170,9 @@ object Wave28Queries {
       |FROM draws WHERE draw < 200 ORDER BY draw""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q265_sliding_distinct" -> (q265 _),
-    "q266_sliding_p90" -> (q266 _),
-    "q267_heaps_law" -> (q267 _),
-    "q268_systematic_resample" -> (q268 _))
-
-  val oracles: Map[String, String] = Map(
-    "q265_sliding_distinct" -> q265Sql,
-    "q266_sliding_p90" -> q266Sql,
-    "q267_heaps_law" -> q267Sql,
-    "q268_systematic_resample" -> q268Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q265_sliding_distinct", q265, q265Sql),
+    Query("q266_sliding_p90", q266, q266Sql),
+    Query("q267_heaps_law", q267, q267Sql),
+    Query("q268_systematic_resample", q268, q268Sql))
 }

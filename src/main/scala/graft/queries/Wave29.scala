@@ -173,15 +173,9 @@ object Wave29Queries {
        |ORDER BY a, b""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q269_activity_bitmaps" -> (q269 _),
-    "q270_rle_estimate" -> (q270 _),
-    "q271_conversion_latency" -> (q271 _),
-    "q272_prefix_filter_join" -> (q272 _))
-
-  val oracles: Map[String, String] = Map(
-    "q269_activity_bitmaps" -> q269Sql,
-    "q270_rle_estimate" -> q270Sql,
-    "q271_conversion_latency" -> q271Sql,
-    "q272_prefix_filter_join" -> q272Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q269_activity_bitmaps", q269, q269Sql),
+    Query("q270_rle_estimate", q270, q270Sql),
+    Query("q271_conversion_latency", q271, q271Sql),
+    Query("q272_prefix_filter_join", q272, q272Sql))
 }

@@ -205,15 +205,9 @@ object Wave30Queries {
       |FROM agg ORDER BY group_a, group_b""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q273_es_sample" -> (q273 _),
-    "q274_rbo" -> (q274 _),
-    "q275_geometric_median" -> (q275 _),
-    "q276_jsd" -> (q276 _))
-
-  val oracles: Map[String, String] = Map(
-    "q273_es_sample" -> q273Sql,
-    "q274_rbo" -> q274Sql,
-    "q275_geometric_median" -> q275Sql,
-    "q276_jsd" -> q276Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q273_es_sample", q273, q273Sql),
+    Query("q274_rbo", q274, q274Sql),
+    Query("q275_geometric_median", q275, q275Sql),
+    Query("q276_jsd", q276, q276Sql))
 }

@@ -192,15 +192,9 @@ object Wave31Queries {
       |FROM g, tk""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q277_motif" -> (q277 _),
-    "q278_copula_grid" -> (q278 _),
-    "q279_char_entropy" -> (q279 _),
-    "q280_skew_audit" -> (q280 _))
-
-  val oracles: Map[String, String] = Map(
-    "q277_motif" -> q277Sql,
-    "q278_copula_grid" -> q278Sql,
-    "q279_char_entropy" -> q279Sql,
-    "q280_skew_audit" -> q280Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q277_motif", q277, q277Sql),
+    Query("q278_copula_grid", q278, q278Sql),
+    Query("q279_char_entropy", q279, q279Sql),
+    Query("q280_skew_audit", q280, q280Sql))
 }

@@ -196,15 +196,9 @@ object Wave32Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q281_alpha_beta" -> (q281 _),
-    "q282_bcubed" -> (q282 _),
-    "q283_ratio_to_parent" -> (q283 _),
-    "q284_count_sketch" -> (q284 _))
-
-  val oracles: Map[String, String] = Map(
-    "q281_alpha_beta" -> q281Sql,
-    "q282_bcubed" -> q282Sql,
-    "q283_ratio_to_parent" -> q283Sql,
-    "q284_count_sketch" -> q284Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q281_alpha_beta", q281, q281Sql),
+    Query("q282_bcubed", q282, q282Sql),
+    Query("q283_ratio_to_parent", q283, q283Sql),
+    Query("q284_count_sketch", q284, q284Sql))
 }

@@ -168,15 +168,9 @@ object Wave33Queries {
       |FROM agg ORDER BY label""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q285_stream_histogram" -> (q285 _),
-    "q286_join_cardinality" -> (q286 _),
-    "q287_p_chart" -> (q287 _),
-    "q288_anisotropy" -> (q288 _))
-
-  val oracles: Map[String, String] = Map(
-    "q285_stream_histogram" -> q285Sql,
-    "q286_join_cardinality" -> q286Sql,
-    "q287_p_chart" -> q287Sql,
-    "q288_anisotropy" -> q288Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q285_stream_histogram", q285, q285Sql),
+    Query("q286_join_cardinality", q286, q286Sql),
+    Query("q287_p_chart", q287, q287Sql),
+    Query("q288_anisotropy", q288, q288Sql))
 }

@@ -245,15 +245,9 @@ object Wave34Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q289_lang_confusion" -> (q289 _),
-    "q290_haar_energy" -> (q290 _),
-    "q291_dict_estimate" -> (q291 _),
-    "q292_generalization" -> (q292 _))
-
-  val oracles: Map[String, String] = Map(
-    "q289_lang_confusion" -> q289Sql,
-    "q290_haar_energy" -> q290Sql,
-    "q291_dict_estimate" -> q291Sql,
-    "q292_generalization" -> q292Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q289_lang_confusion", q289, q289Sql),
+    Query("q290_haar_energy", q290, q290Sql),
+    Query("q291_dict_estimate", q291, q291Sql),
+    Query("q292_generalization", q292, q292Sql))
 }

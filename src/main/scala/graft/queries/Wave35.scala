@@ -241,15 +241,9 @@ object Wave35Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q293_graph_shape" -> (q293 _),
-    "q294_coverage_select" -> (q294 _),
-    "q295_qte" -> (q295 _),
-    "q296_bowtie" -> (q296 _))
-
-  val oracles: Map[String, String] = Map(
-    "q293_graph_shape" -> q293Sql,
-    "q294_coverage_select" -> q294Sql,
-    "q295_qte" -> q295Sql,
-    "q296_bowtie" -> q296Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q293_graph_shape", q293, q293Sql),
+    Query("q294_coverage_select", q294, q294Sql),
+    Query("q295_qte", q295, q295Sql),
+    Query("q296_bowtie", q296, q296Sql))
 }

@@ -174,15 +174,9 @@ object Wave36Queries {
       |ORDER BY direction""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q297_rolling_ols" -> (q297 _),
-    "q298_burstiness" -> (q298 _),
-    "q299_interarrival_fit" -> (q299 _),
-    "q300_theils_u" -> (q300 _))
-
-  val oracles: Map[String, String] = Map(
-    "q297_rolling_ols" -> q297Sql,
-    "q298_burstiness" -> q298Sql,
-    "q299_interarrival_fit" -> q299Sql,
-    "q300_theils_u" -> q300Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q297_rolling_ols", q297, q297Sql),
+    Query("q298_burstiness", q298, q298Sql),
+    Query("q299_interarrival_fit", q299, q299Sql),
+    Query("q300_theils_u", q300, q300Sql))
 }

@@ -159,15 +159,9 @@ object Wave37Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q301_ltv_curve" -> (q301 _),
-    "q302_qn_scale" -> (q302 _),
-    "q303_entropy_rate" -> (q303 _),
-    "q304_rendezvous" -> (q304 _))
-
-  val oracles: Map[String, String] = Map(
-    "q301_ltv_curve" -> q301Sql,
-    "q302_qn_scale" -> q302Sql,
-    "q303_entropy_rate" -> q303Sql,
-    "q304_rendezvous" -> q304Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q301_ltv_curve", q301, q301Sql),
+    Query("q302_qn_scale", q302, q302Sql),
+    Query("q303_entropy_rate", q303, q303Sql),
+    Query("q304_rendezvous", q304, q304Sql))
 }

@@ -207,15 +207,9 @@ object Wave38Queries {
        |FROM ssrp p JOIN ssrs s USING (g) ORDER BY event_type""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q305_brown_forsythe" -> (q305 _),
-    "q306_grubbs" -> (q306 _),
-    "q307_cohens_d" -> (q307 _),
-    "q308_chow" -> (q308 _))
-
-  val oracles: Map[String, String] = Map(
-    "q305_brown_forsythe" -> q305Sql,
-    "q306_grubbs" -> q306Sql,
-    "q307_cohens_d" -> q307Sql,
-    "q308_chow" -> q308Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q305_brown_forsythe", q305, q305Sql),
+    Query("q306_grubbs", q306, q306Sql),
+    Query("q307_cohens_d", q307, q307Sql),
+    Query("q308_chow", q308, q308Sql))
 }

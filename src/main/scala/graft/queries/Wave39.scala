@@ -159,15 +159,9 @@ object Wave39Queries {
        |FROM binned GROUP BY deg_bin ORDER BY deg_bin""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q309_jaccard_linkpred" -> (q309 _),
-    "q310_rich_club" -> (q310 _),
-    "q311_component_census" -> (q311 _),
-    "q312_clustering_curve" -> (q312 _))
-
-  val oracles: Map[String, String] = Map(
-    "q309_jaccard_linkpred" -> q309Sql,
-    "q310_rich_club" -> q310Sql,
-    "q311_component_census" -> q311Sql,
-    "q312_clustering_curve" -> q312Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q309_jaccard_linkpred", q309, q309Sql),
+    Query("q310_rich_club", q310, q310Sql),
+    Query("q311_component_census", q311, q311Sql),
+    Query("q312_clustering_curve", q312, q312Sql))
 }

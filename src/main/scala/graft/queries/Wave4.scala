@@ -745,49 +745,26 @@ object Wave4Queries {
       |GROUP BY event_type, next_type""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q101_bm25" -> (q101 _),
-    "q102_url_normalize" -> (q102 _),
-    "q103_paragraph_dedup" -> (q103 _),
-    "q104_boilerplate_strip" -> (q104 _),
-    "q105_train_order" -> (q105 _),
-    "q106_median_mode" -> (q106 _),
-    "q107_snapshot_diff" -> (q107 _),
-    "q108_length_buckets" -> (q108 _),
-    "q109_sparse_cosine" -> (q109 _),
-    "q110_winsorize" -> (q110 _),
-    "q111_fuzzy_join" -> (q111 _),
-    "q112_funnel" -> (q112 _),
-    "q113_cohorts" -> (q113 _),
-    "q114_crawl_dedup" -> (q114 _),
-    "q115_interval_union" -> (q115 _),
-    "q116_expectations" -> (q116 _),
-    "q117_sketch_merge" -> (q117 _),
-    "q118_rrf_fusion" -> (q118 _),
-    "q119_stream_urls" -> (q119 _),
-    "q120_grouping_sets" -> (q120 _),
-    "q121_event_paths" -> (q121 _))
-
-  val oracles: Map[String, String] = Map(
-    "q101_bm25" -> q101Sql,
-    "q102_url_normalize" -> q102Sql,
-    "q103_paragraph_dedup" -> q103Sql,
-    "q104_boilerplate_strip" -> q104Sql,
-    "q105_train_order" -> q105Sql,
-    "q106_median_mode" -> q106Sql,
-    "q107_snapshot_diff" -> q107Sql,
-    "q108_length_buckets" -> q108Sql,
-    "q109_sparse_cosine" -> q109Sql,
-    "q110_winsorize" -> q110Sql,
-    "q111_fuzzy_join" -> q111Sql,
-    "q112_funnel" -> q112Sql,
-    "q113_cohorts" -> q113Sql,
-    "q114_crawl_dedup" -> q114Sql,
-    "q115_interval_union" -> q115Sql,
-    "q116_expectations" -> q116Sql,
-    "q117_sketch_merge" -> q117Sql,
-    "q118_rrf_fusion" -> q118Sql,
-    "q119_stream_urls" -> q119Sql,
-    "q120_grouping_sets" -> q120Sql,
-    "q121_event_paths" -> q121Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q101_bm25", q101, q101Sql),
+    Query("q102_url_normalize", q102, q102Sql),
+    Query("q103_paragraph_dedup", q103, q103Sql),
+    Query("q104_boilerplate_strip", q104, q104Sql),
+    Query("q105_train_order", q105, q105Sql),
+    Query("q106_median_mode", q106, q106Sql),
+    Query("q107_snapshot_diff", q107, q107Sql),
+    Query("q108_length_buckets", q108, q108Sql),
+    Query("q109_sparse_cosine", q109, q109Sql),
+    Query("q110_winsorize", q110, q110Sql),
+    Query("q111_fuzzy_join", q111, q111Sql),
+    Query("q112_funnel", q112, q112Sql),
+    Query("q113_cohorts", q113, q113Sql),
+    Query("q114_crawl_dedup", q114, q114Sql),
+    Query("q115_interval_union", q115, q115Sql),
+    Query("q116_expectations", q116, q116Sql),
+    Query("q117_sketch_merge", q117, q117Sql),
+    Query("q118_rrf_fusion", q118, q118Sql),
+    Query("q119_stream_urls", q119, q119Sql),
+    Query("q120_grouping_sets", q120, q120Sql),
+    Query("q121_event_paths", q121, q121Sql))
 }

@@ -234,15 +234,9 @@ object Wave40Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q313_msttr" -> (q313 _),
-    "q314_stopword_cosine" -> (q314 _),
-    "q315_minhash_calibration" -> (q315 _),
-    "q316_rake_keywords" -> (q316 _))
-
-  val oracles: Map[String, String] = Map(
-    "q313_msttr" -> q313Sql,
-    "q314_stopword_cosine" -> q314Sql,
-    "q315_minhash_calibration" -> q315Sql,
-    "q316_rake_keywords" -> q316Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q313_msttr", q313, q313Sql),
+    Query("q314_stopword_cosine", q314, q314Sql),
+    Query("q315_minhash_calibration", q315, q315Sql),
+    Query("q316_rake_keywords", q316, q316Sql))
 }

@@ -183,15 +183,9 @@ object Wave41Queries {
        |FROM j ORDER BY event_type, period""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q317_max_drawdown" -> (q317 _),
-    "q318_hurst" -> (q318 _),
-    "q319_sax_motifs" -> (q319 _),
-    "q320_periodogram" -> (q320 _))
-
-  val oracles: Map[String, String] = Map(
-    "q317_max_drawdown" -> q317Sql,
-    "q318_hurst" -> q318Sql,
-    "q319_sax_motifs" -> q319Sql,
-    "q320_periodogram" -> q320Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q317_max_drawdown", q317, q317Sql),
+    Query("q318_hurst", q318, q318Sql),
+    Query("q319_sax_motifs", q319, q319Sql),
+    Query("q320_periodogram", q320, q320Sql))
 }

@@ -217,15 +217,9 @@ object Wave42Queries {
       |FROM noised ORDER BY source, eps""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q321_ece_mce" -> (q321 _),
-    "q322_brier_decomp" -> (q322 _),
-    "q323_krippendorff" -> (q323 _),
-    "q324_dp_audit" -> (q324 _))
-
-  val oracles: Map[String, String] = Map(
-    "q321_ece_mce" -> q321Sql,
-    "q322_brier_decomp" -> q322Sql,
-    "q323_krippendorff" -> q323Sql,
-    "q324_dp_audit" -> q324Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q321_ece_mce", q321, q321Sql),
+    Query("q322_brier_decomp", q322, q322Sql),
+    Query("q323_krippendorff", q323, q323Sql),
+    Query("q324_dp_audit", q324, q324Sql))
 }

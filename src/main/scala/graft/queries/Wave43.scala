@@ -247,15 +247,9 @@ object Wave43Queries {
        |ORDER BY split""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q325_canonical_dedup" -> (q325 _),
-    "q326_neyman" -> (q326 _),
-    "q327_partition_plan" -> (q327 _),
-    "q328_leakage_split" -> (q328 _))
-
-  val oracles: Map[String, String] = Map(
-    "q325_canonical_dedup" -> q325Sql,
-    "q326_neyman" -> q326Sql,
-    "q327_partition_plan" -> q327Sql,
-    "q328_leakage_split" -> q328Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q325_canonical_dedup", q325, q325Sql),
+    Query("q326_neyman", q326, q326Sql),
+    Query("q327_partition_plan", q327, q327Sql),
+    Query("q328_leakage_split", q328, q328Sql))
 }

@@ -226,15 +226,9 @@ object Wave44Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q329_binary_quant" -> (q329 _),
-    "q330_mmr" -> (q330 _),
-    "q331_query_likelihood" -> (q331 _),
-    "q332_hybrid_fusion" -> (q332 _))
-
-  val oracles: Map[String, String] = Map(
-    "q329_binary_quant" -> q329Sql,
-    "q330_mmr" -> q330Sql,
-    "q331_query_likelihood" -> q331Sql,
-    "q332_hybrid_fusion" -> q332Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q329_binary_quant", q329, q329Sql),
+    Query("q330_mmr", q330, q330Sql),
+    Query("q331_query_likelihood", q331, q331Sql),
+    Query("q332_hybrid_fusion", q332, q332Sql))
 }

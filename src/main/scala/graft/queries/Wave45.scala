@@ -181,15 +181,9 @@ object Wave45Queries {
       |FROM folded ORDER BY event_type""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q333_stream_conversions" -> (q333 _),
-    "q334_dup_rate_curve" -> (q334 _),
-    "q335_source_kl" -> (q335 _),
-    "q336_kleinberg_burst" -> (q336 _))
-
-  val oracles: Map[String, String] = Map(
-    "q333_stream_conversions" -> q333Sql,
-    "q334_dup_rate_curve" -> q334Sql,
-    "q335_source_kl" -> q335Sql,
-    "q336_kleinberg_burst" -> q336Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q333_stream_conversions", q333, q333Sql),
+    Query("q334_dup_rate_curve", q334, q334Sql),
+    Query("q335_source_kl", q335, q335Sql),
+    Query("q336_kleinberg_burst", q336, q336Sql))
 }

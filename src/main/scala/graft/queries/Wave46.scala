@@ -161,15 +161,9 @@ object Wave46Queries {
       |GROUP BY 1 ORDER BY c_mktsegment""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q337_exists_semi" -> (q337 _),
-    "q338_share_filter" -> (q338 _),
-    "q339_distinct_exclusion" -> (q339 _),
-    "q340_anti_avg" -> (q340 _))
-
-  val oracles: Map[String, String] = Map(
-    "q337_exists_semi" -> q337Sql,
-    "q338_share_filter" -> q338Sql,
-    "q339_distinct_exclusion" -> q339Sql,
-    "q340_anti_avg" -> q340Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q337_exists_semi", q337, q337Sql),
+    Query("q338_share_filter", q338, q338Sql),
+    Query("q339_distinct_exclusion", q339, q339Sql),
+    Query("q340_anti_avg", q340, q340Sql))
 }

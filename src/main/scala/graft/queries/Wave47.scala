@@ -195,15 +195,9 @@ object Wave47Queries {
       |FROM ranked GROUP BY idx ORDER BY idx""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q341_streaks" -> (q341 _),
-    "q342_session_quality" -> (q342 _),
-    "q343_stickiness" -> (q343 _),
-    "q344_percentile_envelope" -> (q344 _))
-
-  val oracles: Map[String, String] = Map(
-    "q341_streaks" -> q341Sql,
-    "q342_session_quality" -> q342Sql,
-    "q343_stickiness" -> q343Sql,
-    "q344_percentile_envelope" -> q344Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q341_streaks", q341, q341Sql),
+    Query("q342_session_quality", q342, q342Sql),
+    Query("q343_stickiness", q343, q343Sql),
+    Query("q344_percentile_envelope", q344, q344Sql))
 }

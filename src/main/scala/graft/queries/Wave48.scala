@@ -283,15 +283,9 @@ object Wave48Queries {
       |FROM perkey""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q345_sharded_sessionize" -> (q345 _),
-    "q346_golden_record" -> (q346 _),
-    "q347_ref_integrity" -> (q347 _),
-    "q348_scd2_audit" -> (q348 _))
-
-  val oracles: Map[String, String] = Map(
-    "q345_sharded_sessionize" -> q345Sql,
-    "q346_golden_record" -> q346Sql,
-    "q347_ref_integrity" -> q347Sql,
-    "q348_scd2_audit" -> q348Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q345_sharded_sessionize", q345, q345Sql),
+    Query("q346_golden_record", q346, q346Sql),
+    Query("q347_ref_integrity", q347, q347Sql),
+    Query("q348_scd2_audit", q348, q348Sql))
 }

@@ -237,15 +237,9 @@ object Wave49Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q349_modularity" -> (q349 _),
-    "q350_onion_layers" -> (q350 _),
-    "q351_graph_diff" -> (q351 _),
-    "q352_reach_census" -> (q352 _))
-
-  val oracles: Map[String, String] = Map(
-    "q349_modularity" -> q349Sql,
-    "q350_onion_layers" -> q350Sql,
-    "q351_graph_diff" -> q351Sql,
-    "q352_reach_census" -> q352Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q349_modularity", q349, q349Sql),
+    Query("q350_onion_layers", q350, q350Sql),
+    Query("q351_graph_diff", q351, q351Sql),
+    Query("q352_reach_census", q352, q352Sql))
 }

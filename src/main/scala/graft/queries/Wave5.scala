@@ -533,7 +533,8 @@ object Wave5Queries {
     */
   def q137(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.ext.{Dedup, Multimodal}
-    val base = java.nio.file.Paths.get("/root/repo/benchdata/graft_fixtures/phash_v1")
+    val base = java.nio.file.Paths.get(
+      s"${CoreQueries.benchdataRoot}/graft_fixtures/phash_v1")
     java.nio.file.Files.createDirectories(base)
     def write(name: String, f: (Int, Int) => Int): Unit = {
       val img = new java.awt.image.BufferedImage(32, 32,
@@ -1001,7 +1002,8 @@ object Wave5Queries {
     */
   def q149(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.ext.{Dedup, Multimodal}
-    val base = java.nio.file.Paths.get("/root/repo/benchdata/graft_fixtures/audiofp_v1")
+    val base = java.nio.file.Paths.get(
+      s"${CoreQueries.benchdataRoot}/graft_fixtures/audiofp_v1")
     java.nio.file.Files.createDirectories(base)
     def write(name: String, amp: Int, dens: Int => Int): Unit = {
       // 16 windows x 100 samples; in window w the first dens(w) samples
@@ -1136,67 +1138,35 @@ object Wave5Queries {
       |FROM g ORDER BY user_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q122_zorder" -> (q122 _),
-    "q123_key_discovery" -> (q123 _),
-    "q124_correlation" -> (q124 _),
-    "q125_histogram" -> (q125 _),
-    "q126_drift" -> (q126 _),
-    "q127_prune_estimate" -> (q127 _),
-    "q128_mad_outliers" -> (q128 _),
-    "q129_bpe_merges" -> (q129 _),
-    "q130_quantile_drift" -> (q130 _),
-    "q131_footer_stats" -> (q131 _),
-    "q132_attribution" -> (q132 _),
-    "q133_ranking_metrics" -> (q133 _),
-    "q134_auc" -> (q134 _),
-    "q135_ewma" -> (q135 _),
-    "q136_pareto_frontier" -> (q136 _),
-    "q137_image_phash_dedup" -> (q137 _),
-    "q138_fdr_adjust" -> (q138 _),
-    "q139_chi_square" -> (q139 _),
-    "q140_group_ols" -> (q140 _),
-    "q141_weighted_median" -> (q141 _),
-    "q142_gini" -> (q142 _),
-    "q143_token_entropy" -> (q143 _),
-    "q144_novelty_curve" -> (q144 _),
-    "q145_overlap_matrix" -> (q145 _),
-    "q146_power_iteration" -> (q146 _),
-    "q147_autocorrelation" -> (q147 _),
-    "q148_benford" -> (q148 _),
-    "q149_audio_fingerprint" -> (q149 _),
-    "q150_calibration" -> (q150 _),
-    "q151_stream_ewma" -> (q151 _))
-
-  val oracles: Map[String, String] = Map(
-    "q122_zorder" -> q122Sql,
-    "q123_key_discovery" -> q123Sql,
-    "q124_correlation" -> q124Sql,
-    "q125_histogram" -> q125Sql,
-    "q126_drift" -> q126Sql,
-    "q127_prune_estimate" -> q127Sql,
-    "q128_mad_outliers" -> q128Sql,
-    "q129_bpe_merges" -> q129Sql,
-    "q130_quantile_drift" -> q130Sql,
-    "q131_footer_stats" -> q131Sql,
-    "q132_attribution" -> q132Sql,
-    "q133_ranking_metrics" -> q133Sql,
-    "q134_auc" -> q134Sql,
-    "q135_ewma" -> q135Sql,
-    "q136_pareto_frontier" -> q136Sql,
-    "q137_image_phash_dedup" -> q137Sql,
-    "q138_fdr_adjust" -> q138Sql,
-    "q139_chi_square" -> q139Sql,
-    "q140_group_ols" -> q140Sql,
-    "q141_weighted_median" -> q141Sql,
-    "q142_gini" -> q142Sql,
-    "q143_token_entropy" -> q143Sql,
-    "q144_novelty_curve" -> q144Sql,
-    "q145_overlap_matrix" -> q145Sql,
-    "q146_power_iteration" -> q146Sql,
-    "q147_autocorrelation" -> q147Sql,
-    "q148_benford" -> q148Sql,
-    "q149_audio_fingerprint" -> q149Sql,
-    "q150_calibration" -> q150Sql,
-    "q151_stream_ewma" -> q151Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q122_zorder", q122, q122Sql),
+    Query("q123_key_discovery", q123, q123Sql),
+    Query("q124_correlation", q124, q124Sql),
+    Query("q125_histogram", q125, q125Sql),
+    Query("q126_drift", q126, q126Sql),
+    Query("q127_prune_estimate", q127, q127Sql),
+    Query("q128_mad_outliers", q128, q128Sql),
+    Query("q129_bpe_merges", q129, q129Sql),
+    Query("q130_quantile_drift", q130, q130Sql),
+    Query("q131_footer_stats", q131, q131Sql),
+    Query("q132_attribution", q132, q132Sql),
+    Query("q133_ranking_metrics", q133, q133Sql),
+    Query("q134_auc", q134, q134Sql),
+    Query("q135_ewma", q135, q135Sql),
+    Query("q136_pareto_frontier", q136, q136Sql),
+    Query("q137_image_phash_dedup", q137, q137Sql),
+    Query("q138_fdr_adjust", q138, q138Sql),
+    Query("q139_chi_square", q139, q139Sql),
+    Query("q140_group_ols", q140, q140Sql),
+    Query("q141_weighted_median", q141, q141Sql),
+    Query("q142_gini", q142, q142Sql),
+    Query("q143_token_entropy", q143, q143Sql),
+    Query("q144_novelty_curve", q144, q144Sql),
+    Query("q145_overlap_matrix", q145, q145Sql),
+    Query("q146_power_iteration", q146, q146Sql),
+    Query("q147_autocorrelation", q147, q147Sql),
+    Query("q148_benford", q148, q148Sql),
+    Query("q149_audio_fingerprint", q149, q149Sql),
+    Query("q150_calibration", q150, q150Sql),
+    Query("q151_stream_ewma", q151, q151Sql))
 }

@@ -266,15 +266,9 @@ object Wave50Queries {
        |FROM terms, ent ORDER BY lang""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q353_packing_audit" -> (q353 _),
-    "q354_dedup_roi" -> (q354 _),
-    "q355_ppl_gate_sweep" -> (q355 _),
-    "q356_balance_card" -> (q356 _))
-
-  val oracles: Map[String, String] = Map(
-    "q353_packing_audit" -> q353Sql,
-    "q354_dedup_roi" -> q354Sql,
-    "q355_ppl_gate_sweep" -> q355Sql,
-    "q356_balance_card" -> q356Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q353_packing_audit", q353, q353Sql),
+    Query("q354_dedup_roi", q354, q354Sql),
+    Query("q355_ppl_gate_sweep", q355, q355Sql),
+    Query("q356_balance_card", q356, q356Sql))
 }

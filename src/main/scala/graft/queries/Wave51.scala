@@ -231,15 +231,9 @@ object Wave51Queries {
       |FROM ca, ra""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q357_gk_gamma" -> (q357 _),
-    "q358_runs_test" -> (q358 _),
-    "q359_by_fdr" -> (q359 _),
-    "q360_cochran_q" -> (q360 _))
-
-  val oracles: Map[String, String] = Map(
-    "q357_gk_gamma" -> q357Sql,
-    "q358_runs_test" -> q358Sql,
-    "q359_by_fdr" -> q359Sql,
-    "q360_cochran_q" -> q360Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q357_gk_gamma", q357, q357Sql),
+    Query("q358_runs_test", q358, q358Sql),
+    Query("q359_by_fdr", q359, q359Sql),
+    Query("q360_cochran_q", q360, q360Sql))
 }

@@ -191,15 +191,9 @@ object Wave52Queries {
       |FROM agg""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q361_capture_recapture" -> (q361 _),
-    "q362_vocab_coverage" -> (q362 _),
-    "q363_simpson_diversity" -> (q363 _),
-    "q364_hash_collision_audit" -> (q364 _))
-
-  val oracles: Map[String, String] = Map(
-    "q361_capture_recapture" -> q361Sql,
-    "q362_vocab_coverage" -> q362Sql,
-    "q363_simpson_diversity" -> q363Sql,
-    "q364_hash_collision_audit" -> q364Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q361_capture_recapture", q361, q361Sql),
+    Query("q362_vocab_coverage", q362, q362Sql),
+    Query("q363_simpson_diversity", q363, q363Sql),
+    Query("q364_hash_collision_audit", q364, q364Sql))
 }

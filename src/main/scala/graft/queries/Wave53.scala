@@ -247,15 +247,9 @@ object Wave53Queries {
       |FROM r""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q365_token_bucket" -> (q365 _),
-    "q366_kruskal_wallis" -> (q366 _),
-    "q367_jonckheere" -> (q367 _),
-    "q368_partial_corr" -> (q368 _))
-
-  val oracles: Map[String, String] = Map(
-    "q365_token_bucket" -> q365Sql,
-    "q366_kruskal_wallis" -> q366Sql,
-    "q367_jonckheere" -> q367Sql,
-    "q368_partial_corr" -> q368Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q365_token_bucket", q365, q365Sql),
+    Query("q366_kruskal_wallis", q366, q366Sql),
+    Query("q367_jonckheere", q367, q367Sql),
+    Query("q368_partial_corr", q368, q368Sql))
 }

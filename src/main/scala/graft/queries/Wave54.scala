@@ -346,15 +346,9 @@ object Wave54Queries {
       |FROM v""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q369_winsorized_corr" -> (q369 _),
-    "q370_kendalls_w" -> (q370 _),
-    "q371_pages_l" -> (q371 _),
-    "q372_lins_ccc" -> (q372 _))
-
-  val oracles: Map[String, String] = Map(
-    "q369_winsorized_corr" -> q369Sql,
-    "q370_kendalls_w" -> q370Sql,
-    "q371_pages_l" -> q371Sql,
-    "q372_lins_ccc" -> q372Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q369_winsorized_corr", q369, q369Sql),
+    Query("q370_kendalls_w", q370, q370Sql),
+    Query("q371_pages_l", q371, q371Sql),
+    Query("q372_lins_ccc", q372, q372Sql))
 }

@@ -194,15 +194,9 @@ object Wave55Queries {
        |  AND l.l_shipdate < TIMESTAMP '1997-07-01'""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q373_local_supplier_rev" -> (q373 _),
-    "q374_shipping_priority" -> (q374 _),
-    "q375_trade_volume" -> (q375 _),
-    "q376_promo_share" -> (q376 _))
-
-  val oracles: Map[String, String] = Map(
-    "q373_local_supplier_rev" -> q373Sql,
-    "q374_shipping_priority" -> q374Sql,
-    "q375_trade_volume" -> q375Sql,
-    "q376_promo_share" -> q376Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q373_local_supplier_rev", q373, q373Sql),
+    Query("q374_shipping_priority", q374, q374Sql),
+    Query("q375_trade_volume", q375, q375Sql),
+    Query("q376_promo_share", q376, q376Sql))
 }

@@ -127,11 +127,7 @@ object Wave56Queries {
       |LIMIT 100""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q377_sole_supplier_wait" -> (q377 _),
-    "q378_large_qty_orders" -> (q378 _))
-
-  val oracles: Map[String, String] = Map(
-    "q377_sole_supplier_wait" -> q377Sql,
-    "q378_large_qty_orders" -> q378Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q377_sole_supplier_wait", q377, q377Sql),
+    Query("q378_large_qty_orders", q378, q378Sql))
 }

@@ -88,11 +88,7 @@ object Wave57Queries {
       |ORDER BY s.s_suppkey""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q379_cheapest_source" -> (q379 _),
-    "q380_excess_suppliers" -> (q380 _))
-
-  val oracles: Map[String, String] = Map(
-    "q379_cheapest_source" -> q379Sql,
-    "q380_excess_suppliers" -> q380Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q379_cheapest_source", q379, q379Sql),
+    Query("q380_excess_suppliers", q380, q380Sql))
 }

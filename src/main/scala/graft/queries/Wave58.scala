@@ -138,13 +138,8 @@ object Wave58Queries {
        |ORDER BY value_cents DESC, l_partkey""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q381_small_qty_revenue" -> (q381 _),
-    "q382_dormant_big_accounts" -> (q382 _),
-    "q383_top_value_parts" -> (q383 _))
-
-  val oracles: Map[String, String] = Map(
-    "q381_small_qty_revenue" -> q381Sql,
-    "q382_dormant_big_accounts" -> q382Sql,
-    "q383_top_value_parts" -> q383Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q381_small_qty_revenue", q381, q381Sql),
+    Query("q382_dormant_big_accounts", q382, q382Sql),
+    Query("q383_top_value_parts", q383, q383Sql))
 }

@@ -195,13 +195,8 @@ object Wave59Queries {
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q384_nation_volume" -> (q384 _),
-    "q385_market_share" -> (q385 _),
-    "q386_product_profit" -> (q386 _))
-
-  val oracles: Map[String, String] = Map(
-    "q384_nation_volume" -> q384Sql,
-    "q385_market_share" -> q385Sql,
-    "q386_product_profit" -> q386Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q384_nation_volume", q384, q384Sql),
+    Query("q385_market_share", q385, q385Sql),
+    Query("q386_product_profit", q386, q386Sql))
 }

@@ -568,37 +568,20 @@ object Wave6Queries {
       |    AS BIGINT)) OVER () AS DOUBLE) / 1000000.0e0, 6) AS psi_total
       |FROM c ORDER BY bucket""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q152_spearman" -> (q152 _),
-    "q153_ks_test" -> (q153 _),
-    "q154_jackknife" -> (q154 _),
-    "q155_mann_kendall" -> (q155 _),
-    "q156_holt" -> (q156 _),
-    "q157_cusum" -> (q157 _),
-    "q158_triangles" -> (q158 _),
-    "q159_kcore" -> (q159 _),
-    "q160_assortativity" -> (q160 _),
-    "q161_assoc_rules" -> (q161 _),
-    "q162_kaplan_meier" -> (q162 _),
-    "q163_welch_ttest" -> (q163 _),
-    "q164_seasonal" -> (q164 _),
-    "q165_loo_encode" -> (q165 _),
-    "q166_psi_drift" -> (q166 _))
-
-  val oracles: Map[String, String] = Map(
-    "q152_spearman" -> q152Sql,
-    "q153_ks_test" -> q153Sql,
-    "q154_jackknife" -> q154Sql,
-    "q155_mann_kendall" -> q155Sql,
-    "q156_holt" -> q156Sql,
-    "q157_cusum" -> q157Sql,
-    "q158_triangles" -> q158Sql,
-    "q159_kcore" -> q159Sql,
-    "q160_assortativity" -> q160Sql,
-    "q161_assoc_rules" -> q161Sql,
-    "q162_kaplan_meier" -> q162Sql,
-    "q163_welch_ttest" -> q163Sql,
-    "q164_seasonal" -> q164Sql,
-    "q165_loo_encode" -> q165Sql,
-    "q166_psi_drift" -> q166Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q152_spearman", q152, q152Sql),
+    Query("q153_ks_test", q153, q153Sql),
+    Query("q154_jackknife", q154, q154Sql),
+    Query("q155_mann_kendall", q155, q155Sql),
+    Query("q156_holt", q156, q156Sql),
+    Query("q157_cusum", q157, q157Sql),
+    Query("q158_triangles", q158, q158Sql),
+    Query("q159_kcore", q159, q159Sql),
+    Query("q160_assortativity", q160, q160Sql),
+    Query("q161_assoc_rules", q161, q161Sql),
+    Query("q162_kaplan_meier", q162, q162Sql),
+    Query("q163_welch_ttest", q163, q163Sql),
+    Query("q164_seasonal", q164, q164Sql),
+    Query("q165_loo_encode", q165, q165Sql),
+    Query("q166_psi_drift", q166, q166Sql))
 }

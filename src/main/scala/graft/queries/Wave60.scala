@@ -242,13 +242,8 @@ object Wave60Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q387_wl_refinement" -> (q387 _),
-    "q388_simpson_flips" -> (q388 _),
-    "q389_bloom_fpr" -> (q389 _))
-
-  val oracles: Map[String, String] = Map(
-    "q387_wl_refinement" -> q387Sql,
-    "q388_simpson_flips" -> q388Sql,
-    "q389_bloom_fpr" -> q389Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q387_wl_refinement", q387, q387Sql),
+    Query("q388_simpson_flips", q388, q388Sql),
+    Query("q389_bloom_fpr", q389, q389Sql))
 }

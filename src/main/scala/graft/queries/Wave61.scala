@@ -184,11 +184,7 @@ object Wave61Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q390_mutual_best_match" -> (q390 _),
-    "q391_percolation" -> (q391 _))
-
-  val oracles: Map[String, String] = Map(
-    "q390_mutual_best_match" -> q390Sql,
-    "q391_percolation" -> q391Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q390_mutual_best_match", q390, q390Sql),
+    Query("q391_percolation", q391, q391Sql))
 }

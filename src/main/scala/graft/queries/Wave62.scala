@@ -300,21 +300,12 @@ object Wave62Queries {
        |    AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q392_returned_items" -> (q392 _),
-    "q393_late_ship_priority" -> (q393 _),
-    "q394_priority_class_matrix" -> (q394 _),
-    "q395_order_count_distribution" -> (q395 _),
-    "q396_top_supplier" -> (q396 _),
-    "q397_supplier_cnt_census" -> (q397 _),
-    "q398_disjunct_revenue" -> (q398 _))
-
-  val oracles: Map[String, String] = Map(
-    "q392_returned_items" -> q392Sql,
-    "q393_late_ship_priority" -> q393Sql,
-    "q394_priority_class_matrix" -> q394Sql,
-    "q395_order_count_distribution" -> q395Sql,
-    "q396_top_supplier" -> q396Sql,
-    "q397_supplier_cnt_census" -> q397Sql,
-    "q398_disjunct_revenue" -> q398Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q392_returned_items", q392, q392Sql),
+    Query("q393_late_ship_priority", q393, q393Sql),
+    Query("q394_priority_class_matrix", q394, q394Sql),
+    Query("q395_order_count_distribution", q395, q395Sql),
+    Query("q396_top_supplier", q396, q396Sql),
+    Query("q397_supplier_cnt_census", q397, q397Sql),
+    Query("q398_disjunct_revenue", q398, q398Sql))
 }

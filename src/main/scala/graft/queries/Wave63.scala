@@ -167,13 +167,8 @@ object Wave63Queries {
       |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q399_naive_bayes" -> (q399 _),
-    "q400_ridge_regression" -> (q400 _),
-    "q401_rocchio_transfer" -> (q401 _))
-
-  val oracles: Map[String, String] = Map(
-    "q399_naive_bayes" -> q399Sql,
-    "q400_ridge_regression" -> q400Sql,
-    "q401_rocchio_transfer" -> q401Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q399_naive_bayes", q399, q399Sql),
+    Query("q400_ridge_regression", q400, q400Sql),
+    Query("q401_rocchio_transfer", q401, q401Sql))
 }

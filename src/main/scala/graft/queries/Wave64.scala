@@ -109,11 +109,7 @@ object Wave64Queries {
       |FROM agg""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q402_ngram_exposure" -> (q402 _),
-    "q403_semantic_decontamination" -> (q403 _))
-
-  val oracles: Map[String, String] = Map(
-    "q402_ngram_exposure" -> q402Sql,
-    "q403_semantic_decontamination" -> q403Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q402_ngram_exposure", q402, q402Sql),
+    Query("q403_semantic_decontamination", q403, q403Sql))
 }

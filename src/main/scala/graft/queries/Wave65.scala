@@ -118,11 +118,7 @@ object Wave65Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q404_tree_rollup" -> (q404 _),
-    "q405_ipf_raking" -> (q405 _))
-
-  val oracles: Map[String, String] = Map(
-    "q404_tree_rollup" -> q404Sql,
-    "q405_ipf_raking" -> q405Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q404_tree_rollup", q404, q404Sql),
+    Query("q405_ipf_raking", q405, q405Sql))
 }

@@ -119,11 +119,7 @@ object Wave66Queries {
       |FROM cand""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q406_offline_policy_eval" -> (q406 _),
-    "q407_sorted_neighborhood" -> (q407 _))
-
-  val oracles: Map[String, String] = Map(
-    "q406_offline_policy_eval" -> q406Sql,
-    "q407_sorted_neighborhood" -> q407Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q406_offline_policy_eval", q406, q406Sql),
+    Query("q407_sorted_neighborhood", q407, q407Sql))
 }

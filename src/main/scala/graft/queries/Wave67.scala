@@ -173,11 +173,7 @@ object Wave67Queries {
       |FROM w""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q408_doubly_robust_ope" -> (q408 _),
-    "q409_density_ratio_ess" -> (q409 _))
-
-  val oracles: Map[String, String] = Map(
-    "q408_doubly_robust_ope" -> q408Sql,
-    "q409_density_ratio_ess" -> q409Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q408_doubly_robust_ope", q408, q408Sql),
+    Query("q409_density_ratio_ess", q409, q409Sql))
 }

@@ -48,9 +48,6 @@ object Wave68Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q410_linear_cka" -> (q410 _))
-
-  val oracles: Map[String, String] = Map(
-    "q410_linear_cka" -> q410Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q410_linear_cka", q410, q410Sql))
 }

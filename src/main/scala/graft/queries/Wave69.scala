@@ -66,9 +66,6 @@ object Wave69Queries {
       |ORDER BY version""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q411_txlog_snapshot" -> (q411 _))
-
-  val oracles: Map[String, String] = Map(
-    "q411_txlog_snapshot" -> q411Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q411_txlog_snapshot", q411, q411Sql))
 }

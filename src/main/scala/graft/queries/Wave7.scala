@@ -373,25 +373,14 @@ object Wave7Queries {
       |FROM q LEFT JOIN ov USING (query_id)
       |ORDER BY query_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q167_anova" -> (q167 _),
-    "q168_wilson" -> (q168 _),
-    "q169_cramers_v" -> (q169 _),
-    "q170_mutual_info" -> (q170 _),
-    "q171_cohen_kappa" -> (q171 _),
-    "q172_adamic_adar" -> (q172 _),
-    "q173_changepoint" -> (q173 _),
-    "q174_cross_correlation" -> (q174 _),
-    "q175_truncation_recall" -> (q175 _))
-
-  val oracles: Map[String, String] = Map(
-    "q167_anova" -> q167Sql,
-    "q168_wilson" -> q168Sql,
-    "q169_cramers_v" -> q169Sql,
-    "q170_mutual_info" -> q170Sql,
-    "q171_cohen_kappa" -> q171Sql,
-    "q172_adamic_adar" -> q172Sql,
-    "q173_changepoint" -> q173Sql,
-    "q174_cross_correlation" -> q174Sql,
-    "q175_truncation_recall" -> q175Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q167_anova", q167, q167Sql),
+    Query("q168_wilson", q168, q168Sql),
+    Query("q169_cramers_v", q169, q169Sql),
+    Query("q170_mutual_info", q170, q170Sql),
+    Query("q171_cohen_kappa", q171, q171Sql),
+    Query("q172_adamic_adar", q172, q172Sql),
+    Query("q173_changepoint", q173, q173Sql),
+    Query("q174_cross_correlation", q174, q174Sql),
+    Query("q175_truncation_recall", q175, q175Sql))
 }

@@ -113,11 +113,7 @@ object Wave70Queries {
        |ORDER BY version""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q412_txlog_changes" -> (q412 _),
-    "q413_txlog_merge" -> (q413 _))
-
-  val oracles: Map[String, String] = Map(
-    "q412_txlog_changes" -> q412Sql,
-    "q413_txlog_merge" -> q413Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q412_txlog_changes", q412, q412Sql),
+    Query("q413_txlog_merge", q413, q413Sql))
 }

@@ -63,9 +63,6 @@ object Wave71Queries {
       |ORDER BY cls""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q414_compression_gate" -> (q414 _))
-
-  val oracles: Map[String, String] = Map(
-    "q414_compression_gate" -> q414Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q414_compression_gate", q414, q414Sql))
 }

@@ -92,11 +92,7 @@ object Wave72Queries {
        |FROM lineitem WHERE year(l_shipdate) = 1997""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q415_txlog_vacuum" -> (q415 _),
-    "q416_txlog_zonemap" -> (q416 _))
-
-  val oracles: Map[String, String] = Map(
-    "q415_txlog_vacuum" -> q415Sql,
-    "q416_txlog_zonemap" -> q416Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q415_txlog_vacuum", q415, q415Sql),
+    Query("q416_txlog_zonemap", q416, q416Sql))
 }

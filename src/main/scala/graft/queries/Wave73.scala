@@ -103,11 +103,7 @@ object Wave73Queries {
       |FROM embeddings""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q417_hdf5_export" -> (q417 _),
-    "q418_hdf5_matrix" -> (q418 _))
-
-  val oracles: Map[String, String] = Map(
-    "q417_hdf5_export" -> q417Sql,
-    "q418_hdf5_matrix" -> q418Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q417_hdf5_export", q417, q417Sql),
+    Query("q418_hdf5_matrix", q418, q418Sql))
 }

@@ -96,11 +96,7 @@ object Wave74Queries {
        |FROM lineitem WHERE year(l_shipdate) IN (1996, 1997, 1998)""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q419_txlog_range" -> (q419 _),
-    "q420_txlog_autocompact" -> (q420 _))
-
-  val oracles: Map[String, String] = Map(
-    "q419_txlog_range" -> q419Sql,
-    "q420_txlog_autocompact" -> q420Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q419_txlog_range", q419, q419Sql),
+    Query("q420_txlog_autocompact", q420, q420Sql))
 }

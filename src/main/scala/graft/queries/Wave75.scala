@@ -141,11 +141,7 @@ object Wave75Queries {
        |FROM lineitem WHERE year(l_shipdate) = 1997""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q421_stream_txlog_sink" -> (q421 _),
-    "q422_stream_txlog_zone" -> (q422 _))
-
-  val oracles: Map[String, String] = Map(
-    "q421_stream_txlog_sink" -> q421Sql,
-    "q422_stream_txlog_zone" -> q422Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q421_stream_txlog_sink", q421, q421Sql),
+    Query("q422_stream_txlog_zone", q422, q422Sql))
 }

@@ -109,11 +109,7 @@ object Wave76Queries {
       |ORDER BY version""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q423_txlog_evolution" -> (q423 _),
-    "q424_txlog_history" -> (q424 _))
-
-  val oracles: Map[String, String] = Map(
-    "q423_txlog_evolution" -> q423Sql,
-    "q424_txlog_history" -> q424Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q423_txlog_evolution", q423, q423Sql),
+    Query("q424_txlog_history", q424, q424Sql))
 }

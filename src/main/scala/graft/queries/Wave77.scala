@@ -125,11 +125,7 @@ object Wave77Queries {
        |FROM base""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q425_txlog_delete" -> (q425 _),
-    "q426_txlog_replace" -> (q426 _))
-
-  val oracles: Map[String, String] = Map(
-    "q425_txlog_delete" -> q425Sql,
-    "q426_txlog_replace" -> q426Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q425_txlog_delete", q425, q425Sql),
+    Query("q426_txlog_replace", q426, q426Sql))
 }

@@ -128,11 +128,7 @@ object Wave78Queries {
       |ORDER BY constraint_name""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q427_txlog_bloom" -> (q427 _),
-    "q428_txlog_constraints" -> (q428 _))
-
-  val oracles: Map[String, String] = Map(
-    "q427_txlog_bloom" -> q427Sql,
-    "q428_txlog_constraints" -> q428Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q427_txlog_bloom", q427, q427Sql),
+    Query("q428_txlog_constraints", q428, q428Sql))
 }

@@ -145,11 +145,7 @@ object Wave79Queries {
       |FROM per JOIN last USING (k, yr)""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q429_txlog_cluster" -> (q429 _),
-    "q430_stream_txlog_merge" -> (q430 _))
-
-  val oracles: Map[String, String] = Map(
-    "q429_txlog_cluster" -> q429Sql,
-    "q430_stream_txlog_merge" -> q430Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q429_txlog_cluster", q429, q429Sql),
+    Query("q430_stream_txlog_merge", q430, q430Sql))
 }

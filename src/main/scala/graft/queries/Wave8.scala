@@ -623,37 +623,20 @@ object Wave8Queries {
        |FROM dw JOIN enc USING (word) GROUP BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q176_cc_star" -> (q176 _),
-    "q177_stream_outer_join" -> (q177 _),
-    "q178_zipf" -> (q178 _),
-    "q179_incremental_neardup" -> (q179 _),
-    "q180_stream_sessions" -> (q180 _),
-    "q181_late_data" -> (q181 _),
-    "q182_pq_codebooks" -> (q182 _),
-    "q183_epoch_schedule" -> (q183 _),
-    "q184_hopping_window" -> (q184 _),
-    "q185_bucketed_join" -> (q185 _),
-    "q186_dpp_join" -> (q186 _),
-    "q187_bloom_join" -> (q187 _),
-    "q188_stream_hll" -> (q188 _),
-    "q189_group_kfold" -> (q189 _),
-    "q190_bpe_encode" -> (q190 _))
-
-  val oracles: Map[String, String] = Map(
-    "q176_cc_star" -> q176Sql,
-    "q177_stream_outer_join" -> q177Sql,
-    "q178_zipf" -> q178Sql,
-    "q179_incremental_neardup" -> q179Sql,
-    "q180_stream_sessions" -> q180Sql,
-    "q181_late_data" -> q181Sql,
-    "q182_pq_codebooks" -> q182Sql,
-    "q183_epoch_schedule" -> q183Sql,
-    "q184_hopping_window" -> q184Sql,
-    "q185_bucketed_join" -> q185Sql,
-    "q186_dpp_join" -> q186Sql,
-    "q187_bloom_join" -> q187Sql,
-    "q188_stream_hll" -> q188Sql,
-    "q189_group_kfold" -> q189Sql,
-    "q190_bpe_encode" -> q190Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q176_cc_star", q176, q176Sql),
+    Query("q177_stream_outer_join", q177, q177Sql),
+    Query("q178_zipf", q178, q178Sql),
+    Query("q179_incremental_neardup", q179, q179Sql),
+    Query("q180_stream_sessions", q180, q180Sql),
+    Query("q181_late_data", q181, q181Sql),
+    Query("q182_pq_codebooks", q182, q182Sql),
+    Query("q183_epoch_schedule", q183, q183Sql),
+    Query("q184_hopping_window", q184, q184Sql),
+    Query("q185_bucketed_join", q185, q185Sql),
+    Query("q186_dpp_join", q186, q186Sql),
+    Query("q187_bloom_join", q187, q187Sql),
+    Query("q188_stream_hll", q188, q188Sql),
+    Query("q189_group_kfold", q189, q189Sql),
+    Query("q190_bpe_encode", q190, q190Sql))
 }

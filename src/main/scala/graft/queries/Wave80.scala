@@ -160,13 +160,8 @@ object Wave80Queries {
        |ORDER BY col_name""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q431_layout_advisor" -> (q431 _),
-    "q432_txlog_clone" -> (q432 _),
-    "q433_txlog_analyze" -> (q433 _))
-
-  val oracles: Map[String, String] = Map(
-    "q431_layout_advisor" -> q431Sql,
-    "q432_txlog_clone" -> q432Sql,
-    "q433_txlog_analyze" -> q433Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q431_layout_advisor", q431, q431Sql),
+    Query("q432_txlog_clone", q432, q432Sql),
+    Query("q433_txlog_analyze", q433, q433Sql))
 }

@@ -137,11 +137,7 @@ object Wave81Queries {
        |    SELECT * FROM v3)) AS del_23""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q434_txlog_mv" -> (q434 _),
-    "q435_txlog_diff" -> (q435 _))
-
-  val oracles: Map[String, String] = Map(
-    "q434_txlog_mv" -> q434Sql,
-    "q435_txlog_diff" -> q435Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q434_txlog_mv", q434, q434Sql),
+    Query("q435_txlog_diff", q435, q435Sql))
 }

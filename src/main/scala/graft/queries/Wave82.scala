@@ -54,9 +54,6 @@ object Wave82Queries {
        |ORDER BY id_a, id_b""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q436_dup_pairs" -> (q436 _))
-
-  val oracles: Map[String, String] = Map(
-    "q436_dup_pairs" -> q436Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q436_dup_pairs", q436, q436Sql))
 }

@@ -191,13 +191,8 @@ object Wave83Queries {
        |FROM final""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q437_txlog_rebase" -> (q437 _),
-    "q438_txlog_pruned_del" -> (q438 _),
-    "q439_txlog_null_zone" -> (q439 _))
-
-  val oracles: Map[String, String] = Map(
-    "q437_txlog_rebase" -> q437Sql,
-    "q438_txlog_pruned_del" -> q438Sql,
-    "q439_txlog_null_zone" -> q439Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q437_txlog_rebase", q437, q437Sql),
+    Query("q438_txlog_pruned_del", q438, q438Sql),
+    Query("q439_txlog_null_zone", q439, q439Sql))
 }

@@ -149,13 +149,8 @@ object Wave84Queries {
       |ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q440_dsir_importance" -> (q440 _),
-    "q441_normalize_census" -> (q441 _),
-    "q442_oph_minhash" -> (q442 _))
-
-  val oracles: Map[String, String] = Map(
-    "q440_dsir_importance" -> q440Sql,
-    "q441_normalize_census" -> q441Sql,
-    "q442_oph_minhash" -> q442Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q440_dsir_importance", q440, q440Sql),
+    Query("q441_normalize_census", q441, q441Sql),
+    Query("q442_oph_minhash", q442, q442Sql))
 }

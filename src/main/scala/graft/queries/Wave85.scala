@@ -150,7 +150,7 @@ object Wave85Queries {
         "text", "doc_id", shingleSize = 3, k = 32, threshold = 0.8)
       .select(col("id_a"), col("id_b"), col("jaccard"))
       .orderBy("id_a", "id_b")
-  val q445Sql: String = ExtQueries.oracles("q13_minhash_neardup")
+  val q445Sql: String = ExtQueries.q13Sql
 
   // ---------------------------------------------------------------- q446
   /** Per-source DSIR mixture diagnostic: the corpus-wide importance
@@ -208,15 +208,9 @@ object Wave85Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q443_dsir_incremental" -> (q443 _),
-    "q444_oph_recall" -> (q444 _),
-    "q445_oph_neardup" -> (q445 _),
-    "q446_dsir_mixture" -> (q446 _))
-
-  val oracles: Map[String, String] = Map(
-    "q443_dsir_incremental" -> q443Sql,
-    "q444_oph_recall" -> q444Sql,
-    "q445_oph_neardup" -> q445Sql,
-    "q446_dsir_mixture" -> q446Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q443_dsir_incremental", q443, q443Sql),
+    Query("q444_oph_recall", q444, q444Sql),
+    Query("q445_oph_neardup", q445, q445Sql),
+    Query("q446_dsir_mixture", q446, q446Sql))
 }

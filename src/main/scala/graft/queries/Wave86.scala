@@ -177,13 +177,8 @@ object Wave86Queries {
       |ORDER BY hit_frac DESC, doc_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q447_txlog_restore" -> (q447 _),
-    "q448_proto_prune" -> (q448 _),
-    "q449_bloom_decon" -> (q449 _))
-
-  val oracles: Map[String, String] = Map(
-    "q447_txlog_restore" -> q447Sql,
-    "q448_proto_prune" -> q448Sql,
-    "q449_bloom_decon" -> q449Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q447_txlog_restore", q447, q447Sql),
+    Query("q448_proto_prune", q448, q448Sql),
+    Query("q449_bloom_decon", q449, q449Sql))
 }

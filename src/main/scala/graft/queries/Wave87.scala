@@ -184,11 +184,7 @@ object Wave87Queries {
       |   WHERE n_hit * 10 >= n_grams * 3) AS n_flagged""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q450_pq_adc" -> (q450 _),
-    "q451_bloom_incremental" -> (q451 _))
-
-  val oracles: Map[String, String] = Map(
-    "q450_pq_adc" -> q450Sql,
-    "q451_bloom_incremental" -> q451Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q450_pq_adc", q450, q450Sql),
+    Query("q451_bloom_incremental", q451, q451Sql))
 }

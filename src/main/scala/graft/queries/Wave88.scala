@@ -140,11 +140,7 @@ object Wave88Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q452_txlog_stream_out" -> (q452 _),
-    "q453_matryoshka_recall" -> (q453 _))
-
-  val oracles: Map[String, String] = Map(
-    "q452_txlog_stream_out" -> q452Sql,
-    "q453_matryoshka_recall" -> q453Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q452_txlog_stream_out", q452, q452Sql),
+    Query("q453_matryoshka_recall", q453, q453Sql))
 }

@@ -206,13 +206,8 @@ object Wave89Queries {
        |FROM y""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q454_txlog_wap" -> (q454 _),
-    "q455_txlog_orphans" -> (q455 _),
-    "q456_txlog_tags" -> (q456 _))
-
-  val oracles: Map[String, String] = Map(
-    "q454_txlog_wap" -> q454Sql,
-    "q455_txlog_orphans" -> q455Sql,
-    "q456_txlog_tags" -> q456Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q454_txlog_wap", q454, q454Sql),
+    Query("q455_txlog_orphans", q455, q455Sql),
+    Query("q456_txlog_tags", q456, q456Sql))
 }

@@ -273,19 +273,11 @@ object Wave9Queries {
       |FROM sd ORDER BY event_type""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q191_winnowing" -> (q191 _),
-    "q192_cdc_chunks" -> (q192 _),
-    "q193_stream_moments" -> (q193 _),
-    "q194_frontier_interleave" -> (q194 _),
-    "q195_quantile_normalize" -> (q195 _),
-    "q196_hill_tail" -> (q196 _))
-
-  val oracles: Map[String, String] = Map(
-    "q191_winnowing" -> q191Sql,
-    "q192_cdc_chunks" -> q192Sql,
-    "q193_stream_moments" -> q193Sql,
-    "q194_frontier_interleave" -> q194Sql,
-    "q195_quantile_normalize" -> q195Sql,
-    "q196_hill_tail" -> q196Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q191_winnowing", q191, q191Sql),
+    Query("q192_cdc_chunks", q192, q192Sql),
+    Query("q193_stream_moments", q193, q193Sql),
+    Query("q194_frontier_interleave", q194, q194Sql),
+    Query("q195_quantile_normalize", q195, q195Sql),
+    Query("q196_hill_tail", q196, q196Sql))
 }

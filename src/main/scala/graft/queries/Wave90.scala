@@ -150,13 +150,8 @@ object Wave90Queries {
        |GROUP BY p.n_name, mm.n_months ORDER BY p.n_name""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q457_gopher_rules" -> (q457 _),
-    "q458_edge_support" -> (q458 _),
-    "q459_theil_sen" -> (q459 _))
-
-  val oracles: Map[String, String] = Map(
-    "q457_gopher_rules" -> q457Sql,
-    "q458_edge_support" -> q458Sql,
-    "q459_theil_sen" -> q459Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q457_gopher_rules", q457, q457Sql),
+    Query("q458_edge_support", q458, q458Sql),
+    Query("q459_theil_sen", q459, q459Sql))
 }

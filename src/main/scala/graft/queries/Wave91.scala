@@ -135,13 +135,8 @@ object Wave91Queries {
       |FROM spec ORDER BY source""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q460_ktruss_peel" -> (q460 _),
-    "q461_pass_at_k" -> (q461 _),
-    "q462_vocab_richness" -> (q462 _))
-
-  val oracles: Map[String, String] = Map(
-    "q460_ktruss_peel" -> q460Sql,
-    "q461_pass_at_k" -> q461Sql,
-    "q462_vocab_richness" -> q462Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q460_ktruss_peel", q460, q460Sql),
+    Query("q461_pass_at_k", q461, q461Sql),
+    Query("q462_vocab_richness", q462, q462Sql))
 }

@@ -204,13 +204,8 @@ object Wave92Queries {
       |ORDER BY vec_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q463_fs_linkage" -> (q463 _),
-    "q464_hilbert_layout" -> (q464 _),
-    "q465_sensitivity_coreset" -> (q465 _))
-
-  val oracles: Map[String, String] = Map(
-    "q463_fs_linkage" -> q463Sql,
-    "q464_hilbert_layout" -> q464Sql,
-    "q465_sensitivity_coreset" -> q465Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q463_fs_linkage", q463, q463Sql),
+    Query("q464_hilbert_layout", q464, q464Sql),
+    Query("q465_sensitivity_coreset", q465, q465Sql))
 }

@@ -193,13 +193,8 @@ object Wave93Queries {
       |GROUP BY fp.doc_id ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q466_average_precision" -> (q466 _),
-    "q467_stream_wap" -> (q467 _),
-    "q468_soft_dedup" -> (q468 _))
-
-  val oracles: Map[String, String] = Map(
-    "q466_average_precision" -> q466Sql,
-    "q467_stream_wap" -> q467Sql,
-    "q468_soft_dedup" -> q468Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q466_average_precision", q466, q466Sql),
+    Query("q467_stream_wap", q467, q467Sql),
+    Query("q468_soft_dedup", q468, q468Sql))
 }

@@ -207,13 +207,8 @@ object Wave94Queries {
   }
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q469_zorder3" -> (q469 _),
-    "q470_code_switch" -> (q470 _),
-    "q471_rag_needle" -> (q471 _))
-
-  val oracles: Map[String, String] = Map(
-    "q469_zorder3" -> q469Sql,
-    "q470_code_switch" -> q470Sql,
-    "q471_rag_needle" -> q471Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q469_zorder3", q469, q469Sql),
+    Query("q470_code_switch", q470, q470Sql),
+    Query("q471_rag_needle", q471, q471Sql))
 }

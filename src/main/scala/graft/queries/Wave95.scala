@@ -217,13 +217,8 @@ object Wave95Queries {
       |FROM cells, tot ORDER BY cent_id""".stripMargin
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q472_bpe_sweep" -> (q472 _),
-    "q473_youden_threshold" -> (q473 _),
-    "q474_ivf_drift" -> (q474 _))
-
-  val oracles: Map[String, String] = Map(
-    "q472_bpe_sweep" -> q472Sql,
-    "q473_youden_threshold" -> q473Sql,
-    "q474_ivf_drift" -> q474Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q472_bpe_sweep", q472, q472Sql),
+    Query("q473_youden_threshold", q473, q473Sql),
+    Query("q474_ivf_drift", q474, q474Sql))
 }

@@ -1,19 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only: time the QS env-var query list at sf0.1 (or QS_DIR).
-  * REPS sets runs per query (default 2); QCONF takes extra session
-  * confs as "k=v;k=v" for config A/B tests (runtime SQLConfs only).
+/** Dev-only: time the QS env-var query list at sf0.1 (or QS_DIR) on the
+  * shared `graft.Sessions` config, each run written to the same noop sink
+  * as graft.Bench. REPS sets runs per query (default 2); QCONF takes
+  * extra session confs as "k=v;k=v" for config A/B tests (runtime
+  * SQLConfs only).
   */
 object DevQTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("QS_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.expr.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     sys.env.get("QCONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
@@ -28,11 +24,12 @@ object DevQTime {
     val reps = sys.env.getOrElse("REPS", "2").toInt
     for (name <- qs; rep <- 1 to reps) {
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       // match graft.Bench semantics: every timed run starts uncached
       spark.catalog.clearCache()
-      println(f"$name rep=$rep n=$n time=$dt%.2f s")
+      println(f"$name rep=$rep time=$dt%.2f s")
     }
     spark.stop()
   }

@@ -11,9 +11,12 @@ import scala.jdk.CollectionConverters._
   * ([[graft.streaming.StreamOps.runBounded]]) instead of carrying a
   * fixed instance count. Either regression costs tens of milliseconds
   * to seconds per call and changes no result, so only this check sees it.
+  * The same scan keeps every session on the one engine config
+  * ([[graft.Sessions]]), in the tests as well as the program.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
+  private val testRoot = Paths.get("src/test/scala")
 
   /** Reads that must keep Spark's inference, by file and enclosing
     * method: `mergeSchema` touches every file's footer, which is what
@@ -26,12 +29,14 @@ class SourceGuardSpec extends AnyFunSuite {
   /** The helper itself is the one place a schema-less read may live. */
   private val helper = "graft/io/Parquet.scala"
 
-  /** (file relative to src/main/scala, code with comments blanked). */
-  private lazy val sources: Seq[(String, String)] = {
-    val files = Files.walk(root).iterator().asScala
+  /** (file relative to `dir`, code with comments blanked). */
+  private def scan(dir: Path): Seq[(String, String)] = {
+    val files = Files.walk(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    files.map(p => root.relativize(p).toString -> code(p)).sortBy(_._1)
+    files.map(p => dir.relativize(p).toString -> code(p)).sortBy(_._1)
   }
+
+  private lazy val sources: Seq[(String, String)] = scan(root)
 
   /** Source text with comments replaced by spaces (offsets kept);
     * string literals are skipped, so a glob path opens no comment.
@@ -108,5 +113,16 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "size streaming state with StreamOps.runBounded: " +
         offenders.mkString(", "))
+  }
+
+  test("graft.Sessions is the only session builder in src/main and src/test") {
+    val builder = """\bSparkSession\s*\.\s*builder\b""".r
+    val scanned = sources.filterNot(_._1 == "graft/Sessions.scala") ++
+      scan(testRoot)
+    val offenders = scanned.collect {
+      case (f, src) if builder.findFirstIn(src).isDefined => f
+    }
+    assert(offenders.isEmpty,
+      "build sessions with graft.Sessions.builder: " + offenders.mkString(", "))
   }
 }

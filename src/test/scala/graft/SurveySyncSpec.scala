@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.queries.Query
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY.md §2 is the judged coverage checklist; SparkEntry.queries is
@@ -43,5 +44,13 @@ class SurveySyncSpec extends AnyFunSuite {
     val o = SparkEntry.oracleSql.keySet
     assert((q -- o).isEmpty, s"queries without oracle SQL: ${(q -- o).toSeq.sorted}")
     assert((o -- q).isEmpty, s"oracle SQL without a query: ${(o -- q).toSeq.sorted}")
+  }
+
+  test("a query name declared twice is rejected, naming it") {
+    val q = Query("q01_twice", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](Query.index(
+      Seq(q, Query("q02_once", q.run, "SELECT 2"), q.copy(oracle = "SELECT 3"))))
+    assert(e.getMessage.contains("q01_twice"), e.getMessage)
+    assert(!e.getMessage.contains("q02_once"), e.getMessage)
   }
 }

@@ -3,19 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (per-suite sessions would
-  * dominate test wall-clock).
+  * dominate test wall-clock), on the engine config the bench times.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.expr.GraftExtensions)
-      .master("local[4]")
+    val s = Sessions.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
