@@ -1,9 +1,9 @@
 package graft.io
 
-import graft.io.Hdf5Format.{H5Dataset, H5DatasetMeta, H5Float, H5Int}
+import graft.io.Hdf5Format.{H5DatasetMeta, H5Float, H5Int}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** HDF5 -> DataFrame -> Parquet (SURVEY §2.1 S11; the north-star's
@@ -31,34 +31,6 @@ object Hdf5Source {
       val t = if (d.dims.size <= 1) scalar else ArrayType(scalar, false)
       StructField(d.name, t, nullable = false)
     })
-
-  def schemaFor(dss: Seq[H5Dataset]): StructType =
-    schemaForMeta(dss.map(d =>
-      H5DatasetMeta(d.name, d.dtype, d.dims, Hdf5Format.Contiguous(0L))))
-
-  /** Decoded datasets -> row iterator over the shared leading dim
-    * (driver-side utility for small files/tests; the Spark read path is
-    * [[Hdf5DataSource]], which converts to InternalRow directly).
-    */
-  def toRows(dss: Seq[H5Dataset]): Iterator[Row] = {
-    if (dss.isEmpty) return Iterator.empty
-    val n = dss.head.rows.toInt
-    require(dss.forall(_.rows == n),
-      s"datasets disagree on leading dimension: ${dss.map(d => d.name -> d.rows)}")
-    (0 until n).iterator.map { i =>
-      Row.fromSeq(dss.map { d =>
-        (d.data, d.dims.size) match {
-          case (a: Array[Long], 1) => a(i)
-          case (a: Array[Double], 1) => a(i)
-          case (a: Array[Long], _) =>
-            val w = d.dims(1).toInt; a.slice(i * w, (i + 1) * w).toSeq
-          case (a: Array[Double], _) =>
-            val w = d.dims(1).toInt; a.slice(i * w, (i + 1) * w).toSeq
-          case other => throw new IllegalStateException(s"bad data $other")
-        }
-      })
-    }
-  }
 
   /** Read one or many HDF5 files into a DataFrame through the DSV2
     * connector. `select` prunes datasets — the pruning also reaches the

@@ -2,14 +2,18 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Minimal copy-on-write table log — the versioned-parquet sink a lake
   * deployment needs for append + time travel + compaction without an
   * external table format dependency (offline classpath: no Delta/
-  * Iceberg jars — see /root/repo/build.sbt).
+  * Iceberg jars — see build.sbt).
   *
   * Layout: `<table>/_log/v<NNNNN>.json` (one JSON per committed
   * version, listing the data SUBDIRECTORIES the snapshot reads) and
@@ -73,10 +77,11 @@ object TxLog {
       new HPath(table, sub.replace("data/", s"_log/${prefix}_") + ".json")
   }
 
-  private def logDir(table: String): HPath = new HPath(table, "_log")
-
-  private def entryPath(table: String, v: Int): HPath =
-    new HPath(logDir(table), f"v$v%05d.json")
+  /** The entries of directory `d`, empty when it does not exist. */
+  private def ls(table: String, d: HPath): Seq[FileStatus] = {
+    val f = fs(table)
+    if (f.exists(d)) f.listStatus(d).toSeq else Seq.empty
+  }
 
   private def readString(f: FileSystem, p: HPath): String = {
     val in = f.open(p)
@@ -90,91 +95,151 @@ object TxLog {
     finally out.close()
   }
 
-  /** Versions present in the log, ascending (empty for a fresh table). */
-  def versions(table: String): Seq[Int] = {
-    val f = fs(table)
-    val d = logDir(table)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq
+  /** Writer-unique token: two racers never share a temp file or an
+    * append's data directory name.
+    */
+  private def nonce(): String =
+    java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getName.hashCode.toHexString + "-" +
+      Thread.currentThread().getId.toHexString + "-" +
+      System.nanoTime().toHexString
+
+  /** One log entry: the data directories a snapshot reads and its
+    * equality-delete directories. Entries written before delete support
+    * carry no `"dels"` field and parse as having none — old tables stay
+    * readable unchanged.
+    */
+  private final case class Entry(dirs: Seq[String] = Seq.empty,
+      dels: Seq[String] = Seq.empty) {
+    def refs: Seq[String] = dirs ++ dels
+  }
+
+  private val json = new ObjectMapper()
+
+  /** A JSON string array; `\`, `"` and control characters are escaped,
+    * so a directory name containing a comma or a quote survives.
+    */
+  private def jsonArray(xs: Seq[String]): String =
+    xs.map(x => "\"" + new String(
+      JsonStringEncoder.getInstance.quoteAsString(x)) + "\"")
+      .mkString("[", ",", "]")
+
+  /** One version log: the main log `_log/` or a branch log
+    * `_log/branches/<name>/`. Both hold `vNNNNN.json` entries of the
+    * fixed shape `{"version":N,"dirs":[...],"dels":[...]}`, committed
+    * by the same three-guard write.
+    */
+  private final case class Log(table: String, dir: HPath, what: String) {
+    private def entryPath(v: Int): HPath = new HPath(dir, f"v$v%05d.json")
+
+    /** Versions present, ascending (empty for a fresh log). */
+    def versions: Seq[Int] = ls(table, dir)
       .map(_.getPath.getName)
       .filter(n => n.startsWith("v") && n.endsWith(".json"))
       .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
       .sorted
+
+    def read(v: Int): Entry = {
+      val root = json.readTree(readString(fs(table), entryPath(v)))
+      def strings(key: String): Option[Seq[String]] =
+        Option(root.get(key)).map(_.elements.asScala.map(_.asText).toSeq)
+      Entry(strings("dirs").getOrElse(
+          sys.error(s"malformed log entry ${what}v$v for $table")),
+        strings("dels").getOrElse(Seq.empty))
+    }
+
+    /** Commit the version-`v` entry, or throw
+      * [[ConcurrentCommitException]] if another writer got there first.
+      * Three guards, cheapest first: an existence check before the
+      * rename, the rename itself (HDFS and object stores refuse an
+      * existing destination), and a read-back compare after it (POSIX
+      * rename() REPLACES silently — the local-FS race a pre-check alone
+      * cannot close).
+      */
+    def write(v: Int, e: Entry): Unit = {
+      val f = fs(table)
+      f.mkdirs(dir)
+      // `dels` omitted when empty: entries for delete-free tables keep
+      // the exact pre-delete-support shape (byte-stable history)
+      val delsJson =
+        if (e.dels.isEmpty) "" else s""","dels":${jsonArray(e.dels)}"""
+      val txt = s"""{"version":$v,"dirs":${jsonArray(e.dirs)}$delsJson}"""
+      val target = entryPath(v)
+      val tmp = new HPath(dir, f".v$v%05d.${nonce()}.tmp")
+      writeString(f, tmp, txt)
+      def lose(stage: String): Nothing = {
+        f.delete(tmp, false)
+        throw new ConcurrentCommitException(
+          s"version v$v of $table was committed by another writer ($stage); " +
+            "re-read the current version and retry")
+      }
+      if (f.exists(target)) lose("pre-rename check")
+      if (!f.rename(tmp, target)) lose("rename refused")
+      if (readString(f, target) != txt) lose("read-back mismatch")
+    }
+
+    def delete(v: Int): Unit = fs(table).delete(entryPath(v), false)
   }
+
+  private def mainLog(table: String): Log =
+    Log(table, new HPath(table, "_log"), "")
+
+  private def branchLog(table: String, branch: String): Log =
+    Log(table, new HPath(table, s"_log/branches/$branch"), s"branch $branch ")
+
+  /** Versions present in the log, ascending (empty for a fresh table). */
+  def versions(table: String): Seq[Int] = mainLog(table).versions
 
   def currentVersion(table: String): Option[Int] = versions(table).lastOption
 
-  private def readEntry(table: String, v: Int): Seq[String] =
-    readEntryFull(table, v)._1
+  private def entry(table: String, v: Int): Entry = mainLog(table).read(v)
 
-  /** Full entry parse: (data directories, equality-delete directories).
-    * Entries written before delete support carry no `"dels"` field and
-    * parse as having none — old tables stay readable unchanged.
-    */
-  private def readEntryFull(table: String, v: Int): (Seq[String], Seq[String]) =
-    parseEntry(readString(fs(table), entryPath(table, v)), s"v$v for $table")
+  /** The current version of a table `op` needs to exist. */
+  private def headFor(table: String, op: String): Int =
+    currentVersion(table).getOrElse(sys.error(s"nothing to $op in $table"))
 
-  /** Entry parse shared by the main log and branch logs; the only
-    * writers are [[writeEntry]]/[[writeEntryTo]], so the shape
-    * `{"version":N,"dirs":[...],"dels":[...]}` is fixed.
-    */
-  private def parseEntry(txt: String,
-      what: String): (Seq[String], Seq[String]) = {
-    def list(key: String, required: Boolean): Seq[String] = {
-      val m = raw""""$key"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(txt)
-      if (m.isEmpty) {
-        if (required) sys.error(s"malformed log entry $what")
-        Seq.empty
-      } else m.get.group(1).split(",")
-        .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq
-    }
-    (list("dirs", required = true), list("dels", required = false))
-  }
+  /** `version`, or the current head when it is absent. */
+  private def versionOrHead(table: String, version: Option[Int]): Int =
+    version.orElse(currentVersion(table))
+      .getOrElse(sys.error(s"no committed version in $table"))
 
-  /** Commit the version-`v` entry, or throw [[ConcurrentCommitException]]
-    * if another writer got there first. Three guards, cheapest first:
-    * an existence check before the rename, the rename itself (HDFS and
-    * object stores refuse an existing destination), and a read-back
-    * compare after it (POSIX rename() REPLACES silently — the local-FS
-    * race a pre-check alone cannot close).
-    */
+  /** Commit a main-log entry (see [[Log.write]]). */
   private[io] def writeEntry(table: String, v: Int, dirs: Seq[String],
       dels: Seq[String] = Seq.empty): Unit =
-    writeEntryTo(table, logDir(table), entryPath(table, v), v, dirs, dels)
+    mainLog(table).write(v, Entry(dirs, dels))
 
-  /** [[writeEntry]] generalized over the log directory, so branch logs
-    * (`_log/branches/<name>/`) get the same three-guard atomic-rename
-    * commit protocol as the main log.
+  /** Commit `edit` of the log's head as the next version, RETRY-REBASED:
+    * on a lost race the edit is re-applied to the new head and the
+    * write retried; after `maxRetries` consecutive lost races the last
+    * [[ConcurrentCommitException]] propagates. The head is read only if
+    * `edit` uses it (empty for a fresh log). Returns the version that
+    * landed.
     */
-  private def writeEntryTo(table: String, logD: HPath, target: HPath,
-      v: Int, dirs: Seq[String], dels: Seq[String]): Unit = {
-    val f = fs(table)
-    f.mkdirs(logD)
-    // `dels` omitted when empty: entries for delete-free tables keep
-    // the exact pre-delete-support shape (byte-stable history)
-    val delsJson =
-      if (dels.isEmpty) ""
-      else dels.map("\"" + _ + "\"").mkString(""","dels":[""", ",", "]")
-    val json = dirs.map("\"" + _ + "\"")
-      .mkString(s"""{"version":$v,"dirs":[""", ",", s"]$delsJson}")
-    // writer-unique temp name: two racers must never share a tmp file
-    val nonce = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getName.hashCode.toHexString + "-" +
-      Thread.currentThread().getId.toHexString + "-" +
-      System.nanoTime().toHexString
-    val tmp = new HPath(logD, f".v$v%05d.$nonce.tmp")
-    writeString(f, tmp, json)
-    def lose(stage: String): Nothing = {
-      f.delete(tmp, false)
-      throw new ConcurrentCommitException(
-        s"version v$v of $table was committed by another writer ($stage); " +
-          "re-read the current version and retry")
+  private def rebase(log: Log, maxRetries: Int)(
+      edit: (=> Entry) => Entry): Int = {
+    var attempt = 0
+    while (true) {
+      val cur = log.versions.lastOption
+      val v = cur.getOrElse(0) + 1
+      lazy val head = cur.map(log.read).getOrElse(Entry())
+      val next = edit(head)
+      try {
+        log.write(v, next)
+        return v
+      } catch {
+        case e: ConcurrentCommitException =>
+          if (attempt >= maxRetries) throw e
+          attempt += 1
+      }
     }
-    if (f.exists(target)) lose("pre-rename check")
-    if (!f.rename(tmp, target)) lose("rename refused")
-    if (readString(f, target) != json) lose("read-back mismatch")
+    -1 // unreachable
   }
+
+  /** Write `df` as the immutable data directory `sub` of `table`. */
+  private def writeDir(df: DataFrame, table: String, sub: String,
+      targetFiles: Int): Unit =
+    df.repartition(targetFiles).write.mode("errorifexists")
+      .parquet(s"$table/$sub")
 
   /** Append `df` as a new commit; returns the new version number.
     * Throws [[ConcurrentCommitException]] on a lost race (the caller
@@ -182,15 +247,15 @@ object TxLog {
     */
   def commit(spark: SparkSession, table: String, df: DataFrame,
       targetFiles: Int = 4): Int = {
-    val v = currentVersion(table).getOrElse(0) + 1
+    val log = mainLog(table)
+    val cur = log.versions.lastOption
+    val v = cur.getOrElse(0) + 1
     val sub = f"data/c$v%05d"
-    df.repartition(targetFiles).write.mode("errorifexists")
-      .parquet(s"$table/$sub")
+    writeDir(df, table, sub, targetFiles)
     // carry BOTH lists: an append must not drop standing delete
     // vectors, or merge-on-read deleted rows would resurface
-    val (prevDirs, prevDels) = currentVersion(table)
-      .map(readEntryFull(table, _)).getOrElse((Seq.empty, Seq.empty))
-    writeEntry(table, v, prevDirs :+ sub, prevDels)
+    val prev = cur.map(log.read).getOrElse(Entry())
+    log.write(v, prev.copy(dirs = prev.dirs :+ sub))
     v
   }
 
@@ -209,38 +274,16 @@ object TxLog {
     */
   def append(spark: SparkSession, table: String, df: DataFrame,
       targetFiles: Int = 4, maxRetries: Int = 10): Int = {
-    val nonce = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getName.hashCode.toHexString + "-" +
-      Thread.currentThread().getId.toHexString + "-" +
-      System.nanoTime().toHexString
-    val sub = s"data/a$nonce"
-    df.repartition(targetFiles).write.mode("errorifexists")
-      .parquet(s"$table/$sub")
-    var attempt = 0
-    while (true) {
-      val cur = currentVersion(table)
-      val v = cur.getOrElse(0) + 1
-      val (prevDirs, prevDels) = cur.map(readEntryFull(table, _))
-        .getOrElse((Seq.empty[String], Seq.empty[String]))
-      try {
-        writeEntry(table, v, prevDirs :+ sub, prevDels)
-        return v
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
+    val sub = s"data/a${nonce()}"
+    writeDir(df, table, sub, targetFiles)
+    rebase(mainLog(table), maxRetries)(h => h.copy(dirs = h.dirs :+ sub))
   }
 
   /** Snapshot read — latest version, or time travel to `version`. */
   def read(spark: SparkSession, table: String,
       version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val dirs = readEntry(table, v).map(resolveDir(table, _))
-    Parquet.read(spark, dirs: _*)
+    val dirs = entry(table, versionOrHead(table, version)).dirs
+    Parquet.read(spark, dirs.map(resolveDir(table, _)): _*)
   }
 
   /** Snapshot read with schema merge across commits — the
@@ -252,10 +295,9 @@ object TxLog {
     */
   def readMerged(spark: SparkSession, table: String,
       version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val dirs = readEntry(table, v).map(resolveDir(table, _))
-    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    val dirs = entry(table, versionOrHead(table, version)).dirs
+    spark.read.option("mergeSchema", "true")
+      .parquet(dirs.map(resolveDir(table, _)): _*)
   }
 
   /** Merge-on-read DELETE (equality-delete vectors, the Iceberg
@@ -274,32 +316,37 @@ object TxLog {
   def deleteWhere(spark: SparkSession, table: String, cond: String,
       keys: Seq[String], targetFiles: Int = 1): Int = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion(table)
-      .getOrElse(sys.error(s"nothing to delete from in $table"))
+    val cur = headFor(table, "delete from")
     val v = cur + 1
     val sub = f"del/d$v%05d"
-    readResolved(spark, table, Some(cur))
-      .filter(cond).select(keys.map(col): _*).distinct()
-      .repartition(targetFiles)
-      .write.mode("errorifexists").parquet(s"$table/$sub")
-    val (dirs, dels) = readEntryFull(table, cur)
+    writeDir(readResolved(spark, table, Some(cur))
+      .filter(cond).select(keys.map(col): _*).distinct(),
+      table, sub, targetFiles)
+    val Entry(dirs, dels) = entry(table, cur)
     writeEntry(table, v, dirs, dels :+ sub)
     v
   }
 
-  /** Apply the version's standing delete vectors to `df` as broadcast
-    * anti joins. NULL-SAFE equality (`<=>`) on every key column — a
-    * plain equality anti join never matches a row whose key tuple
-    * contains a NULL, so such a row would be written into the vector
-    * and then silently never removed (the round-8 advice finding).
+  /** Rows of `l` with no match in `r` on `cols`, compared NULL-SAFELY
+    * (`<=>`): a plain equality anti join never matches a row whose key
+    * tuple contains a NULL, so a delete vector would silently never
+    * remove it, and a diff would report it as both insert and delete
+    * (the round-8 advice findings).
     */
-  private def applyDels(spark: SparkSession, table: String,
-      dels: Seq[String], df: DataFrame): DataFrame = {
+  private def antiJoin(l: DataFrame, r: DataFrame,
+      cols: Seq[String]): DataFrame =
+    l.join(r, cols.map(c => l(c) <=> r(c)).reduce(_ && _), "left_anti")
+
+  /** Read the entry's directories and apply its standing delete vectors
+    * as broadcast anti joins on each vector's own columns.
+    */
+  private def resolved(spark: SparkSession, table: String,
+      e: Entry): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    dels.foldLeft(df) { (d, sub) =>
+    val df = Parquet.read(spark, e.dirs.map(resolveDir(table, _)): _*)
+    e.dels.foldLeft(df) { (d, sub) =>
       val vec = Parquet.read(spark, resolveDir(table, sub))
-      val cond = vec.columns.map(c => d(c) <=> vec(c)).reduce(_ && _)
-      d.join(broadcast(vec), cond, "left_anti")
+      antiJoin(d, broadcast(vec), vec.columns)
     }
   }
 
@@ -311,22 +358,14 @@ object TxLog {
     * raw physical read (all rows ever committed, vectors ignored).
     */
   def readResolved(spark: SparkSession, table: String,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val (dirs, dels) = readEntryFull(table, v)
-    val base = Parquet.read(spark, dirs.map(resolveDir(table, _)): _*)
-    applyDels(spark, table, dels, base)
-  }
+      version: Option[Int] = None): DataFrame =
+    resolved(spark, table, entry(table, versionOrHead(table, version)))
 
   /** Number of delete-vector directories the version's snapshot carries
     * (0 once a compaction has folded them in).
     */
-  def deleteVectorCount(table: String, version: Option[Int] = None): Int = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
-    readEntryFull(table, v)._2.size
-  }
+  def deleteVectorCount(table: String, version: Option[Int] = None): Int =
+    entry(table, versionOrHead(table, version)).dels.size
 
   /** Commit history, newest last: one row per version with its
     * directory count, how many directories it ADDED vs the previous
@@ -342,8 +381,8 @@ object TxLog {
       (Seq.empty[(Int, Int, Int, Boolean, Int)],
         Set.empty[String], Set.empty[String])) {
       case ((acc, prev, prevDels), v) =>
-        val (dirsL, delsL) = readEntryFull(table, v)
-        val (dirs, dels) = (dirsL.toSet, delsL.toSet)
+        val e = entry(table, v)
+        val (dirs, dels) = (e.dirs.toSet, e.dels.toSet)
         val added = (dirs diff prev).size
         val rewrite = prev.nonEmpty && !prev.subsetOf(dirs)
         // delete vectors added by this version: a merge-on-read DELETE
@@ -369,40 +408,53 @@ object TxLog {
     */
   def vacuum(table: String, keepVersions: Int = 1): Int = {
     require(keepVersions >= 1)
-    val f = fs(table)
-    val vs = versions(table)
+    val log = mainLog(table)
+    val vs = log.versions
     if (vs.isEmpty) return 0
     // tagged versions are pinned: a tag is a retention promise, so its
     // entry and directories survive any keepVersions horizon; active
     // branches likewise pin every directory their log references
     val tagged = tags(table).values.toSet
     val kept = (vs.takeRight(keepVersions) ++ vs.filter(tagged)).distinct
-    val branchRefs = branches(table).flatMap { b =>
-      branchVersions(table, b).flatMap { bv =>
-        val (dirs, dels) = readBranchEntry(table, b, bv)
-        dirs ++ dels
-      }
-    }
-    val referenced = (kept.flatMap { v =>
-      val (dirs, dels) = readEntryFull(table, v)
-      dirs ++ dels
-    } ++ branchRefs).toSet
-    def unreferenced(root: String): Seq[HPath] = {
-      val r = new HPath(table, root)
-      if (!f.exists(r)) Seq.empty[HPath]
-      else f.listStatus(r).toSeq.map(_.getPath)
-        .filterNot(p => referenced.contains(s"$root/${p.getName}"))
-    }
-    val doomed = unreferenced("data") ++ unreferenced("del")
-    doomed.foreach { dir =>
-      f.delete(dir, true)
-      // the sidecars of a deleted directory must go with it, or orphan
-      // zone/bloom files accumulate forever
-      f.delete(zonePath(table, s"data/${dir.getName}"), false)
-      f.delete(bloomPath(table, s"data/${dir.getName}"), false)
-    }
-    vs.filterNot(kept.toSet).foreach(v => f.delete(entryPath(table, v), false))
+    val doomed = unreferenced(table, referenced(table, kept), Long.MaxValue)
+    doomed.foreach(dropDir(table, _))
+    vs.filterNot(kept.toSet).foreach(log.delete)
     doomed.size
+  }
+
+  /** Every directory named by the given main-log versions or by any
+    * version of any branch log.
+    */
+  private def referenced(table: String, mainVersions: Seq[Int]): Set[String] = {
+    val branchRefs = branches(table).flatMap { b =>
+      val log = branchLog(table, b)
+      log.versions.flatMap(log.read(_).refs)
+    }
+    (mainVersions.flatMap(entry(table, _).refs) ++ branchRefs).toSet
+  }
+
+  /** Directories under `data/` and `del/` that `refs` does not name and
+    * that were last modified at or before `cutoff`, sorted per root.
+    */
+  private def unreferenced(table: String, refs: Set[String],
+      cutoff: Long): Seq[String] =
+    Seq("data", "del").flatMap { root =>
+      ls(table, new HPath(table, root))
+        .filter(_.getModificationTime <= cutoff)
+        .map(st => s"$root/${st.getPath.getName}")
+        .filterNot(refs.contains)
+        .sorted
+    }
+
+  /** Delete a directory with its zone and bloom sidecars — the sidecars
+    * of a deleted directory must go with it, or orphan sidecar files
+    * accumulate forever.
+    */
+  private def dropDir(table: String, sub: String): Unit = {
+    val f = fs(table)
+    f.delete(new HPath(table, sub), true)
+    f.delete(zonePath(table, sub), false)
+    f.delete(bloomPath(table, sub), false)
   }
 
   /** Per-commit zone map: record the (min, max) of `zoneCol` for a
@@ -411,6 +463,25 @@ object TxLog {
     */
   private def zonePath(table: String, sub: String): HPath =
     sidecarPath(table, sub, "zone")
+
+  /** A directory's sidecar text, if it has one. */
+  private def sidecar(table: String, p: HPath): Option[String] = {
+    val f = fs(table)
+    if (f.exists(p)) Some(readString(f, p)) else None
+  }
+
+  /** A directory's zone envelope (min, max), if it has a sidecar. */
+  private def zone(table: String, sub: String): Option[(Long, Long)] =
+    sidecar(table, zonePath(table, sub)).map { txt =>
+      def g(k: String): Long =
+        raw""""$k":(-?\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
+      (g("min"), g("max"))
+    }
+
+  private def writeZone(table: String, sub: String, zoneCol: String,
+      min: Long, max: Long): Unit =
+    writeString(fs(table), zonePath(table, sub),
+      s"""{"col":"$zoneCol","min":$min,"max":$max}""")
 
   /** Append `df` as a new commit AND record the zone map of `zoneCol`
     * (a long column) for the new directory — the footer-statistics
@@ -436,8 +507,7 @@ object TxLog {
     val r = Parquet.read(spark, s"$table/$sub")
       .agg(smin(col(zoneCol)), smax(col(zoneCol))).head()
     if (!r.isNullAt(0) && !r.isNullAt(1))
-      writeString(fs(table), zonePath(table, sub),
-        s"""{"col":"$zoneCol","min":${r.getLong(0)},"max":${r.getLong(1)}}""")
+      writeZone(table, sub, zoneCol, r.getLong(0), r.getLong(1))
   }
 
   /** Zone-map-driven partial overwrite (the replaceWhere/dynamic-
@@ -459,19 +529,10 @@ object TxLog {
       targetFiles: Int = 4): (Int, Int, Int) = {
     import org.apache.spark.sql.functions.col
     require(lo <= hi, s"empty range [$lo, $hi]")
-    val f = fs(table)
-    val cur = currentVersion(table)
-      .getOrElse(sys.error(s"nothing to replace in $table"))
-    val (dirs, dels) = readEntryFull(table, cur)
-    val (carried, touched) = dirs.partition { sub =>
-      val zp = zonePath(table, sub)
-      f.exists(zp) && {
-        val txt = readString(f, zp)
-        def g(k: String): Long =
-          raw""""$k":(-?\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-        g("max") < lo || hi < g("min")
-      }
-    }
+    val cur = headFor(table, "replace")
+    val Entry(dirs, dels) = entry(table, cur)
+    val (carried, touched) = dirs.partition(sub =>
+      zone(table, sub).exists { case (mn, mx) => mx < lo || hi < mn })
     val v = cur + 1
     var newDirs = carried
     if (touched.nonEmpty) {
@@ -481,17 +542,15 @@ object TxLog {
       // NULL for them and the rewrite silently drops them (the round-8
       // advice finding — no-sidecar dirs are always classified touched,
       // so plain-commit data was exposed too)
-      Parquet.read(spark, touched.map(resolveDir(table, _)): _*)
+      writeDir(Parquet.read(spark, touched.map(resolveDir(table, _)): _*)
         .filter(col(zoneCol).isNull ||
-          col(zoneCol) < lo || col(zoneCol) > hi)
-        .repartition(targetFiles)
-        .write.mode("errorifexists").parquet(s"$table/$subRw")
+          col(zoneCol) < lo || col(zoneCol) > hi),
+        table, subRw, targetFiles)
       writeZone(spark, table, subRw, zoneCol)
       newDirs = newDirs :+ subRw
     }
     val subNew = f"data/c$v%05d_new"
-    df.repartition(targetFiles)
-      .write.mode("errorifexists").parquet(s"$table/$subNew")
+    writeDir(df, table, subNew, targetFiles)
     writeZone(spark, table, subNew, zoneCol)
     writeEntry(table, v, newDirs :+ subNew, dels)
     (v, carried.size, touched.size)
@@ -536,34 +595,16 @@ object TxLog {
     * resurface deleted rows. Returns (frame, dirsScanned, dirsTotal).
     */
   def readPrunedKey(spark: SparkSession, table: String, keyCol: String,
-      value: String): (DataFrame, Int, Int) = {
-    val f = fs(table)
-    val v = currentVersion(table)
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val (dirs, dels) = readEntryFull(table, v)
-    val kept = dirs.filter { sub =>
-      val bp = bloomPath(table, sub)
-      if (!f.exists(bp)) true
-      else {
-        val txt = readString(f, bp)
+      value: String): (DataFrame, Int, Int) =
+    readKept(spark, table)(sub =>
+      sidecar(table, bloomPath(table, sub)).forall { txt =>
         val b64 = raw""""bits":"([^"]*)"""".r.findFirstMatchIn(txt)
           .get.group(1)
         val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
           new java.io.ByteArrayInputStream(
             java.util.Base64.getDecoder.decode(b64)))
         bf.mightContainString(value)
-      }
-    }
-    if (kept.isEmpty) {
-      val schema =
-        Parquet.schema(spark, resolveDir(table, dirs.head))
-      (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-        0, dirs.size)
-    } else
-      (applyDels(spark, table, dels,
-        Parquet.read(spark, kept.map(resolveDir(table, _)): _*)),
-        kept.size, dirs.size)
-  }
+      })
 
   /** Snapshot read pruned by the commit zone maps: only directories
     * whose [min, max] envelope can contain `point` are scanned;
@@ -575,32 +616,9 @@ object TxLog {
     * Returns (frame, dirsScanned, dirsTotal).
     */
   def readPruned(spark: SparkSession, table: String, zoneCol: String,
-      point: Long): (DataFrame, Int, Int) = {
-    val f = fs(table)
-    val v = currentVersion(table)
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val (dirs, dels) = readEntryFull(table, v)
-    val kept = dirs.filter { sub =>
-      val zp = zonePath(table, sub)
-      if (!f.exists(zp)) true
-      else {
-        val txt = readString(f, zp)
-        def g(k: String): Long =
-          raw""""$k":(-?\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-        g("min") <= point && point <= g("max")
-      }
-    }
-    if (kept.isEmpty) {
-      // schema from one footer of the current snapshot — no data read
-      val schema =
-        Parquet.schema(spark, resolveDir(table, dirs.head))
-      (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-        0, dirs.size)
-    } else
-      (applyDels(spark, table, dels,
-        Parquet.read(spark, kept.map(resolveDir(table, _)): _*)),
-        kept.size, dirs.size)
-  }
+      point: Long): (DataFrame, Int, Int) =
+    readKept(spark, table)(sub => zone(table, sub)
+      .forall { case (mn, mx) => mn <= point && point <= mx })
 
   /** Snapshot read pruned to the commits whose zone envelope overlaps
     * [lo, hi] — the range twin of [[readPruned]] (same sidecar, same
@@ -611,29 +629,25 @@ object TxLog {
   def readPrunedRange(spark: SparkSession, table: String, zoneCol: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
     require(lo <= hi, s"empty range [$lo, $hi]")
-    val f = fs(table)
-    val v = currentVersion(table)
-      .getOrElse(sys.error(s"no committed version in $table"))
-    val (dirs, dels) = readEntryFull(table, v)
-    val kept = dirs.filter { sub =>
-      val zp = zonePath(table, sub)
-      if (!f.exists(zp)) true
-      else {
-        val txt = readString(f, zp)
-        def g(k: String): Long =
-          raw""""$k":(-?\d+)""".r.findFirstMatchIn(txt).get.group(1).toLong
-        g("min") <= hi && lo <= g("max")
-      }
-    }
-    if (kept.isEmpty) {
-      val schema =
-        Parquet.schema(spark, resolveDir(table, dirs.head))
-      (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
-        0, dirs.size)
-    } else
-      (applyDels(spark, table, dels,
-        Parquet.read(spark, kept.map(resolveDir(table, _)): _*)),
-        kept.size, dirs.size)
+    readKept(spark, table)(sub => zone(table, sub)
+      .forall { case (mn, mx) => mn <= hi && lo <= mx })
+  }
+
+  /** The pruned read: the head's directories that `keep` accepts, with
+    * the standing delete vectors applied; when nothing is kept, an
+    * empty frame with the table's schema (from one footer of the
+    * current snapshot — no data read). Returns (frame, dirsScanned,
+    * dirsTotal).
+    */
+  private def readKept(spark: SparkSession, table: String)(
+      keep: String => Boolean): (DataFrame, Int, Int) = {
+    val e = entry(table, versionOrHead(table, None))
+    val kept = e.dirs.filter(keep)
+    val df =
+      if (kept.nonEmpty) resolved(spark, table, e.copy(dirs = kept))
+      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        Parquet.schema(spark, resolveDir(table, e.dirs.head)))
+    (df, kept.size, e.dirs.size)
   }
 
   /** Policy-driven maintenance: compact ONLY when the current snapshot
@@ -645,9 +659,8 @@ object TxLog {
   def compactIfNeeded(spark: SparkSession, table: String, maxDirs: Int,
       targetFiles: Int = 4): (Int, Int, Boolean) = {
     require(maxDirs >= 1)
-    val cur = currentVersion(table)
-      .getOrElse(sys.error(s"nothing to compact in $table"))
-    val before = readEntry(table, cur).size
+    val cur = headFor(table, "compact")
+    val before = entry(table, cur).dirs.size
     if (before <= maxDirs) (before, before, false)
     else {
       compact(spark, table, targetFiles)
@@ -664,8 +677,8 @@ object TxLog {
     */
   def readChanges(spark: SparkSession, table: String, fromVersion: Int,
       toVersion: Int): DataFrame = {
-    val before = readEntry(table, fromVersion).toSet
-    val added = readEntry(table, toVersion).filterNot(before)
+    val before = entry(table, fromVersion).dirs.toSet
+    val added = entry(table, toVersion).dirs.filterNot(before)
     require(added.nonEmpty,
       s"no appended data between v$fromVersion and v$toVersion")
     Parquet.read(spark, added.map(resolveDir(table, _)): _*)
@@ -688,14 +701,8 @@ object TxLog {
     import org.apache.spark.sql.functions.lit
     val a = readResolved(spark, table, Some(fromVersion))
     val b = readResolved(spark, table, Some(toVersion))
-    val cols = a.columns.toSeq
-    // null-safe (<=>) anti joins: with plain equality a row containing
-    // any NULL never matches ITSELF, so it would be reported as both
-    // insert and delete on every diff call (round-8 advice finding)
-    def anti(l: DataFrame, r: DataFrame): DataFrame =
-      l.join(r, cols.map(c => l(c) <=> r(c)).reduce(_ && _), "left_anti")
-    anti(b, a).withColumn("change", lit("insert"))
-      .unionByName(anti(a, b).withColumn("change", lit("delete")))
+    antiJoin(b, a, a.columns).withColumn("change", lit("insert"))
+      .unionByName(antiJoin(a, b, a.columns).withColumn("change", lit("delete")))
   }
 
   /** Copy-on-write MERGE (upsert): rows of the current snapshot whose
@@ -705,17 +712,22 @@ object TxLog {
     * readable, data files stay immutable.
     */
   def merge(spark: SparkSession, table: String, updates: DataFrame,
-      keys: Seq[String], targetFiles: Int = 4): Int = {
-    val cur = currentVersion(table)
-      .getOrElse(sys.error(s"nothing to merge into in $table"))
+      keys: Seq[String], targetFiles: Int = 4): Int =
+    rewrite(spark, table, "merge into", targetFiles)(
+      _.join(updates, keys, "left_anti").unionByName(updates))
+
+  /** Rewrite `edit` of the head's RESOLVED snapshot (delete vectors
+    * applied) into one fresh directory and commit it as the whole new
+    * list — the rewrite folds the vectors in, so the new entry carries
+    * none.
+    */
+  private def rewrite(spark: SparkSession, table: String, op: String,
+      targetFiles: Int)(edit: DataFrame => DataFrame): Int = {
+    val cur = headFor(table, op)
     val v = cur + 1
     val sub = f"data/c$v%05d"
-    // merge operates on the RESOLVED view (delete vectors applied) and
-    // its rewrite folds them in — the new entry carries none
-    val kept = readResolved(spark, table, Some(cur))
-      .join(updates, keys, "left_anti")
-    kept.unionByName(updates).repartition(targetFiles)
-      .write.mode("errorifexists").parquet(s"$table/$sub")
+    writeDir(edit(readResolved(spark, table, Some(cur))), table, sub,
+      targetFiles)
     writeEntry(table, v, Seq(sub))
     v
   }
@@ -740,8 +752,7 @@ object TxLog {
       least, lit, sum}
     import org.apache.spark.sql.expressions.Window
     require(buckets >= 1)
-    val cur = currentVersion(table)
-      .getOrElse(sys.error(s"nothing to compact in $table"))
+    val cur = headFor(table, "compact")
     val v = cur + 1
     val snap = readResolved(spark, table, Some(cur))
     val total = snap.count()
@@ -782,8 +793,7 @@ object TxLog {
         val sub = f"data/c$v%05d_b$b%02d"
         f.rename(new HPath(tmp, n), new HPath(table, sub))
         zones.get(b).foreach { case (mn, mx) =>
-          writeString(f, zonePath(table, sub),
-            s"""{"col":"$zoneCol","min":$mn,"max":$mx}""")
+          writeZone(table, sub, zoneCol, mn, mx)
         }
         sub
       }
@@ -804,10 +814,9 @@ object TxLog {
     * table format).
     */
   def cloneTable(src: String, dst: String): Int = {
-    val cur = currentVersion(src)
-      .getOrElse(sys.error(s"nothing to clone in $src"))
+    val cur = headFor(src, "clone")
     require(currentVersion(dst).isEmpty, s"$dst already has a log")
-    val (dirs, dels) = readEntryFull(src, cur)
+    val Entry(dirs, dels) = entry(src, cur)
     writeEntry(dst, 1, dirs.map(resolveDir(src, _)),
       dels.map(resolveDir(src, _)))
     1
@@ -836,26 +845,14 @@ object TxLog {
     val vs = versions(table)
     require(vs.contains(toVersion),
       s"version $toVersion does not exist in $table (have ${vs.mkString(",")})")
-    val (dirs, dels) = readEntryFull(table, toVersion)
+    val target = entry(table, toVersion)
     val f = fs(table)
-    (dirs ++ dels).foreach { sub =>
+    target.refs.foreach { sub =>
       if (!f.exists(new HPath(resolveDir(table, sub))))
         throw new IllegalStateException(
           s"cannot restore $table to v$toVersion: $sub was vacuumed")
     }
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(table).getOrElse(0) + 1
-      try {
-        writeEntry(table, v, dirs, dels)
-        return v
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
+    rebase(mainLog(table), maxRetries)(_ => target)
   }
 
   /** ANALYZE: compute per-column statistics of the current RESOLVED
@@ -873,8 +870,7 @@ object TxLog {
     import org.apache.spark.sql.functions.{col, count_distinct, lit, max,
       min, sum, when}
     require(cols.nonEmpty)
-    val v = currentVersion(table)
-      .getOrElse(sys.error(s"no committed version in $table"))
+    val v = versionOrHead(table, None)
     val df = readResolved(spark, table, Some(v))
     val aggs = cols.flatMap(c => Seq(
       count_distinct(col(c)).as(s"ndv_$c"),
@@ -888,12 +884,15 @@ object TxLog {
       s"""{"col":"$c","ndv":${cell(b)},"nulls":${cell(b + 1)},""" +
         s""""min":${cell(b + 2)},"max":${cell(b + 3)}}"""
     }.mkString(s"""{"version":$v,"stats":[""", ",", "]}")
-    val p = new HPath(table, f"_log/stats_v$v%05d.json")
+    val p = statsPath(table, v)
     val f = fs(table)
     f.delete(p, false) // re-ANALYZE of the same version replaces
     writeString(f, p, json)
     readStats(spark, table, Some(v))
   }
+
+  private def statsPath(table: String, v: Int): HPath =
+    new HPath(table, f"_log/stats_v$v%05d.json")
 
   /** Serve the ANALYZE sidecar of a version (default: the newest
     * version that has one) as a frame — no data read.
@@ -904,9 +903,9 @@ object TxLog {
     val f = fs(table)
     val v = version.orElse(
       versions(table).reverse.find(v =>
-        f.exists(new HPath(table, f"_log/stats_v$v%05d.json"))))
+        f.exists(statsPath(table, v))))
       .getOrElse(sys.error(s"no ANALYZE sidecar in $table"))
-    val txt = readString(f, new HPath(table, f"_log/stats_v$v%05d.json"))
+    val txt = readString(f, statsPath(table, v))
     val one = raw"""\{"col":"([^"]+)","ndv":(null|-?\d+),"nulls":(null|-?\d+),"min":(null|-?\d+),"max":(null|-?\d+)\}""".r
     def opt(s: String): Option[Long] =
       if (s == "null") None else Some(s.toLong)
@@ -923,51 +922,19 @@ object TxLog {
     * readable.
     */
   def compact(spark: SparkSession, table: String,
-      targetFiles: Int = 4): Int = {
-    val cur = currentVersion(table)
-      .getOrElse(sys.error(s"nothing to compact in $table"))
-    val v = cur + 1
-    val sub = f"data/c$v%05d"
-    readResolved(spark, table, Some(cur)).repartition(targetFiles)
-      .write.mode("errorifexists").parquet(s"$table/$sub")
-    writeEntry(table, v, Seq(sub))
-    v
-  }
+      targetFiles: Int = 4): Int =
+    rewrite(spark, table, "compact", targetFiles)(identity)
 
   // ------------------------------------------------------------ branches
 
-  private def branchLogDir(table: String, branch: String): HPath =
-    new HPath(table, s"_log/branches/$branch")
-
-  private def branchEntryPath(table: String, branch: String,
-      v: Int): HPath =
-    new HPath(branchLogDir(table, branch), f"v$v%05d.json")
-
-  private def readBranchEntry(table: String, branch: String,
-      v: Int): (Seq[String], Seq[String]) =
-    parseEntry(readString(fs(table), branchEntryPath(table, branch, v)),
-      s"branch $branch v$v for $table")
-
   /** Branch names present under `_log/branches/`, sorted. */
-  def branches(table: String): Seq[String] = {
-    val f = fs(table)
-    val d = new HPath(table, "_log/branches")
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.filter(_.isDirectory)
+  def branches(table: String): Seq[String] =
+    ls(table, new HPath(table, "_log/branches")).filter(_.isDirectory)
       .map(_.getPath.getName).sorted
-  }
 
   /** Versions in a branch's log, ascending (empty if absent). */
-  def branchVersions(table: String, branch: String): Seq[Int] = {
-    val f = fs(table)
-    val d = branchLogDir(table, branch)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toInt)
-      .sorted
-  }
+  def branchVersions(table: String, branch: String): Seq[Int] =
+    branchLog(table, branch).versions
 
   /** Create `branch` at the table's current head (or empty for a fresh
     * table): branch v1 is a COPY of the head entry, so the branch sees
@@ -979,11 +946,8 @@ object TxLog {
   def branchCreate(table: String, branch: String): Int = {
     require(branchVersions(table, branch).isEmpty,
       s"branch $branch already exists in $table")
-    val (dirs, dels) = currentVersion(table)
-      .map(readEntryFull(table, _))
-      .getOrElse((Seq.empty[String], Seq.empty[String]))
-    writeEntryTo(table, branchLogDir(table, branch),
-      branchEntryPath(table, branch, 1), 1, dirs, dels)
+    branchLog(table, branch).write(1,
+      currentVersion(table).map(entry(table, _)).getOrElse(Entry()))
     1
   }
 
@@ -996,29 +960,10 @@ object TxLog {
       df: DataFrame, targetFiles: Int = 4, maxRetries: Int = 10): Int = {
     require(branchVersions(table, branch).nonEmpty,
       s"branch $branch does not exist in $table")
-    val nonce = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getName.hashCode.toHexString + "-" +
-      Thread.currentThread().getId.toHexString + "-" +
-      System.nanoTime().toHexString
-    val sub = s"data/b$nonce"
-    df.repartition(targetFiles).write.mode("errorifexists")
-      .parquet(s"$table/$sub")
-    var attempt = 0
-    while (true) {
-      val cur = branchVersions(table, branch).last
-      val (prevDirs, prevDels) = readBranchEntry(table, branch, cur)
-      try {
-        writeEntryTo(table, branchLogDir(table, branch),
-          branchEntryPath(table, branch, cur + 1), cur + 1,
-          prevDirs :+ sub, prevDels)
-        return cur + 1
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
+    val sub = s"data/b${nonce()}"
+    writeDir(df, table, sub, targetFiles)
+    rebase(branchLog(table, branch), maxRetries)(h =>
+      h.copy(dirs = h.dirs :+ sub))
   }
 
   /** Branch snapshot read with delete vectors applied — what an AUDIT
@@ -1026,11 +971,10 @@ object TxLog {
     */
   def branchRead(spark: SparkSession, table: String,
       branch: String): DataFrame = {
-    val vs = branchVersions(table, branch)
+    val log = branchLog(table, branch)
+    val vs = log.versions
     require(vs.nonEmpty, s"branch $branch does not exist in $table")
-    val (dirs, dels) = readBranchEntry(table, branch, vs.last)
-    applyDels(spark, table, dels,
-      Parquet.read(spark, dirs.map(resolveDir(table, _)): _*))
+    resolved(spark, table, log.read(vs.last))
   }
 
   /** Publish the branch onto main: the directories the branch ADDED
@@ -1043,32 +987,17 @@ object TxLog {
     * directories. Zero bytes move at publish time.
     */
   def publish(table: String, branch: String, maxRetries: Int = 10): Int = {
-    val bvs = branchVersions(table, branch)
+    val log = branchLog(table, branch)
+    val bvs = log.versions
     require(bvs.nonEmpty, s"branch $branch does not exist in $table")
-    val (baseDirs, baseDels) = readBranchEntry(table, branch, bvs.head)
-    val (headDirs, headDels) = readBranchEntry(table, branch, bvs.last)
-    if (headDels != baseDels)
+    val base = log.read(bvs.head)
+    val head = log.read(bvs.last)
+    if (head.dels != base.dels)
       throw new IllegalStateException(
         s"branch $branch of $table edited delete vectors; WAP publish " +
           "supports append-only branches")
-    val base = baseDirs.toSet
-    val newDirs = headDirs.filterNot(base)
-    var attempt = 0
-    while (true) {
-      val cur = currentVersion(table)
-      val v = cur.getOrElse(0) + 1
-      val (mDirs, mDels) = cur.map(readEntryFull(table, _))
-        .getOrElse((Seq.empty[String], Seq.empty[String]))
-      try {
-        writeEntry(table, v, mDirs ++ newDirs, mDels)
-        return v
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    -1 // unreachable
+    val newDirs = head.dirs.filterNot(base.dirs.toSet)
+    rebase(mainLog(table), maxRetries)(h => h.copy(dirs = h.dirs ++ newDirs))
   }
 
   /** Drop a branch's log (its unpublished data directories become
@@ -1076,8 +1005,9 @@ object TxLog {
     * versions removed.
     */
   def branchDelete(table: String, branch: String): Int = {
-    val n = branchVersions(table, branch).size
-    fs(table).delete(branchLogDir(table, branch), true)
+    val log = branchLog(table, branch)
+    val n = log.versions.size
+    fs(table).delete(log.dir, true)
     n
   }
 
@@ -1091,31 +1021,9 @@ object TxLog {
     * an IN-FLIGHT writer (data landed, entry not yet committed) is
     * never swept; production callers pass hours, tests pass 0.
     */
-  def findOrphans(table: String, graceMs: Long = 0L): Seq[String] = {
-    val f = fs(table)
-    val mainRefs = versions(table).flatMap { v =>
-      val (dirs, dels) = readEntryFull(table, v)
-      dirs ++ dels
-    }
-    val branchRefs = branches(table).flatMap { b =>
-      branchVersions(table, b).flatMap { bv =>
-        val (dirs, dels) = readBranchEntry(table, b, bv)
-        dirs ++ dels
-      }
-    }
-    val referenced = (mainRefs ++ branchRefs).toSet
-    val cutoff = System.currentTimeMillis() - graceMs
-    def scan(root: String): Seq[String] = {
-      val r = new HPath(table, root)
-      if (!f.exists(r)) Seq.empty
-      else f.listStatus(r).toSeq
-        .filter(_.getModificationTime <= cutoff)
-        .map(st => s"$root/${st.getPath.getName}")
-        .filterNot(referenced.contains)
-        .sorted
-    }
-    scan("data") ++ scan("del")
-  }
+  def findOrphans(table: String, graceMs: Long = 0L): Seq[String] =
+    unreferenced(table, referenced(table, versions(table)),
+      System.currentTimeMillis() - graceMs)
 
   /** Delete the orphans [[findOrphans]] lists (plus their sidecars).
     * Safe to run concurrently with readers and writers given a
@@ -1123,13 +1031,8 @@ object TxLog {
     * no snapshot. Returns the number of directories removed.
     */
   def vacuumOrphans(table: String, graceMs: Long = 0L): Int = {
-    val f = fs(table)
     val doomed = findOrphans(table, graceMs)
-    doomed.foreach { sub =>
-      f.delete(new HPath(table, sub), true)
-      f.delete(zonePath(table, sub), false)
-      f.delete(bloomPath(table, sub), false)
-    }
+    doomed.foreach(dropDir(table, _))
     doomed.size
   }
 
@@ -1146,8 +1049,7 @@ object TxLog {
     */
   def tagCreate(table: String, tag: String,
       version: Option[Int] = None): Int = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(sys.error(s"no committed version in $table"))
+    val v = versionOrHead(table, version)
     require(versions(table).contains(v),
       s"version $v does not exist in $table")
     val f = fs(table)
@@ -1158,19 +1060,15 @@ object TxLog {
   }
 
   /** All tags as name → version (empty for an untagged table). */
-  def tags(table: String): Map[String, Int] = {
-    val f = fs(table)
-    val d = new HPath(table, "_log/tags")
-    if (!f.exists(d)) Map.empty
-    else f.listStatus(d).toSeq.map(_.getPath)
+  def tags(table: String): Map[String, Int] =
+    ls(table, new HPath(table, "_log/tags")).map(_.getPath)
       .filter(_.getName.endsWith(".json"))
       .map { p =>
-        val txt = readString(f, p)
+        val txt = readString(fs(table), p)
         val v = raw""""version"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
           .getOrElse(sys.error(s"malformed tag file $p")).group(1).toInt
         (p.getName.stripSuffix(".json"), v)
       }.toMap
-  }
 
   def tagDelete(table: String, tag: String): Boolean =
     fs(table).delete(tagPath(table, tag), false)

@@ -58,13 +58,6 @@ final case class FieldsCatalog(entries: Seq[FieldEntry]) {
       .headOption.map(_._1)
   }
 
-  /** Resolve many columns, keeping only those with a dictionary hit —
-    * the reference's projection rule (`run_annotate.py:183-184`).
-    */
-  def resolveAll(cols: Seq[String], process: String = "*", file: String = "*")
-      : Seq[(String, FieldEntry)] =
-    cols.flatMap(c => resolve(c, process, file).map(c -> _))
-
   def ++(other: FieldsCatalog): FieldsCatalog =
     FieldsCatalog(entries ++ other.entries)
 }

@@ -750,11 +750,6 @@ object Dedup {
     shortPairs.unionByName(longPairs).dropDuplicates("id_a", "id_b")
   }
 
-  def simhashNearDups(df: DataFrame, textCol: String, idCol: String,
-                      maxHamming: Int = 3, bands: Int = 8): DataFrame =
-    hammingNearDups(simhash(df, textCol, idCol), "simhash", "id",
-      maxHamming, bands)
-
   /** Hamming-ball pair join over ANY 64-bit fingerprint frame
     * (`idCol`, `fpCol`) — the shared engine under text simhash and
     * perceptual image hashes: split the fingerprint into `bands` equal

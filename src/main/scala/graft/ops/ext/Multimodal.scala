@@ -181,13 +181,6 @@ object Multimodal {
     spark.createDataFrame(rdd, FeatureSchema)
   }
 
-  /** Round-1 name kept for compatibility; decode is now real for
-    * image/WAV and byte-stat for the rest.
-    */
-  @deprecated("use decodeFeatures", "round 2")
-  def stubDecodeFeatures(df: DataFrame, dim: Int = 8): DataFrame =
-    decodeFeatures(df, dim)
-
   /** 64-bit difference hash (dHash) of a decoded image: box-average
     * the gray channel onto a 9×8 grid, set bit (row·8+col) when the
     * left cell's mean exceeds its right neighbour's. All-integer:

@@ -51,6 +51,65 @@ object CoreQueries {
   private val fixDirCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Delete a derived tree (a TxLog fixture table is rebuilt from
+    * scratch on every run, so stale state never leaks in).
+    */
+  def rmTree(table: String): Unit = {
+    val root = Paths.get(table)
+    if (Files.exists(root)) {
+      val it = Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .iterator()
+      while (it.hasNext) Files.delete(it.next())
+    }
+  }
+
+  /** One ship year of lineitem as (l_orderkey, yr, cents) — the unit the
+    * TxLog queries commit.
+    */
+  def yearSlice(s: SparkSession, dir: String, yr: Int): DataFrame =
+    T(s, dir, "lineitem")
+      .filter(year(col("l_shipdate")) === yr)
+      .select(col("l_orderkey"),
+        year(col("l_shipdate")).cast("long").as("yr"),
+        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+          * 100.0 + 0.5).cast("long").as("cents"))
+
+  /** DuckDB twin of [[yearSlice]]'s `cents` column. */
+  final val centsSql =
+    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
+
+  /** Three single-file year slices with ascending mtimes in the fixture
+    * directory `name` — with maxFilesPerTrigger=1 the file source turns
+    * them into exactly three micro-batches in year order (the q181
+    * replay discipline). Each stream names its own directory, so two
+    * streams never share a source listing.
+    */
+  def streamFixture(s: SparkSession, dir: String, name: String): String = {
+    val tmp = s"${fixDir(dir)}/$name"
+    val ready = Paths.get(s"$tmp/READY")
+    if (!Files.exists(ready)) {
+      Files.createDirectories(Paths.get(tmp))
+      val t0 = System.currentTimeMillis() - 60000
+      Seq(1996, 1997, 1998).zipWithIndex.foreach { case (yr, i) =>
+        val stage = s"$tmp/__stage_$yr"
+        // coalesce(1) is FIXTURE STAGING ONLY (one streaming-source file
+        // per micro-batch at gate scale) — never copy into a data path
+        yearSlice(s, dir, yr).coalesce(1)
+          .write.mode("overwrite").parquet(stage)
+        val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
+          .filter(_.endsWith(".parquet")).head
+        val dst = Paths.get(s"$tmp/b$i" + s"_$yr.parquet")
+        Files.move(Paths.get(part), dst,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(t0 + i * 10000))
+      }
+      Files.createFile(ready)
+    }
+    tmp
+  }
+
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
   def writeFile(path: java.nio.file.Path, content: String): Unit = {

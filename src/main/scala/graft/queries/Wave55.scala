@@ -11,13 +11,11 @@ import org.apache.spark.sql.functions._
   * integer; dims broadcast (AQE), facts shuffle once per join key.
   */
 object Wave55Queries {
-  import CoreQueries.T
+  import CoreQueries.{T, centsSql}
 
   private val rev =
     floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       * 100.0 + 0.5).cast("long")
-  private val revSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
 
   // ---------------------------------------------------------------- q373
   /** Local-supplier revenue per nation (the TPC-H Q5 shape): ASIA
@@ -56,7 +54,7 @@ object Wave55Queries {
   val q373Sql: String =
     s"""SELECT n.n_name,
        |  CAST(count(*) AS BIGINT) AS n_lines,
-       |  round(CAST(sum($revSql) AS DOUBLE) / 100.0e0, 6) AS revenue
+       |  round(CAST(sum($centsSql) AS DOUBLE) / 100.0e0, 6) AS revenue
        |FROM lineitem l
        |JOIN orders o ON l.l_orderkey = o.o_orderkey
        |JOIN customer c ON o.o_custkey = c.c_custkey
@@ -68,7 +66,7 @@ object Wave55Queries {
        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
        |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
        |GROUP BY n.n_name
-       |ORDER BY sum($revSql) DESC, n.n_name""".stripMargin
+       |ORDER BY sum($centsSql) DESC, n.n_name""".stripMargin
 
   // ---------------------------------------------------------------- q374
   /** Shipping priority (the TPC-H Q3 shape): BUILDING-segment orders
@@ -102,7 +100,7 @@ object Wave55Queries {
     s"""SELECT o.o_orderkey,
        |  CAST(CAST(o.o_orderdate AS DATE) AS VARCHAR) AS o_orderdate,
        |  o.o_orderpriority,
-       |  round(CAST(sum($revSql) AS DOUBLE) / 100.0e0, 6) AS revenue
+       |  round(CAST(sum($centsSql) AS DOUBLE) / 100.0e0, 6) AS revenue
        |FROM lineitem l
        |JOIN orders o ON l.l_orderkey = o.o_orderkey
        |JOIN customer c ON o.o_custkey = c.c_custkey
@@ -110,7 +108,7 @@ object Wave55Queries {
        |  AND o.o_orderdate < TIMESTAMP '1998-01-01'
        |  AND l.l_shipdate > TIMESTAMP '1998-01-01'
        |GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
-       |ORDER BY sum($revSql) DESC, o.o_orderkey LIMIT 10""".stripMargin
+       |ORDER BY sum($centsSql) DESC, o.o_orderkey LIMIT 10""".stripMargin
 
   // ---------------------------------------------------------------- q375
   /** Bilateral trade volume (the TPC-H Q7 shape): revenue shipped
@@ -146,7 +144,7 @@ object Wave55Queries {
        |  CAST(c.c_nationkey AS BIGINT) AS cust_nation,
        |  CAST(year(l.l_shipdate) AS BIGINT) AS ship_year,
        |  CAST(count(*) AS BIGINT) AS n_lines,
-       |  round(CAST(sum($revSql) AS DOUBLE) / 100.0e0, 6) AS volume
+       |  round(CAST(sum($centsSql) AS DOUBLE) / 100.0e0, 6) AS volume
        |FROM lineitem l
        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
        |JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -182,13 +180,13 @@ object Wave55Queries {
   }
   val q376Sql: String =
     s"""SELECT CAST(count(*) AS BIGINT) AS n_lines,
-       |  round(CAST(sum($revSql) AS DOUBLE) / 100.0e0, 6)
+       |  round(CAST(sum($centsSql) AS DOUBLE) / 100.0e0, 6)
        |    AS total_revenue,
-       |  round(CAST(sum(CASE WHEN p.p_type = 'PROMO' THEN $revSql
+       |  round(CAST(sum(CASE WHEN p.p_type = 'PROMO' THEN $centsSql
        |    ELSE 0 END) AS DOUBLE) / 100.0e0, 6) AS promo_revenue,
        |  round(100.0e0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
-       |      THEN $revSql ELSE 0 END) AS DOUBLE)
-       |    / CAST(sum($revSql) AS DOUBLE), 6) AS promo_share_pct
+       |      THEN $centsSql ELSE 0 END) AS DOUBLE)
+       |    / CAST(sum($centsSql) AS DOUBLE), 6) AS promo_share_pct
        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
        |WHERE l.l_shipdate >= TIMESTAMP '1997-06-01'
        |  AND l.l_shipdate < TIMESTAMP '1997-07-01'""".stripMargin

@@ -16,13 +16,11 @@ import org.apache.spark.sql.functions._
   * type-sensitive).
   */
 object Wave59Queries {
-  import CoreQueries.T
+  import CoreQueries.{T, centsSql}
 
   private def revCents(ep: org.apache.spark.sql.Column,
       disc: org.apache.spark.sql.Column) =
     floor(ep * (lit(1.0) - disc) * 100.0 + 0.5).cast("long")
-  private val revCentsSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
 
   // ---------------------------------------------------------------- q384
   /** Nation-pair shipping volume (the TPC-H Q7 shape): revenue shipped
@@ -64,7 +62,7 @@ object Wave59Queries {
     s"""SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
        |  CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
        |  CAST(count(*) AS BIGINT) AS n_lines,
-       |  CAST(sum($revCentsSql) AS BIGINT) AS revenue_cents
+       |  CAST(sum($centsSql) AS BIGINT) AS revenue_cents
        |FROM lineitem l
        |JOIN supplier s ON s.s_suppkey = l.l_suppkey
        |JOIN nation ns ON ns.n_nationkey = s.s_nationkey
@@ -126,7 +124,7 @@ object Wave59Queries {
   val q385Sql: String =
     s"""WITH f AS (
        |  SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-       |    n.n_name, $revCentsSql AS r
+       |    n.n_name, $centsSql AS r
        |  FROM lineitem l
        |  JOIN part p ON p.p_partkey = l.l_partkey AND p.p_type = 'PROMO'
        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
@@ -183,7 +181,7 @@ object Wave59Queries {
     s"""SELECT n.n_name AS supp_nation,
        |  CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
        |  CAST(count(*) AS BIGINT) AS n_lines,
-       |  CAST(sum($revCentsSql
+       |  CAST(sum($centsSql
        |    - CAST(floor(p.p_retailprice * 100.0e0 + 0.5e0) AS BIGINT)
        |      * CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS profit_cents
        |FROM lineitem l

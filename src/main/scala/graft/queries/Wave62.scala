@@ -17,13 +17,11 @@ import org.apache.spark.sql.functions._
   * exact-integer; counts are BIGINT on both engines.
   */
 object Wave62Queries {
-  import CoreQueries.T
+  import CoreQueries.{T, centsSql}
 
   private def revCents(ep: org.apache.spark.sql.Column,
       disc: org.apache.spark.sql.Column) =
     floor(ep * (lit(1.0) - disc) * 100.0 + 0.5).cast("long")
-  private val revCentsSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
 
   // ---------------------------------------------------------------- q392
   /** Returned-item reporting (the TPC-H Q10 shape): the 20 customers
@@ -61,7 +59,7 @@ object Wave62Queries {
   val q392Sql: String =
     s"""SELECT c.c_custkey, c.c_name, n.n_name,
        |  CAST(count(*) AS BIGINT) AS n_lines,
-       |  CAST(sum($revCentsSql) AS BIGINT) AS returned_cents
+       |  CAST(sum($centsSql) AS BIGINT) AS returned_cents
        |FROM lineitem l
        |JOIN orders o ON o.o_orderkey = l.l_orderkey
        |  AND year(o.o_orderdate) = 1996
@@ -203,7 +201,7 @@ object Wave62Queries {
   }
   val q396Sql: String =
     s"""WITH rev AS (
-       |  SELECT l_suppkey, CAST(sum($revCentsSql) AS BIGINT) AS total_cents
+       |  SELECT l_suppkey, CAST(sum($centsSql) AS BIGINT) AS total_cents
        |  FROM lineitem l
        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
        |    AND l_shipdate < TIMESTAMP '1997-04-01'
@@ -290,7 +288,7 @@ object Wave62Queries {
   }
   val q398Sql: String =
     s"""SELECT CAST(count(*) AS BIGINT) AS n_lines,
-       |  CAST(sum($revCentsSql) AS BIGINT) AS revenue_cents
+       |  CAST(sum($centsSql) AS BIGINT) AS revenue_cents
        |FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
        |WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
        |    AND l.l_quantity BETWEEN 1 AND 11)

@@ -13,20 +13,14 @@ import org.apache.spark.sql.functions._
   * readable (time travel) after both.
   */
 object Wave69Queries {
-  import CoreQueries.T
+  import CoreQueries.{T, rmTree}
 
   // ---------------------------------------------------------------- q411
   def q411(s: SparkSession, dir: String): DataFrame = {
     val table = CoreQueries.fixDir(dir) + "/txlog_demo"
     // rebuild from scratch every run — the query is the table's whole
     // deterministic lifecycle, so stale state must never leak in
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
+    rmTree(table)
     def slice(year: Int): DataFrame = T(s, dir, "lineitem")
       .filter(org.apache.spark.sql.functions.year(col("l_shipdate")) === year)
       .select(col("l_orderkey"), col("l_linenumber"),

@@ -11,17 +11,7 @@ import org.apache.spark.sql.functions._
   * [[graft.io.TxLog]] a complete minimal lake sink.
   */
 object Wave70Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
+  import CoreQueries.{T, centsSql, rmTree}
 
   private def slice(s: SparkSession, dir: String, yr: Int): DataFrame =
     T(s, dir, "lineitem")
@@ -30,9 +20,6 @@ object Wave70Queries {
         dayofmonth(col("l_shipdate")).as("dom"),
         floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
           * 100.0 + 0.5).cast("long").as("cents"))
-
-  private val centsSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
 
   // ---------------------------------------------------------------- q412
   /** Incremental change reads: three append commits (1996, 1997,

@@ -13,25 +13,7 @@ import org.apache.spark.sql.functions._
   * vacuum, data skipping.
   */
 object Wave72Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
-
-  private def yearSlice(s: SparkSession, dir: String, yr: Int): DataFrame =
-    T(s, dir, "lineitem")
-      .filter(year(col("l_shipdate")) === yr)
-      .select(col("l_orderkey"),
-        year(col("l_shipdate")).cast("long").as("yr"),
-        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100.0 + 0.5).cast("long").as("cents"))
+  import CoreQueries.{T, centsSql, rmTree, yearSlice}
 
   // ---------------------------------------------------------------- q415
   /** VACUUM census: append 1996 + 1997, compact, vacuum(keep=1). The
@@ -54,8 +36,6 @@ object Wave72Queries {
         lit(vs.last.toLong).as("current_version"),
         col("n_rows"), col("total_cents"))
   }
-  private val centsSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
   val q415Sql: String =
     s"""SELECT CAST(2 AS BIGINT) AS dirs_removed,
        |  CAST(1 AS BIGINT) AS versions_kept,

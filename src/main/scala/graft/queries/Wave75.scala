@@ -13,57 +13,7 @@ import org.apache.spark.sql.functions._
   * committed history.
   */
 object Wave75Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
-
-  private def yearSlice(s: SparkSession, dir: String, yr: Int): DataFrame =
-    T(s, dir, "lineitem")
-      .filter(year(col("l_shipdate")) === yr)
-      .select(col("l_orderkey"),
-        year(col("l_shipdate")).cast("long").as("yr"),
-        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100.0 + 0.5).cast("long").as("cents"))
-
-  /** Three single-file year slices with ascending mtimes — with
-    * maxFilesPerTrigger=1 the file source turns them into exactly
-    * three micro-batches in year order (the q181 replay discipline).
-    */
-  private def streamFixture(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = s"${CoreQueries.fixDir(dir)}/q421_stream_src"
-    val ready = Paths.get(s"$tmp/READY")
-    if (!Files.exists(ready)) {
-      Files.createDirectories(Paths.get(tmp))
-      val t0 = System.currentTimeMillis() - 60000
-      Seq(1996, 1997, 1998).zipWithIndex.foreach { case (yr, i) =>
-        val stage = s"$tmp/__stage_$yr"
-        // coalesce(1) is FIXTURE STAGING ONLY (one streaming-source file
-        // per micro-batch at gate scale) — never copy into a data path
-        yearSlice(s, dir, yr).coalesce(1)
-          .write.mode("overwrite").parquet(stage)
-        val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val dst = Paths.get(s"$tmp/b$i" + s"_$yr.parquet")
-        Files.move(Paths.get(part), dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + i * 10000))
-      }
-      Files.createFile(ready)
-    }
-    tmp
-  }
-
-  private val centsSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
+  import CoreQueries.{T, centsSql, rmTree, streamFixture}
 
   // ---------------------------------------------------------------- q421
   /** Streaming commit-per-batch sink: three micro-batches (year slices
@@ -74,7 +24,7 @@ object Wave75Queries {
     * micro-batch per version step.
     */
   def q421(s: SparkSession, dir: String): DataFrame = {
-    val src = streamFixture(s, dir)
+    val src = streamFixture(s, dir, "q421_stream_src")
     val table = CoreQueries.fixDir(dir) + "/txlog_stream"
     rmTree(table)
     val schema = graft.io.Parquet.schema(s, s"$src/b0_1996.parquet")
@@ -114,7 +64,7 @@ object Wave75Queries {
     * micro-batch's files, not the whole accumulated stream.
     */
   def q422(s: SparkSession, dir: String): DataFrame = {
-    val src = streamFixture(s, dir)
+    val src = streamFixture(s, dir, "q421_stream_src")
     val table = CoreQueries.fixDir(dir) + "/txlog_stream_zone"
     rmTree(table)
     val schema = graft.io.Parquet.schema(s, s"$src/b0_1996.parquet")

@@ -11,28 +11,7 @@ import org.apache.spark.sql.functions._
   * reference, zero bytes copied).
   */
 object Wave77Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
-
-  private def yearSlice(s: SparkSession, dir: String, yr: Int): DataFrame =
-    T(s, dir, "lineitem")
-      .filter(year(col("l_shipdate")) === yr)
-      .select(col("l_orderkey"),
-        year(col("l_shipdate")).cast("long").as("yr"),
-        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100.0 + 0.5).cast("long").as("cents"))
-
-  private val centsSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
+  import CoreQueries.{T, centsSql, rmTree, yearSlice}
 
   // ---------------------------------------------------------------- q425
   /** Equality-delete vectors ([[graft.io.TxLog.deleteWhere]]): two

@@ -10,17 +10,7 @@ import org.apache.spark.sql.functions._
   * commit in one distributed audit pass.
   */
 object Wave78Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
+  import CoreQueries.{T, rmTree}
 
   // ---------------------------------------------------------------- q427
   /** Bloom-filter commit skipping ([[graft.io.TxLog.commitWithBloom]] /

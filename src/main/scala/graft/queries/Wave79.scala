@@ -11,17 +11,7 @@ import org.apache.spark.sql.functions._
   * CDC-apply pattern landing in a versioned lake table).
   */
 object Wave79Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
+  import CoreQueries.{T, rmTree}
 
   // ---------------------------------------------------------------- q429
   /** Clustered compaction ([[graft.io.TxLog.compactClustered]]): three

@@ -19,17 +19,7 @@ import org.apache.spark.sql.functions._
   *    recall and fails the hash.
   */
 object Wave85Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
+  import CoreQueries.{T, rmTree}
 
   private val bucketSql =
     "(instr('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 16 + " +

@@ -18,17 +18,7 @@ import org.apache.spark.sql.functions._
   *    full rebuild.
   */
 object Wave87Queries {
-  import CoreQueries.T
-
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
+  import CoreQueries.{T, rmTree}
 
   // ---------------------------------------------------------------- q450
   /** ADC top-5 for every 50th vector against the PQ-encoded corpus

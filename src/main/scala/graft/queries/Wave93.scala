@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    document frequency, linear cost, no pair materialization.
   */
 object Wave93Queries {
-  import CoreQueries.T
+  import CoreQueries.{T, centsSql, rmTree, streamFixture, yearSlice}
 
   // ---------------------------------------------------------------- q466
   /** AP per nation over customers ranked by balance; BUILDING-segment
@@ -55,56 +55,6 @@ object Wave93Queries {
       |FROM r GROUP BY nk ORDER BY c_nationkey""".stripMargin
 
   // ---------------------------------------------------------------- q467
-  private def rmTree(table: String): Unit = {
-    val root = java.nio.file.Paths.get(table)
-    if (java.nio.file.Files.exists(root)) {
-      val it = java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator()
-      while (it.hasNext) java.nio.file.Files.delete(it.next())
-    }
-  }
-
-  private def yearSlice(s: SparkSession, dir: String, yr: Int): DataFrame =
-    T(s, dir, "lineitem")
-      .filter(year(col("l_shipdate")) === yr)
-      .select(col("l_orderkey"),
-        year(col("l_shipdate")).cast("long").as("yr"),
-        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100.0 + 0.5).cast("long").as("cents"))
-
-  private val centsSql =
-    "CAST(floor(l_extendedprice * (1.0e0 - l_discount) * 100.0e0 + 0.5e0) AS BIGINT)"
-
-  /** Three single-file year slices with ascending mtimes (the q421
-    * replay discipline; separate fixture dir so the two streams never
-    * share a source listing).
-    */
-  private def streamFixture(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = s"${CoreQueries.fixDir(dir)}/q467_stream_src"
-    val ready = Paths.get(s"$tmp/READY")
-    if (!Files.exists(ready)) {
-      Files.createDirectories(Paths.get(tmp))
-      val t0 = System.currentTimeMillis() - 60000
-      Seq(1996, 1997, 1998).zipWithIndex.foreach { case (yr, i) =>
-        val stage = s"$tmp/__stage_$yr"
-        // coalesce(1) is FIXTURE STAGING ONLY (one streaming-source
-        // file per micro-batch) — never copy into a data path
-        yearSlice(s, dir, yr).coalesce(1)
-          .write.mode("overwrite").parquet(stage)
-        val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).head
-        val dst = Paths.get(s"$tmp/b$i" + s"_$yr.parquet")
-        Files.move(Paths.get(part), dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + i * 10000))
-      }
-      Files.createFile(ready)
-    }
-    tmp
-  }
-
   /** Streaming WAP: main starts with the 1996 slice; the 1997+1998
     * micro-batches stream onto branch `ingest` (one branchAppend per
     * batch — the branch log absorbs the stream, main never moves); the
@@ -115,7 +65,7 @@ object Wave93Queries {
     */
   def q467(s: SparkSession, dir: String): DataFrame = {
     import graft.io.{TableChecks, TxLog}
-    val src = streamFixture(s, dir)
+    val src = streamFixture(s, dir, "q467_stream_src")
     val table = CoreQueries.fixDir(dir) + "/txlog_stream_wap"
     rmTree(table)
     TxLog.commit(s, table, yearSlice(s, dir, 1996), targetFiles = 2)

@@ -14,14 +14,6 @@ import org.apache.spark.sql.internal.SQLConf
   */
 object StreamOps {
 
-  /** Batch tumbling-window aggregation (oracle twin of the stream):
-    * per-key counts/sums in fixed windows via date_trunc.
-    */
-  def tumblingCounts(df: DataFrame, tsCol: String, keyCol: String,
-                     unit: String = "hour"): DataFrame =
-    df.groupBy(date_trunc(unit, col(tsCol)).as("window_start"), col(keyCol))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-
   /** Drive a streaming query over a bounded file source to completion
     * and return its result: start `query` on a memory sink named
     * `queryName`, `processAllAvailable`, stop, and read the table.

@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * fixed instance count. Either regression costs tens of milliseconds
   * to seconds per call and changes no result, so only this check sees it.
   * The same scan keeps every session on the one engine config
-  * ([[graft.Sessions]]), in the tests as well as the program.
+  * ([[graft.Sessions]]), in the tests as well as the program, and the
+  * table log's on-disk layout behind the one module that writes it.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -113,6 +114,18 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "size streaming state with StreamOps.runBounded: " +
         offenders.mkString(", "))
+  }
+
+  test("the table-log layout (_log) is spelled only in graft.io.TxLog") {
+    val layout = "\"_log|_log/".r
+    val offenders = sources.collect {
+      case (f, src) if f != "graft/io/TxLog.scala" &&
+        layout.findFirstIn(src).isDefined => f
+    }
+    assert(offenders.isEmpty,
+      "reach the log through graft.io.TxLog: " + offenders.mkString(", "))
+    assert(sources.exists { case (f, src) =>
+      f == "graft/io/TxLog.scala" && layout.findFirstIn(src).isDefined })
   }
 
   test("graft.Sessions is the only session builder in src/main and src/test") {

@@ -499,4 +499,30 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.vacuum(t, keepVersions = 1)
     intercept[IllegalArgumentException](TxLog.restore(t, 1))
   }
+
+  test("restore refuses a target whose directories were vacuumed") {
+    val src = freshTable()
+    val dst = freshTable()
+    TxLog.commit(spark, src, Seq(1L).toDF("x"), targetFiles = 1)
+    TxLog.cloneTable(src, dst)
+    // the source's vacuum reclaims the directory the clone's v1 names
+    TxLog.compact(spark, src, targetFiles = 1)
+    TxLog.vacuum(src, keepVersions = 1)
+    val e = intercept[IllegalStateException](TxLog.restore(dst, 1))
+    assert(e.getMessage.contains("was vacuumed"), e.getMessage)
+    assert(TxLog.versions(dst) == Seq(1), "a refused restore commits nothing")
+  }
+
+  test("a clone of a table stored under a directory with a comma reads back") {
+    val base = Files.createTempDirectory("graft_txlog").resolve("a,b")
+    val src = base.resolve("src").toString
+    val dst = base.resolve("dst").toString
+    TxLog.commit(spark, src, Seq(1L, 2L, 3L).toDF("x"), targetFiles = 1)
+    TxLog.deleteWhere(spark, src, "x = 2", Seq("x"))
+    TxLog.cloneTable(src, dst)
+    def xs(t: String) =
+      TxLog.readResolved(spark, t).as[Long].collect().sorted.toSeq
+    assert(xs(dst) == xs(src))
+    assert(xs(dst) == Seq(1L, 3L))
+  }
 }
