@@ -26,18 +26,9 @@ import java.nio.file.{Files, Paths}
 object BenchData {
 
   def ensureScaled(spark: SparkSession, srcDir: String, dstDir: String,
-      factor: Int): Unit =
-    ensureScaledTables(spark, srcDir, dstDir, factor, tables = None)
-
-  /** Subset variant: scale only `tables` (None = all) — the sf10 probe
-    * needs lineitem + documents for its five headline pipelines, not
-    * another full-table universe on disk.
-    */
-  def ensureScaledTables(spark: SparkSession, srcDir: String,
-      dstDir: String, factor: Int, tables: Option[Set[String]]): Unit = {
+      factor: Int): Unit = {
     val done = Paths.get(s"$dstDir/_DONE")
     if (Files.exists(done)) return
-    def want(t: String): Boolean = tables.forall(_.contains(t))
     def src(t: String): DataFrame = {
       val p = Paths.get(s"$srcDir/$t.parquet")
       // a scaled source dir holds directory-parquet; driver testdata
@@ -73,40 +64,29 @@ object BenchData {
       df.drop("rep__").write.mode("overwrite")
         .parquet(s"$dstDir/$t.parquet")
 
-    if (want("lineitem"))
-      write(rep(src("lineitem"), "l_orderkey" -> dOrder,
-        "l_partkey" -> dPart, "l_suppkey" -> dSupp), "lineitem")
-    if (want("orders"))
-      write(rep(src("orders"), "o_orderkey" -> dOrder,
-        "o_custkey" -> dCust), "orders")
-    if (want("customer"))
-      write(rep(src("customer"), "c_custkey" -> dCust)
-        .withColumn("c_name", concat(col("c_name"), lit("#"), col("rep__"))),
-        "customer")
-    if (want("supplier"))
-      write(rep(src("supplier"), "s_suppkey" -> dSupp)
-        .withColumn("s_name", concat(col("s_name"), lit("#"), col("rep__"))),
-        "supplier")
-    if (want("part"))
-      write(rep(src("part"), "p_partkey" -> dPart), "part")
-    if (want("events"))
-      write(rep(src("events"), "event_id" -> dEvent, "user_id" -> dUser),
-        "events")
+    write(rep(src("lineitem"), "l_orderkey" -> dOrder,
+      "l_partkey" -> dPart, "l_suppkey" -> dSupp), "lineitem")
+    write(rep(src("orders"), "o_orderkey" -> dOrder,
+      "o_custkey" -> dCust), "orders")
+    write(rep(src("customer"), "c_custkey" -> dCust)
+      .withColumn("c_name", concat(col("c_name"), lit("#"), col("rep__"))),
+      "customer")
+    write(rep(src("supplier"), "s_suppkey" -> dSupp)
+      .withColumn("s_name", concat(col("s_name"), lit("#"), col("rep__"))),
+      "supplier")
+    write(rep(src("part"), "p_partkey" -> dPart), "part")
+    write(rep(src("events"), "event_id" -> dEvent, "user_id" -> dUser),
+      "events")
     // salt every token with the replica id — replicas stop being
     // near-dups of each other (see scaladoc)
-    if (want("documents"))
-      write(rep(src("documents"), "doc_id" -> dDoc)
-        .withColumn("text", regexp_replace(col("text"),
-          lit("([A-Za-z0-9]+)"), concat(lit("$1r"), col("rep__")))),
-        "documents")
-    if (want("embeddings"))
-      write(rep(src("embeddings"), "vec_id" -> dVec), "embeddings")
-    if (want("region"))
-      write(src("region").withColumn("rep__", lit(0L)), "region")
-    if (want("nation"))
-      write(src("nation").withColumn("rep__", lit(0L)), "nation")
+    write(rep(src("documents"), "doc_id" -> dDoc)
+      .withColumn("text", regexp_replace(col("text"),
+        lit("([A-Za-z0-9]+)"), concat(lit("$1r"), col("rep__")))),
+      "documents")
+    write(rep(src("embeddings"), "vec_id" -> dVec), "embeddings")
+    write(src("region").withColumn("rep__", lit(0L)), "region")
+    write(src("nation").withColumn("rep__", lit(0L)), "nation")
     Files.createDirectories(done.getParent)
-    Files.writeString(done, s"factor=$factor src=$srcDir tables=${
-      tables.map(_.toSeq.sorted.mkString("+")).getOrElse("all")}\n")
+    Files.writeString(done, s"factor=$factor src=$srcDir tables=all\n")
   }
 }

@@ -1,9 +1,10 @@
 package graft.cli
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.exec.{Annotator, Runner}
 import graft.io.{Hdf5Source, Parquet}
 import graft.model.{FieldsCatalog, ManifestParser, ManifestWriter}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Non-interactive CLI (SURVEY §7.1 cli/Main): the reference's
   * `annotate` command with prompts replaced by config, plus the manifest
@@ -16,16 +17,70 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
-  private def parseArgs(args: Seq[String]): Map[String, String] =
-    args.grouped(2).collect {
-      case Seq(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-      case Seq(k) if k.startsWith("--") => k.stripPrefix("--") -> "true"
-    }.toMap
+  /** `--flag value` pairs, read left to right: a flag followed by
+    * another `--flag` or by nothing is a bare boolean flag ("true").
+    * A token that is neither a flag nor a flag's value is ignored.
+    */
+  private[cli] def parseArgs(args: Seq[String]): Map[String, String] = {
+    def isFlag(a: String) = a.startsWith("--")
+    @annotation.tailrec
+    def go(rest: List[String], acc: Map[String, String]): Map[String, String] =
+      rest match {
+        case k :: v :: tail if isFlag(k) && !isFlag(v) =>
+          go(tail, acc + (k.stripPrefix("--") -> v))
+        case k :: tail if isFlag(k) =>
+          go(tail, acc + (k.stripPrefix("--") -> "true"))
+        case _ :: tail => go(tail, acc)
+        case Nil => acc
+      }
+    go(args.toList, Map.empty)
+  }
 
-  private def session(): SparkSession = {
-    val b = graft.Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .appName("graft")
-    sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master).getOrCreate()
+  /** A boolean flag: absent or `false` is off, bare or `true` is on;
+    * any other value is a usage error.
+    */
+  private[cli] def flag(opts: Map[String, String], k: String): Boolean =
+    opts.get(k).map(_.toLowerCase) match {
+      case None | Some("false") => false
+      case Some("true") => true
+      case Some(other) =>
+        System.err.println(s"--$k takes true or false, not $other"); usage()
+        sys.exit(2)
+    }
+
+  private val mapper = new ObjectMapper()
+
+  /** One JSON object line of the CLI's machine-readable output, with
+    * every string escaped (user-supplied branch, tag and path names).
+    */
+  private def json(fields: (String, Any)*): String = {
+    val o = mapper.createObjectNode()
+    fields.foreach {
+      case (k, v: String) => o.put(k, v)
+      case (k, v: Int) => o.put(k, v)
+      case (k, v: Long) => o.put(k, v)
+      case (k, v: Boolean) => o.put(k, v)
+      case (k, None) => o.putNull(k)
+      case (k, Some(v: Long)) => o.put(k, v)
+      case (k, v) => throw new IllegalArgumentException(s"$k: $v")
+    }
+    mapper.writeValueAsString(o)
+  }
+
+  /** Runs `body` with the CLI session, built on first use (a verb that
+    * only touches table metadata never starts Spark) and stopped after.
+    */
+  private def withSession[T](body: (=> SparkSession) => T): T = {
+    var started: Option[SparkSession] = None
+    lazy val spark = {
+      val b = graft.Sessions
+        .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).appName("graft")
+      val s = sys.env.get("SPARK_GRAFT_MASTER").fold(b)(b.master)
+        .getOrCreate()
+      started = Some(s)
+      s
+    }
+    try body(spark) finally started.foreach(_.stop())
   }
 
   def main(args: Array[String]): Unit = {
@@ -46,7 +101,8 @@ object Main {
       case "eval" => eval(opts)
       case "table" =>
         if (args.length < 2) { usage(); sys.exit(2) }
-        table(args(1), parseArgs(args.drop(2).toSeq))
+        withSession(spark => table(args(1), parseArgs(args.drop(2).toSeq),
+          spark))
       case other => System.err.println(s"unknown command: $other"); usage()
         sys.exit(2)
     }
@@ -58,63 +114,47 @@ object Main {
     * merge-on-read delete, MERGE upsert, history, compaction (plain,
     * policy, or clustered), and vacuum.
     */
-  private def table(verb: String, opts: Map[String, String]): Unit = {
-    import graft.io.{TableChecks, TxLog}
-    val spark = session()
+  private def table(verb: String, opts: Map[String, String],
+      spark: => SparkSession): Unit = {
+    import graft.io.TxLog
     val t = req(opts, "table")
     verb match {
       case "append" =>
         val df = Parquet.read(spark, req(opts, "input"))
         val files = opts.getOrElse("target-files", "4").toInt
-        val notNull = opts.get("not-null").toSeq
-          .flatMap(_.split(",")).filter(_.nonEmpty)
-        val uniq = opts.get("unique-key")
-          .map(_.split(",").toSeq.filter(_.nonEmpty))
-        val checks = opts.get("check").toSeq.map(c => ("cli", c))
         // constraints compose with indexing: the audit gates FIRST (a
         // violation aborts before any bytes land), then the chosen
         // commit flavor runs — previously --zone-col/--bloom-col
         // silently ignored the constraint flags (round-8 advice)
-        if (notNull.nonEmpty || uniq.nonEmpty || checks.nonEmpty) {
-          val bad = TableChecks.audit(df, notNull, checks, uniq)
-            .filter(org.apache.spark.sql.functions.col("violations") > 0)
-            .collect()
-          if (bad.nonEmpty) {
-            System.err.println(bad.map(r =>
-              s"${r.getString(0)}=${r.getLong(1)}").mkString(
-              s"constraint violations rejected append to $t: ", ", ", ""))
-            sys.exit(3)
-          }
-        }
+        auditGate(opts, df, s"constraint violations rejected append to $t")
         val v = (opts.get("zone-col"), opts.get("bloom-col")) match {
           case (Some(z), _) => TxLog.commitWithZone(spark, t, df, z, files)
           case (_, Some(b)) => TxLog.commitWithBloom(spark, t, df, b,
             targetFiles = files)
           case _ => TxLog.commit(spark, t, df, files)
         }
-        println(s"""{"version":$v}""")
+        println(json("version" -> v))
       case "read" =>
         val version = opts.get("version").map(_.toInt)
         val df =
-          if (opts.get("resolved").contains("true"))
-            TxLog.readResolved(spark, t, version)
+          if (flag(opts, "resolved")) TxLog.readResolved(spark, t, version)
           else TxLog.read(spark, t, version)
         df.write.mode("overwrite").parquet(req(opts, "out"))
       case "delete" =>
         val v = TxLog.deleteWhere(spark, t, req(opts, "where"),
           req(opts, "keys").split(",").toSeq)
-        println(s"""{"version":$v,"delete_vectors":${
-          TxLog.deleteVectorCount(t)}}""")
+        println(json("version" -> v,
+          "delete_vectors" -> TxLog.deleteVectorCount(t)))
       case "merge" =>
         val v = TxLog.merge(spark, t, Parquet.read(spark, req(opts, "input")),
           req(opts, "keys").split(",").toSeq,
           opts.getOrElse("target-files", "4").toInt)
-        println(s"""{"version":$v}""")
+        println(json("version" -> v))
       case "history" =>
         TxLog.history(spark, t).orderBy("version").collect().foreach { r =>
-          println(s"""{"version":${r.getInt(0)},"n_dirs":${r.getInt(1)},""" +
-            s""""dirs_added":${r.getInt(2)},"is_rewrite":${r.getBoolean(3)},""" +
-            s""""dels_added":${r.getInt(4)}}""")
+          println(json("version" -> r.getInt(0), "n_dirs" -> r.getInt(1),
+            "dirs_added" -> r.getInt(2), "is_rewrite" -> r.getBoolean(3),
+            "dels_added" -> r.getInt(4)))
         }
       case "compact" =>
         val v = opts.get("cluster-col") match {
@@ -124,39 +164,40 @@ object Main {
             case Some(m) =>
               val (b, a, did) = TxLog.compactIfNeeded(spark, t, m.toInt,
                 opts.getOrElse("target-files", "4").toInt)
-              println(s"""{"dirs_before":$b,"dirs_after":$a,"compacted":$did}""")
+              println(json("dirs_before" -> b, "dirs_after" -> a,
+                "compacted" -> did))
               return
             case None => TxLog.compact(spark, t,
               opts.getOrElse("target-files", "4").toInt)
           }
         }
-        println(s"""{"version":$v}""")
+        println(json("version" -> v))
       case "vacuum" =>
         val n = TxLog.vacuum(t, opts.getOrElse("keep", "1").toInt)
-        println(s"""{"dirs_deleted":$n}""")
+        println(json("dirs_deleted" -> n))
       case "clone" =>
         val v = TxLog.cloneTable(t, req(opts, "dst"))
-        println(s"""{"version":$v}""")
+        println(json("version" -> v))
       case "restore" =>
         val v = TxLog.restore(t, req(opts, "version").toInt)
-        println(s"""{"version":$v}""")
+        println(json("version" -> v))
       case "analyze" =>
         TxLog.analyze(spark, t, req(opts, "cols").split(",").toSeq)
           .orderBy("col_name").collect().foreach { r =>
-            def cell(i: Int): String =
-              if (r.isNullAt(i)) "null" else r.getLong(i).toString
-            println(s"""{"col":"${r.getString(0)}","ndv":${cell(1)},""" +
-              s""""nulls":${cell(2)},"min":${cell(3)},"max":${cell(4)}}""")
+            def cell(i: Int): Option[Long] =
+              if (r.isNullAt(i)) None else Some(r.getLong(i))
+            println(json("col" -> r.getString(0), "ndv" -> cell(1),
+              "nulls" -> cell(2), "min" -> cell(3), "max" -> cell(4)))
           }
       case "branch" =>
         val b = req(opts, "name")
-        val v = TxLog.branchCreate(t, b)
-        println(s"""{"branch":"$b","version":$v}""")
+        println(json("branch" -> b, "version" -> TxLog.branchCreate(t, b)))
       case "branch-append" =>
-        val v = TxLog.branchAppend(spark, t, req(opts, "name"),
+        val b = req(opts, "name")
+        val v = TxLog.branchAppend(spark, t, b,
           Parquet.read(spark, req(opts, "input")),
           opts.getOrElse("target-files", "4").toInt)
-        println(s"""{"branch":"${opts("name")}","version":$v}""")
+        println(json("branch" -> b, "version" -> v))
       case "branch-read" =>
         TxLog.branchRead(spark, t, req(opts, "name"))
           .write.mode("overwrite").parquet(req(opts, "out"))
@@ -164,55 +205,64 @@ object Main {
         // write-audit-publish: the audit flags gate here the same way
         // they gate `append` — a violating branch is refused, not merged
         val b = req(opts, "name")
-        val notNull = opts.get("not-null").toSeq
-          .flatMap(_.split(",")).filter(_.nonEmpty)
-        val uniq = opts.get("unique-key")
-          .map(_.split(",").toSeq.filter(_.nonEmpty))
-        val checks = opts.get("check").toSeq.map(c => ("cli", c))
-        if (notNull.nonEmpty || uniq.nonEmpty || checks.nonEmpty) {
-          val bad = TableChecks.audit(TxLog.branchRead(spark, t, b),
-              notNull, checks, uniq)
-            .filter(org.apache.spark.sql.functions.col("violations") > 0)
-            .collect()
-          if (bad.nonEmpty) {
-            System.err.println(bad.map(r =>
-              s"${r.getString(0)}=${r.getLong(1)}").mkString(
-              s"audit rejected publish of branch $b to $t: ", ", ", ""))
-            sys.exit(3)
-          }
-        }
-        val v = TxLog.publish(t, b)
-        println(s"""{"branch":"$b","published_version":$v}""")
+        auditGate(opts, TxLog.branchRead(spark, t, b),
+          s"audit rejected publish of branch $b to $t")
+        println(json("branch" -> b, "published_version" -> TxLog.publish(t, b)))
       case "branch-delete" =>
-        val n = TxLog.branchDelete(t, req(opts, "name"))
-        println(s"""{"branch":"${opts("name")}","versions_removed":$n}""")
+        val b = req(opts, "name")
+        println(json("branch" -> b,
+          "versions_removed" -> TxLog.branchDelete(t, b)))
       case "branches" =>
         TxLog.branches(t).foreach { b =>
-          println(s"""{"branch":"$b","head":${
-            TxLog.branchVersions(t, b).last}}""")
+          println(json("branch" -> b,
+            "head" -> TxLog.branchVersions(t, b).last))
         }
       case "tag" =>
-        val v = TxLog.tagCreate(t, req(opts, "name"),
-          opts.get("version").map(_.toInt))
-        println(s"""{"tag":"${opts("name")}","version":$v}""")
+        val tag = req(opts, "name")
+        val v = TxLog.tagCreate(t, tag, opts.get("version").map(_.toInt))
+        println(json("tag" -> tag, "version" -> v))
       case "tags" =>
         TxLog.tags(t).toSeq.sortBy(_._1).foreach { case (tag, v) =>
-          println(s"""{"tag":"$tag","version":$v}""")
+          println(json("tag" -> tag, "version" -> v))
         }
       case "tag-delete" =>
-        TxLog.tagDelete(t, req(opts, "name"))
-        println(s"""{"tag":"${opts("name")}","deleted":true}""")
+        val tag = req(opts, "name")
+        TxLog.tagDelete(t, tag)
+        println(json("tag" -> tag, "deleted" -> true))
       case "orphans" =>
         val grace = opts.getOrElse("grace-ms", "3600000").toLong
-        TxLog.findOrphans(t, grace).foreach { d =>
-          println(s"""{"orphan":"$d"}""")
-        }
+        TxLog.findOrphans(t, grace).foreach(d => println(json("orphan" -> d)))
       case "vacuum-orphans" =>
         val n = TxLog.vacuumOrphans(t,
           opts.getOrElse("grace-ms", "3600000").toLong)
-        println(s"""{"orphans_deleted":$n}""")
+        println(json("orphans_deleted" -> n))
       case other =>
         System.err.println(s"unknown table verb: $other"); usage(); sys.exit(2)
+    }
+  }
+
+  /** The constraint gate of `table append` and `table publish`: with
+    * any of --not-null a,b / --check SQL / --unique-key a,b given,
+    * audits `df` and exits 3, listing each violated rule after
+    * `rejection`, when any rule has a violation. `df` is only built
+    * when a flag is given.
+    */
+  private def auditGate(opts: Map[String, String], df: => DataFrame,
+      rejection: String): Unit = {
+    val notNull = opts.get("not-null").toSeq
+      .flatMap(_.split(",")).filter(_.nonEmpty)
+    val uniq = opts.get("unique-key")
+      .map(_.split(",").toSeq.filter(_.nonEmpty))
+    val checks = opts.get("check").toSeq.map(c => ("cli", c))
+    if (notNull.nonEmpty || uniq.nonEmpty || checks.nonEmpty) {
+      val bad = graft.io.TableChecks.audit(df, notNull, checks, uniq)
+        .filter(org.apache.spark.sql.functions.col("violations") > 0)
+        .collect()
+      if (bad.nonEmpty) {
+        System.err.println(bad.map(r => s"${r.getString(0)}=${r.getLong(1)}")
+          .mkString(s"$rejection: ", ", ", ""))
+        sys.exit(3)
+      }
     }
   }
 
@@ -236,7 +286,7 @@ object Main {
     if (result.newColumns.nonEmpty) {
       println(s"new columns without metadata: ${result.newColumns.mkString(", ")}")
       // catalog write-back is append-only + atomic (S10; SURVEY §1.5/§7.4)
-      if (opts.contains("write-back") && fieldsPath.isDefined) {
+      if (flag(opts, "write-back") && fieldsPath.isDefined) {
         val tmp = fieldsPath.get + ".tmp"
         java.nio.file.Files.write(java.nio.file.Paths.get(tmp),
           FieldsCatalog.toFlatJson(result.catalog).getBytes("UTF-8"))
@@ -253,22 +303,20 @@ object Main {
     val manifest = ManifestParser.parseFile(req(opts, "manifest"))
     val dataDir = req(opts, "data-dir")
     val out = req(opts, "out")
-    val spark = session()
-    try {
+    withSession { spark =>
       val written = Runner.run(spark, manifest, dataDir, out,
-        singleFile = opts.contains("single-file"))
+        singleFile = flag(opts, "single-file"))
       written.foreach { case (src, tgt) => println(s"$src -> $tgt") }
-    } finally spark.stop()
+    }
   }
 
   private def hdf2parquet(opts: Map[String, String]): Unit = {
     val in = req(opts, "in")
     val out = req(opts, "out")
-    val spark = session()
-    try {
+    withSession { spark =>
       val df = Hdf5Source.hdf5ToParquet(spark, in, out)
       println(s"$in -> $out (${df.columns.mkString(", ")})")
-    } finally spark.stop()
+    }
   }
 
   /** Reverse converter: any Spark-readable parquet exports as one HDF5
@@ -278,14 +326,13 @@ object Main {
   private def parquet2hdf(opts: Map[String, String]): Unit = {
     val in = req(opts, "in")
     val out = req(opts, "out")
-    val spark = session()
-    try {
+    withSession { spark =>
       val base = Parquet.read(spark, in)
       val df = opts.get("partitions").map(_.toInt)
         .fold(base)(base.repartition(_))
       val n = graft.io.Hdf5Export.write(df, out)
       println(s"$in -> $out ($n files; ${df.columns.mkString(", ")})")
-    } finally spark.stop()
+    }
   }
 
   /** Column profile of any Spark-readable table: distinct counts +
@@ -297,12 +344,11 @@ object Main {
     */
   private def profile(opts: Map[String, String]): Unit = {
     val in = req(opts, "input")
-    val spark = session()
-    try {
+    withSession { spark =>
       val df = Parquet.read(spark, in)
-      graft.ops.Profile.profile(df, exact = !opts.contains("approx"))
+      graft.ops.Profile.profile(df, exact = !flag(opts, "approx"))
         .show(200, truncate = false)
-      if (opts.contains("keys")) {
+      if (flag(opts, "keys")) {
         println("== candidate keys ==")
         graft.ops.Profile.keyCandidates(df).orderBy("column")
           .show(200, truncate = false)
@@ -347,7 +393,7 @@ object Main {
         graft.ops.Profile.groupOls(df, g, x, y).orderBy(g)
           .show(200, truncate = false)
       }
-    } finally spark.stop()
+    }
   }
 
   /** Classifier/ranking evaluation over parquet inputs: exact ROC AUC
@@ -355,8 +401,7 @@ object Main {
     */
   private def eval(opts: Map[String, String]): Unit = {
     val in = req(opts, "input")
-    val spark = session()
-    try {
+    withSession { spark =>
       val df = Parquet.read(spark, in)
       graft.ops.ext.Eval.centroidAuc(df,
         opts.getOrElse("vec-col", "embedding"),
@@ -364,7 +409,7 @@ object Main {
         opts.getOrElse("label-col", "label"),
         opts.getOrElse("pos", "1").toInt)
         .show(truncate = false)
-    } finally spark.stop()
+    }
   }
 
   /** The full corpus-curation pipeline as one command: quality gate →
@@ -382,8 +427,7 @@ object Main {
     val rates = opts.get("rates").map(_.split(",").map { kv =>
       val Array(k, v) = kv.split("="); k -> v.toDouble
     }.toMap).getOrElse(Map.empty[String, Double])
-    val spark = session()
-    try {
+    withSession { spark =>
       val docs = Parquet.read(spark, in)
       // no benchmark given -> an empty one (decontamination passes all)
       val bench = opts.get("benchmark").map(Parquet.read(spark, _))
@@ -398,7 +442,7 @@ object Main {
       curated.write.mode("overwrite").parquet(out)
       val n = Parquet.read(spark, out).count()
       println(s"$in -> $out ($n surviving rows)")
-    } finally spark.stop()
+    }
   }
 
   /** Scoring pass: annotate every document with the quality and
@@ -413,8 +457,7 @@ object Main {
     val idCol = opts.getOrElse("id-col", "doc_id")
     val textCol = opts.getOrElse("text-col", "text")
     val minCount = opts.getOrElse("vocab-min-count", "5").toLong
-    val spark = session()
-    try {
+    withSession { spark =>
       val docs = Parquet.read(spark, in)
       val quality = graft.ops.ext.TextAnalysis
         .logisticQuality(docs, textCol)
@@ -426,7 +469,7 @@ object Main {
         .write.mode("overwrite").parquet(out)
       val n = Parquet.read(spark, out).count()
       println(s"$in -> $out ($n scored rows)")
-    } finally spark.stop()
+    }
   }
 
   /** Trainer handoff: deterministic token-budget shards (see
@@ -442,8 +485,7 @@ object Main {
     val idCol = opts.getOrElse("id-col", "doc_id")
     val textCol = opts.getOrElse("text-col", "text")
     val budget = opts.getOrElse("budget", "1000000").toLong
-    val spark = session()
-    try {
+    withSession { spark =>
       val docs0 = Parquet.read(spark, in)
       val docs = opts.get("tokens-col") match {
         case Some(c) => docs0.withColumn("__toks", col(c).cast("long"))
@@ -456,7 +498,7 @@ object Main {
       sharded.write.mode("overwrite").partitionBy("shard").parquet(out)
       val n = Parquet.read(spark, out).select("shard").distinct().count()
       println(s"$in -> $out ($n shards at <= $budget tokens)")
-    } finally spark.stop()
+    }
   }
 
   /** Structural corpus cleaning: corpus-wide duplicate-paragraph
@@ -471,8 +513,7 @@ object Main {
     val idCol = opts.getOrElse("id-col", "doc_id")
     val mode = opts.getOrElse("mode", "paragraphs")
     val minDocs = opts.getOrElse("min-docs", "10").toInt
-    val spark = session()
-    try {
+    withSession { spark =>
       val docs = Parquet.read(spark, in)
       val cleaned = mode match {
         case "paragraphs" =>
@@ -489,7 +530,7 @@ object Main {
       val kept = Parquet.read(spark, out)
         .agg(org.apache.spark.sql.functions.sum(col("n_removed"))).head().getLong(0)
       println(s"$in -> $out ($kept paragraphs removed)")
-    } finally spark.stop()
+    }
   }
 
   /** Snapshot diff: classify every key as added/removed/changed between
@@ -500,8 +541,7 @@ object Main {
     val newP = req(opts, "new")
     val out = req(opts, "out")
     val key = req(opts, "key")
-    val spark = session()
-    try {
+    withSession { spark =>
       val o = Parquet.read(spark, oldP)
       val n = Parquet.read(spark, newP)
       val cols = opts.get("cols").map(_.split(",").toSeq)
@@ -511,7 +551,7 @@ object Main {
       val byType = Parquet.read(spark, out).groupBy("change_type").count()
         .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted
       println(s"$oldP vs $newP -> $out (${byType.mkString(", ")})")
-    } finally spark.stop()
+    }
   }
 
   /** Deterministic training order: seeded permutation + shard
@@ -524,14 +564,13 @@ object Main {
     val idCol = opts.getOrElse("id-col", "doc_id")
     val seed = opts.getOrElse("seed", "12345").toLong
     val shards = opts.getOrElse("shards", "8").toInt
-    val spark = session()
-    try {
+    withSession { spark =>
       val docs = Parquet.read(spark, in)
       graft.ops.ext.TrainOrder.shuffled(docs, idCol, seed, shards)
         .write.mode("overwrite").partitionBy("shard")
         .parquet(out)
       println(s"$in -> $out ($shards shards, seed $seed)")
-    } finally spark.stop()
+    }
   }
 
   private def usage(): Unit = System.err.println(

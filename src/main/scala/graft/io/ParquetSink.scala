@@ -13,16 +13,10 @@ import org.apache.spark.sql.DataFrame
   */
 object ParquetSink {
 
-  /** @param compression parquet codec — snappy (default, cheap CPU) or
-    *                     zstd (denser; at 100 TB the storage/scan-byte
-    *                     savings usually win)
-    */
-  def write(df: DataFrame, target: String, singleFile: Boolean = false,
-            partitionBy: Seq[String] = Nil,
-            compression: String = "snappy"): Unit = {
-    val d = if (singleFile) df.coalesce(1) else df
-    val w = d.write.mode("overwrite").option("compression", compression)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+  /** Snappy-compressed, overwriting `target`. */
+  def write(df: DataFrame, target: String,
+            singleFile: Boolean = false): Unit =
+    (if (singleFile) df.coalesce(1) else df)
+      .write.mode("overwrite").option("compression", "snappy")
       .parquet(target)
-  }
 }

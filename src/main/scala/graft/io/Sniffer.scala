@@ -94,9 +94,6 @@ object Sniffer {
     out.result()
   }
 
-  private val NaSet = Set("", "NA", "N/A", "n/a", "NaN", "nan", "NULL",
-    "null", "None", "#N/A")
-
   /** Sample-based schema inference (the 100 TB path): Spark's
     * `inferSchema` is a SECOND full pass over every byte of the source;
     * at scale the honest alternative is typing from the head sample the
@@ -117,7 +114,7 @@ object Sniffer {
     val rows = lines.tail.map(splitLine(_, sep))
     val fields = header.zipWithIndex.map { case (name, i) =>
       val cells = rows.flatMap(_.lift(i)).map(_.trim)
-        .filterNot(NaSet.contains)
+        .filterNot(DsvReader.NaTokens.contains)
       // same lattice as Spark's CSV inference so the sample path yields
       // identical schemas on type-stable data: Int -> Long -> Double ->
       // String

@@ -28,20 +28,17 @@ object Contrastive {
   /** (anchor_id, pos_id, pos_cos, neg_rank, neg_id, neg_cos, margin)
     * — one row per (anchor, hard negative), kNeg rows per anchor.
     * Anchors lacking any same-label peer are dropped (no positive).
+    * `anchorPred` selects the anchors over the columns `id` and `lab`.
     */
   def hardNegatives(df: DataFrame, idCol: String, labelCol: String,
       vecCol: String, anchorPred: Column, kNeg: Int): DataFrame = {
-    val base = df.select(col(idCol).as("id"), col(labelCol).as("lab"),
-      col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
-    val anchors = base.filter(anchorPred)
-      .select(col("id").as("aid"), col("lab").as("alab"),
-        col("v").as("av"), col("nrm").as("anrm"))
-    val pairs = base.crossJoin(broadcast(anchors))
-      .filter(col("id") =!= col("aid"))
-      .select(col("aid"), col("alab"), col("id"), col("lab"),
-        (Similarity.dot(col("av"), col("v"))
-          / (col("anrm") * col("nrm"))).as("cos"))
+    val base = Similarity.vectors(df, idCol, vecCol, col(labelCol).as("lab"))
+    val pairs = base.as("b")
+      .crossJoin(broadcast(base.filter(anchorPred).as("a")))
+      .filter(col("b.id") =!= col("a.id"))
+      .select(col("a.id").as("aid"), col("a.lab").as("alab"),
+        col("b.id").as("id"), col("b.lab").as("lab"),
+        Similarity.cosineOf("a", "b").as("cos"))
     val wPos = Window.partitionBy("aid")
       .orderBy(col("cos").desc, col("id"))
     val pos = pairs.filter(col("lab") === col("alab"))

@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Dedup {
 
-  /** Pin the partition count AND layout of a band/bucket frame before
-    * its membership-cap window + self-join.
+  /** Pin the partition count AND layout of a band/bucket frame, hashed
+    * on its bucket `keys`, before its membership-cap window + self-join.
     *
     * The frame upstream is a per-doc aggregate (signatures/fingerprints
     * — a few longs per doc), so its exchange is tiny even for a large
@@ -36,9 +36,55 @@ object Dedup {
     * of the cap: per-bucket pairwise work is bounded by maxBucket²
     * and anything larger degrades to a linear star.
     */
-  private[ext] def pinBucketParallelism(df: DataFrame): DataFrame =
+  private[ext] def pinBucketParallelism(df: DataFrame,
+      keys: String*): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-      col("bucket"))
+      keys.map(col): _*)
+
+  /** Candidate pairs of a banded bucket frame (id, bucket, payload…)
+    * under the PER-BUCKET MEMBERSHIP CAP, the one bucket self-join of
+    * the MinHash, embedding and Hamming paths. The frame is pinned with
+    * [[pinBucketParallelism]] on the bucket; a bucket of at most
+    * `maxBucket` members self-joins (id_a < id_b), and a larger one —
+    * mass near-duplicated boilerplate, an embedding pile-up, a flood of
+    * all-zero fingerprint slices — degrades to a linear STAR around its
+    * (id, payload)-minimal member: every member pairs with that rep
+    * only, so the dup CLUSTER stays connected (what downstream
+    * connected components consume) while member×member pairs of the
+    * oversized bucket surface only via their other, uncontended, bands.
+    * Count and rep come from ONE window over the bucket partitioning
+    * the join reuses. Each pair carries every payload column `p` of
+    * both members as `p_a`/`p_b`. Not deduplicated: a pair sharing
+    * several buckets appears once per bucket, and each caller places
+    * its own per-pair filter before or after its `dropDuplicates`.
+    */
+  private def cappedBucketPairs(buckets: DataFrame, maxBucket: Int,
+      payload: String*): DataFrame = {
+    val wB = Window.partitionBy("bucket")
+    // the rep as a struct (id, payload…); an id-only rep is a plain min
+    // wrapped after the window, since a min over a struct needs the
+    // struct projected first and so a Window node of its own
+    val rep =
+      if (payload.isEmpty) struct(min(col("id")).over(wB).as("id"))
+      else min(struct(("id" +: payload).map(col): _*)).over(wB)
+    val counted = pinBucketParallelism(buckets, "bucket")
+      .withColumn("__bn", count(lit(1)).over(wB))
+      .withColumn("__rep", rep)
+    def pair(a: String, b: String): Seq[Column] =
+      col(s"${a}id").as("id_a") +: col(s"${b}id").as("id_b") +:
+        payload.flatMap(p =>
+          Seq(col(s"$a$p").as(s"${p}_a"), col(s"$b$p").as(s"${p}_b")))
+    val small = counted.filter(col("__bn") <= maxBucket)
+    val allPairs = small.as("x")
+      .join(small.as("y"), col("x.bucket") === col("y.bucket"))
+      .filter(col("x.id") < col("y.id"))
+      .select(pair("x.", "y."): _*)
+    // rep has the bucket-minimal id, so id_a < id_b by construction
+    val starPairs = counted.filter(col("__bn") > maxBucket)
+      .filter(col("id") =!= col("__rep.id"))
+      .select(pair("__rep.", ""): _*)
+    allPairs.unionByName(starPairs)
+  }
 
   /** Exact dedup on a content hash: keeps the row with the smallest `idCol`
     * per identical `textCol` (deterministic winner — `dropDuplicates` picks
@@ -181,26 +227,34 @@ object Dedup {
       e: Column): DataFrame =
     df.withColumn(name, explode(array(e)))
 
-  /** Exact-jaccard column over two DISTINCT-element shingle-hash
-    * arrays (the [[graft.expr.ShingleHashes]] kernel dedups by
-    * construction): |a ∩ b| is computed ONCE behind the [[evalOnce]]
-    * Generate barrier and the union size derived by set arithmetic
-    * (|a ∪ b| = |a| + |b| − |a ∩ b|), so a verify pays ONE set
-    * operation per candidate pair where the re-inlined
+  /** The exact-jaccard verify of every shingle near-dup path: the
+    * candidate pairs (id_a, id_b, sh_a, sh_b) whose jaccard over the two
+    * DISTINCT-element shingle-hash arrays (the
+    * [[graft.expr.ShingleHashes]] kernel dedups by construction) reaches
+    * `threshold`, as (id_a, id_b, jaccard). |a ∩ b| is computed ONCE
+    * behind the [[evalOnce]] Generate barrier and the union size
+    * derived by set arithmetic (|a ∪ b| = |a| + |b| − |a ∩ b|), so a
+    * verify pays ONE set operation per candidate pair where the re-inlined
     * intersect + union shape paid two set ops 2–3 times each
     * (measured on the q445 verify stage at sf0.1: 5.7 → ~1 s, the two
     * effects combined). The doubles are bit-identical to the
     * intersect/union form — the integer union size is equal by set
     * identity, so both divisions see the same operands (and the
-    * union-0 ⇔ both-empty guard is preserved).
+    * union-0 ⇔ both-empty guard is preserved). The threshold filter
+    * reads the materialized column above the barrier. Each caller
+    * keeps its own candidate↔shingle joins: their broadcast placement
+    * differs by design (self-join, broadcast batch, broadcast
+    * candidates).
     */
-  private[ext] def withJaccardOfSets(pairs: DataFrame, a: Column, b: Column,
-      name: String): DataFrame = {
+  private[ext] def verifyJaccard(pairs: DataFrame,
+      threshold: Double): DataFrame = {
+    val (a, b) = (col("sh_a"), col("sh_b"))
     val uni = size(a) + size(b) - col("__ji")
     evalOnce(pairs, "__ji", size(array_intersect(a, b)))
-      .withColumn(name, when(uni === 0, lit(0.0))
+      .withColumn("jaccard", when(uni === 0, lit(0.0))
         .otherwise(col("__ji").cast("double") / uni.cast("double")))
-      .drop("__ji")
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** MinHash-LSH near-duplicate pairs: (id_a, id_b, jaccard) for pairs
@@ -295,51 +349,24 @@ object Dedup {
       .select(col("id"),
         shinglesOfTokens(col("__toks"), shingleSize).as("sh"))
       .persist()
-    val buckets = pinBucketParallelism(bandSignatures(sh, k, bands))
-    // PER-BUCKET MEMBERSHIP CAP: the exact-dup pre-pass removes
-    // identical texts, but mass NEAR-duplicated boilerplate (templated
-    // pages, license headers) can still concentrate one band bucket —
-    // and an uncapped bucket self-join is df² inside that bucket. A
-    // bucket over `maxBucket` degrades to a linear STAR around its
-    // (id, sig)-minimal member: every member pairs with the rep only,
-    // so the dup CLUSTER stays connected (what downstream
-    // connected-components consumes) while member×member pairs of the
-    // oversized bucket surface only via their other — uncontended —
-    // bands. Count and rep come from ONE window over the bucket
-    // partitioning the join needs anyway.
-    val wB = Window.partitionBy("bucket")
-    val counted = buckets
-      .withColumn("__bn", count(lit(1)).over(wB))
-      .withColumn("__rep", min(struct(col("id"), col("sig"))).over(wB))
-    val small = counted.filter(col("__bn") <= maxBucket)
-    // Candidate pairs carry both signatures; the ESTIMATE PREFILTER
-    // (matching signature positions / k >= threshold/2) kills the junk
-    // candidates r=2 banding admits — a 5+ sigma margin below any true
-    // pair at `threshold`, so recall stays with the banding (which at
-    // r=2 misses j>=0.8 pairs with probability ~1e-7) while exact
-    // jaccard runs only on plausible pairs.
-    val est = sigEstimate(k)
-    val allPairs = small.as("x")
-      .join(small.as("y"), col("x.bucket") === col("y.bucket"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
-    // rep has the bucket-minimal id, so id_a < id_b by construction
-    val starPairs = counted.filter(col("__bn") > maxBucket)
-      .filter(col("id") =!= col("__rep.id"))
-      .select(col("__rep.id").as("id_a"), col("id").as("id_b"),
-        col("__rep.sig").as("sig_a"), col("sig").as("sig_b"))
-    val cand = allPairs.unionByName(starPairs)
+    // Capped band join (the exact-dup pre-pass removes identical
+    // texts, but templated pages and license headers can still flood
+    // one band bucket). Candidate pairs carry both signatures; the
+    // ESTIMATE PREFILTER (matching signature positions / k >=
+    // threshold/2) kills the junk candidates r=2 banding admits — a 5+
+    // sigma margin below any true pair at `threshold`, so recall stays
+    // with the banding (which at r=2 misses j>=0.8 pairs with
+    // probability ~1e-7) while exact jaccard runs only on plausible
+    // pairs.
+    val cand = cappedBucketPairs(bandSignatures(sh, k, bands), maxBucket,
+        "sig")
       .dropDuplicates("id_a", "id_b")
-      .filter(est >= threshold / 2)
+      .filter(sigEstimate(k) >= threshold / 2)
       .select(col("id_a"), col("id_b"))
     val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val b = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    val repPairs = withJaccardOfSets(
-        cand.join(a, Seq("id_a")).join(b, Seq("id_b")),
-        col("sh_a"), col("sh_b"), "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val repPairs = verifyJaccard(
+      cand.join(a, Seq("id_a")).join(b, Seq("id_b")), threshold)
     if (!includeExactDuplicates) repPairs
     else {
       val cross = repPairs
@@ -398,76 +425,41 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
     // candidates are tiny post-prefilter: broadcast them through the
     // history probe so the wide shingle frame streams in place
-    withJaccardOfSets(broadcast(cand)
+    verifyJaccard(broadcast(cand)
         .join(shH.select(col("id").as("id_a"), col("sh").as("sh_a")),
           Seq("id_a"))
         .join(broadcast(shB.select(col("id").as("id_b"),
           col("sh").as("sh_b"))), Seq("id_b")),
-        col("sh_a"), col("sh_b"), "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      threshold)
   }
 
   /** Embedding-cosine near-duplicate pairs: pairs of rows whose embedding
     * cosine >= threshold, id_a < id_b.
     *
-    * DEFAULT path (the 100 TB shape): banded sign-LSH candidate
-    * generation — each vector lands in `bands` (band, key) buckets of
-    * `rowsPerBand` hyperplanes; the self-join runs per bucket, never the
-    * n^2 pair space; exact cosine verifies candidates only. Recall for a
-    * pair at cosine c is 1 - (1 - (1 - acos(c)/pi)^r)^B — at the
-    * near-dup regime (c >= 0.99, defaults B=8 r=4) the miss probability
-    * is ~1e-9. `exact = true` opts into the all-pairs crossJoin —
-    * recall exactly 1, cost exactly n^2: the small-corpus verify path.
+    * Banded sign-LSH candidate generation (the 100 TB shape): each
+    * vector lands in `bands` (band, key) buckets of `rowsPerBand`
+    * hyperplanes; the self-join runs per bucket, never the n^2 pair
+    * space; exact cosine verifies candidates only. Recall for a pair at
+    * cosine c is 1 - (1 - (1 - acos(c)/pi)^r)^B — at the near-dup
+    * regime (c >= 0.99, defaults B=8 r=4) the miss probability is
+    * ~1e-9.
     */
   def embeddingNearDups(df: DataFrame, vecCol: String, idCol: String,
-                        threshold: Double, exact: Boolean = false,
-                        bands: Int = 8, rowsPerBand: Int = 4,
+                        threshold: Double, bands: Int = 8,
+                        rowsPerBand: Int = 4,
                         maxBucket: Int = 4096): DataFrame = {
-    // norms precomputed once per row — NOT per pair (an n x redundancy)
-    val v = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-      .withColumn("nrm", Similarity.l2norm(col("vec")))
-    val scored =
-      if (exact) {
-        val a = v.select(col("id").as("id_a"), col("vec").as("vec_a"),
-          col("nrm").as("nrm_a"))
-        val b = v.select(col("id").as("id_b"), col("vec").as("vec_b"),
-          col("nrm").as("nrm_b"))
-        a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      } else {
-        // candidate ids only through the band join (no vector payload
-        // replication per band); vectors re-attached to the surviving
-        // distinct pairs. Same per-bucket membership cap as the
-        // MinHash/Hamming joins: an embedding pile-up (mass-duplicated
-        // content embedding to one point floods its sign buckets)
-        // degrades to a linear star around the bucket-min id — id-only
-        // here, since vectors only join in at verify time.
-        val buckets = pinBucketParallelism(v.select(col("id"),
-          explode(Similarity.lshBandBuckets(col("vec"), bands, rowsPerBand))
-            .as("bucket")))
-        val wB = Window.partitionBy("bucket")
-        val counted = buckets
-          .withColumn("__bn", count(lit(1)).over(wB))
-          .withColumn("__rep", min(col("id")).over(wB))
-        val small = counted.filter(col("__bn") <= maxBucket)
-        val allPairs = small.as("x")
-          .join(small.as("y"), col("x.bucket") === col("y.bucket"))
-          .filter(col("x.id") < col("y.id"))
-          .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        val starPairs = counted.filter(col("__bn") > maxBucket)
-          .filter(col("id") =!= col("__rep"))
-          .select(col("__rep").as("id_a"), col("id").as("id_b"))
-        val cand = allPairs.unionByName(starPairs)
-          .dropDuplicates("id_a", "id_b")
-        cand
-          .join(v.select(col("id").as("id_a"), col("vec").as("vec_a"),
-            col("nrm").as("nrm_a")), Seq("id_a"))
-          .join(v.select(col("id").as("id_b"), col("vec").as("vec_b"),
-            col("nrm").as("nrm_b")), Seq("id_b"))
-      }
-    evalOnce(scored, "cosine", Similarity.dot(col("vec_a"), col("vec_b"))
-        / (col("nrm_a") * col("nrm_b")))
+    val v = Similarity.vectors(df, idCol, vecCol)
+    // candidate ids only through the capped band join (no vector
+    // payload replication per band; an embedding pile-up stars around
+    // the bucket-min id); vectors re-attached to the surviving distinct
+    // pairs
+    val cand = cappedBucketPairs(v.select(col("id"),
+        explode(Similarity.lshBandBuckets(col("vec"), bands, rowsPerBand))
+          .as("bucket")), maxBucket)
+      .dropDuplicates("id_a", "id_b")
+    val scored = cand.join(v.as("a"), col("id_a") === col("a.id"))
+      .join(v.as("b"), col("id_b") === col("b.id"))
+    evalOnce(scored, "cosine", Similarity.cosineOf("a", "b"))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
@@ -707,12 +699,10 @@ object Dedup {
     // persist the shingling runs twice
     val sh = long.select(col("id"),
       shinglesOfTokens(col("__toks"), shingleSize).as("sh")).persist()
-    withJaccardOfSets(broadcast(cand
+    verifyJaccard(broadcast(cand
         .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a")))
         .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b")),
-        col("sh_a"), col("sh_b"), "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      threshold)
   }
 
   /** Full-corpus near-duplicate pairs by LENGTH-ROUTED candidate
@@ -770,34 +760,19 @@ object Dedup {
       struct(lit(b).as("band"),
         shiftright(col("__fp"), b * width).bitwiseAND(mask).as("key"))
     }: _*)
-    val buckets = pinBucketParallelism(
-      base.select(col("id"), col("__fp"), explode(bucketArr).as("bucket")))
-    // PER-BUCKET MEMBERSHIP CAP (same discipline as the MinHash band
-    // join): band keys are only 64/bands bits, so a skewed fingerprint
-    // population (all-zero slices from blank images, boilerplate
-    // simhashes) can flood one (band, key) bucket; over `maxBucket`
-    // the bucket degrades to a linear star around its (id, fp)-minimal
-    // member — cluster connectivity survives, df² never happens.
-    val wB = Window.partitionBy("bucket")
-    val counted = buckets
-      .withColumn("__bn", count(lit(1)).over(wB))
-      .withColumn("__rep", min(struct(col("id"), col("__fp"))).over(wB))
-    val small = counted.filter(col("__bn") <= maxBucket)
-    val allPairs = small.as("x")
-      .join(small.as("y"), col("x.bucket") === col("y.bucket"))
-      .filter(col("x.id") < col("y.id"))
+    // capped band join: band keys are only 64/bands bits, so a skewed
+    // fingerprint population (all-zero slices from blank images,
+    // boilerplate simhashes) can flood one (band, key) bucket
+    val dist = hamming(col("__fp_a"), col("__fp_b"))
+    cappedBucketPairs(base.select(col("id"), col("__fp"),
+        explode(bucketArr).as("bucket")), maxBucket, "__fp")
       // hamming BEFORE the pair-dedup: generous maxHamming needs short
       // band keys (64/bands bits), so the band join enumerates a large
-      // junk-collision stream; the codegen'd bit_count filter kills it
-      // inside the join stage — deduping first would shuffle ALL of it.
-      .filter(hamming(col("x.__fp"), col("y.__fp")) <= maxHamming)
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        hamming(col("x.__fp"), col("y.__fp")).as("hamming"))
-    val starPairs = counted.filter(col("__bn") > maxBucket)
-      .filter(col("id") =!= col("__rep.id"))
-      .filter(hamming(col("__rep.__fp"), col("__fp")) <= maxHamming)
-      .select(col("__rep.id").as("id_a"), col("id").as("id_b"),
-        hamming(col("__rep.__fp"), col("__fp")).as("hamming"))
-    allPairs.unionByName(starPairs).dropDuplicates("id_a", "id_b")
+      // junk-collision stream; the codegen'd bit_count filter is pushed
+      // into both union branches and kills it inside the join stage —
+      // deduping first would shuffle ALL of it.
+      .filter(dist <= maxHamming)
+      .select(col("id_a"), col("id_b"), dist.as("hamming"))
+      .dropDuplicates("id_a", "id_b")
   }
 }

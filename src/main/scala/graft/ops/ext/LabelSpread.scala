@@ -29,17 +29,12 @@ object LabelSpread {
     */
   def knnEdges(df: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    val base = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
-    val right = base.select(col("id").as("nb"), col("v").as("w"),
-      col("nrm").as("wnrm"))
+    val base = Similarity.vectors(df, idCol, vecCol)
     val w = Window.partitionBy("id")
       .orderBy(col("cos").desc, col("nb"))
-    base.crossJoin(right).filter(col("id") =!= col("nb"))
-      .select(col("id"), col("nb"),
-        (Similarity.dot(col("v"), col("w"))
-          / (col("nrm") * col("wnrm"))).as("cos"))
+    base.as("a").crossJoin(base.as("b")).filter(col("a.id") =!= col("b.id"))
+      .select(col("a.id").as("id"), col("b.id").as("nb"),
+        Similarity.cosineOf("a", "b").as("cos"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("id", "nb", "rank")
@@ -64,30 +59,20 @@ object LabelSpread {
     */
   def ivfKnnEdges(df: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int = 2): DataFrame = {
-    val base = df.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(Similarity.dot(col("v"), col("v"))))
+    val base = Similarity.vectors(df, idCol, vecCol)
+      .withColumn("id", col("id").cast("long"))
     val spacing = math.ceil(math.sqrt(base.count().toDouble)).toLong
-    val cents = base.filter(col("id") % spacing === 0)
-      .select(col("id").as("cent_id"), col("v").as("centv"),
-        col("nrm").as("centnorm"))
-    val cw = Window.partitionBy("id")
-      .orderBy(col("__cc").desc, col("cent_id"))
-    val assigned = base.crossJoin(broadcast(cents))
-      .withColumn("__cc", Similarity.dot(col("v"), col("centv"))
-        / (col("nrm") * col("centnorm")))
-      .withColumn("__cr", row_number().over(cw))
-      .filter(col("__cr") <= nprobe)
-      .select(col("id"), col("cent_id"), col("__cr"), col("v"), col("nrm"))
-    val members = assigned.filter(col("__cr") === 1)
-      .select(col("cent_id"), col("id").as("nb"), col("v").as("wv"),
+    val assigned = Similarity.cells(base,
+      Similarity.centroids(base, spacing), nprobe)
+    val members = assigned.filter(col("cell_rank") === 1)
+      .select(col("cent_id"), col("id").as("nb"), col("vec").as("wv"),
         col("nrm").as("wnrm"))
-    val probes = assigned.select(col("id"), col("cent_id"), col("v"),
+    val probes = assigned.select(col("id"), col("cent_id"), col("vec"),
       col("nrm"))
     val w = Window.partitionBy("id").orderBy(col("cos").desc, col("nb"))
     probes.join(members, "cent_id")
       .filter(col("id") =!= col("nb"))
-      .withColumn("cos", Similarity.dot(col("v"), col("wv"))
+      .withColumn("cos", Similarity.dot(col("vec"), col("wv"))
         / (col("nrm") * col("wnrm")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)

@@ -86,9 +86,13 @@ object Oph {
     *    shingle-posting join: measured 4× slower at sf0.1).
     *
     * Buckets over `maxBucket` members are dropped whole (boilerplate
-    * hubs — the [[Dedup]] cap convention; at any tested scale no
-    * legitimate bucket approaches it). Exact jaccard verification runs
-    * on candidates only; the pair space is never materialized.
+    * hubs; at any tested scale no legitimate bucket approaches it).
+    * This is a different contract from the [[Dedup]] cap, which keeps
+    * an oversized bucket connected as a star around its minimal member:
+    * every key here is ONE shingle hash (a bin minimum or a short-doc
+    * shingle), so a hub is a stop-shingle rather than a duplicate
+    * cluster. Exact jaccard verification runs on candidates only; the
+    * pair space is never materialized.
     */
   def nearDups(df: org.apache.spark.sql.DataFrame, textCol: String,
       idCol: String, shingleSize: Int = 3, k: Int = 32,
@@ -113,16 +117,11 @@ object Oph {
       .withColumn("bin", lit(-1L))
       .select(col("id"), col("bin"), col("key"))
     val keys = binKeys.unionByName(shortKeys)
-    // hub cap via a bucket-partitioned window — one PINNED shuffle, no
-    // join. The explicit numbered repartition on the join key is the
-    // Dedup.pinBucketParallelism discipline: the keys frame is a slim
-    // per-doc aggregate, so AQE's size-based coalescing would fold it
+    // hub cap via a bucket-partitioned window — one PINNED shuffle
+    // (Dedup.pinBucketParallelism: AQE would fold the slim keys frame
     // to ~1 partition and put the bucket join's ~fan-out² inside a
-    // one-task stage; REPARTITION_BY_NUM is exempt from coalescing and
-    // the cap window AND the self-join both reuse this one exchange.
-    val pinned = keys.repartition(
-      keys.sparkSession.sessionState.conf.numShufflePartitions,
-      col("bin"), col("key"))
+    // one-task stage), reused by the cap window AND the self-join.
+    val pinned = Dedup.pinBucketParallelism(keys, "bin", "key")
     val capped = pinned.withColumn("__n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("bin", "key")))
       .filter(col("__n") <= maxBucket).drop("__n")
@@ -131,17 +130,16 @@ object Oph {
     val cand = l.join(r, Seq("bin", "key"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    // verify via Dedup.withJaccardOfSets: |a ∩ b| once behind the
+    // verify via Dedup.verifyJaccard: |a ∩ b| once behind the
     // Generate barrier, union by set arithmetic — the round-9 advice finding
     // (threshold predicate re-inlined into the join condition, set ops
     // run 2-3x per candidate) fixed for real this time; interleaved A/B
     // in OPTIMIZATION_r10.md: this verify stage 5.7 → ~1 s at sf0.1.
-    Dedup.withJaccardOfSets(cand
+    Dedup.verifyJaccard(cand
         .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
         .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b"),
-        col("sh_a"), col("sh_b"), "__j")
-      .filter(col("__j") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("__j"), 6).as("jaccard"))
+        threshold)
+      .withColumn("jaccard", round(col("jaccard"), 6))
   }
 
   /** Estimated jaccard from two OPH signatures: matched bins over

@@ -38,22 +38,10 @@ object ProtoPrune {
             dropNum: Int = 1, dropDen: Int = 4): DataFrame = {
     require(dropDen > 0 && dropNum >= 0 && dropNum < dropDen,
       "drop fraction must be in [0, 1)")
-    val c = emb.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm(col("v")))
-    val cents = c.filter(col("id") % centroidEvery === 0)
-      .select(col("id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-    val assigned = {
-      val scored = c.crossJoin(broadcast(cents))
-        .withColumn("__cos",
-          Similarity.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-      val w = Window.partitionBy("id")
-        .orderBy(col("__cos").desc, col("cent_id"))
-      scored.withColumn("__r", row_number().over(w))
-        .filter(col("__r") === 1)
-        .select(col("id"), col("cent_id"), col("__cos").as("cos"))
-    }
+    val c = Similarity.vectors(emb, idCol, vecCol)
+    val assigned = Similarity
+      .cells(c, Similarity.centroids(c, centroidEvery), 1)
+      .select(col("id"), col("cent_id"), col("cell_cos").as("cos"))
     val cell = Window.partitionBy("cent_id")
       .orderBy(col("cos").desc, col("id"))
     assigned

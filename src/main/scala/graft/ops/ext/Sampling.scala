@@ -216,18 +216,6 @@ object Sampling {
       .select(col("draw"), col("k").as(keyCol))
   }
 
-  /** Rendezvous (highest-random-weight) placement audit: keys choose
-    * the node with the max md5(key:node) score; removing one node
-    * must move ONLY that node's keys (~1/n of them) — the
-    * minimal-disruption property that makes rendezvous/consistent
-    * hashing the shard-placement standard over `key mod n` (which
-    * moves ~all keys). The audit assigns every key under n and n−1
-    * nodes (two narrow argmax expressions — no shuffle beyond the
-    * final counts) and reports per-node key counts plus the moved
-    * share. All decisions compare fixed-width md5 hex strings —
-    * engine-portable and RNG-free. Output per node: keys_before,
-    * keys_after, plus the scalar moved_share (6 dp).
-    */
   /** Sensitivity-sampling coreset over an embedding column — the
     * importance-weighted subsample that preserves clustering cost
     * (Feldman–Langberg style): a point's sampling mass is its residual
@@ -251,22 +239,12 @@ object Sampling {
     */
   def sensitivityCoreset(emb: DataFrame, vecCol: String, idCol: String,
       centroidEvery: Int = 50, nDraws: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = emb.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm(col("v")))
-    val cents = c.filter(col("id") % centroidEvery === 0)
-      .select(col("id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-    val w = Window.partitionBy("id")
-      .orderBy(col("__cos").desc, col("cent_id"))
-    val assigned = c.crossJoin(broadcast(cents))
-      .withColumn("__cos",
-        Similarity.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-      .withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
+    val c = Similarity.vectors(emb, idCol, vecCol)
+      .withColumn("id", col("id").cast("long"))
+    val assigned = Similarity
+      .cells(c, Similarity.centroids(c, centroidEvery), 1)
       .select(col("id"), col("cent_id"),
-        (floor((lit(1.0) - col("__cos")) * 1e6 + 0.5) + 1)
+        (floor((lit(1.0) - col("cell_cos")) * 1e6 + 0.5) + 1)
           .cast("long").as("sens"))
     val tot = assigned.agg(sum("sens").as("stot"))
     val picked = systematicResample(assigned, "id", "sens", nDraws)
@@ -279,6 +257,18 @@ object Sampling {
       .orderBy(idCol)
   }
 
+  /** Rendezvous (highest-random-weight) placement audit: keys choose
+    * the node with the max md5(key:node) score; removing one node
+    * must move ONLY that node's keys (~1/n of them) — the
+    * minimal-disruption property that makes rendezvous/consistent
+    * hashing the shard-placement standard over `key mod n` (which
+    * moves ~all keys). The audit assigns every key under n and n−1
+    * nodes (two narrow argmax expressions — no shuffle beyond the
+    * final counts) and reports per-node key counts plus the moved
+    * share. All decisions compare fixed-width md5 hex strings —
+    * engine-portable and RNG-free. Output per node: keys_before,
+    * keys_after, plus the scalar moved_share (6 dp).
+    */
   def rendezvousAudit(df: DataFrame, keyCol: String, nNodes: Int)
       : DataFrame = {
     require(nNodes >= 3)

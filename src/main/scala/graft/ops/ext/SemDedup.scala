@@ -1,7 +1,6 @@
 package graft.ops.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Semantic dedup — the SemDeDup recipe (Abbas et al. 2023,
@@ -31,19 +30,8 @@ object SemDedup {
     */
   def assign(df: DataFrame, vecCol: String, idCol: String,
       centroidEvery: Int): DataFrame = {
-    val vecs = df.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-      .withColumn("nrm", Similarity.l2norm(col("vec")))
-    val cents = df.filter(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"),
-        col(vecCol).cast("array<double>").as("centv"))
-      .withColumn("centnorm", Similarity.l2norm(col("centv")))
-    val scored = vecs.crossJoin(broadcast(cents))
-      .withColumn("__cc", Similarity.dot(col("vec"), col("centv"))
-        / (col("nrm") * col("centnorm")))
-    val w = Window.partitionBy("id").orderBy(col("__cc").desc, col("cent_id"))
-    scored.withColumn("__cr", row_number().over(w))
-      .filter(col("__cr") === 1)
+    val vecs = Similarity.vectors(df, idCol, vecCol)
+    Similarity.cells(vecs, Similarity.centroids(vecs, centroidEvery), 1)
       .select(col("id"), col("cent_id"), col("vec"), col("nrm"))
   }
 
@@ -60,8 +48,7 @@ object SemDedup {
     val dropped = assigned.as("b")
       .join(assigned.as("a"),
         col("a.cent_id") === col("b.cent_id") && col("a.id") < col("b.id"))
-      .filter(Similarity.dot(col("a.vec"), col("b.vec"))
-        / (col("a.nrm") * col("b.nrm")) > tau)
+      .filter(Similarity.cosineOf("a", "b") > tau)
       .select(col("b.id").as("id")).distinct()
     assigned.join(dropped, Seq("id"), "left_anti")
       .select(col("id").as(idCol), col("cent_id"))

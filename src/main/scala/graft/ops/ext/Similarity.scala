@@ -41,6 +41,68 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2norm(a) * l2norm(b))
 
+  /** The normalised-vector frame every cosine operator starts from:
+    * (id, any `carry` columns, vec = `vecCol` as array<double>, nrm =
+    * its [[l2norm]]) — the norm is computed once per row, never once
+    * per pair.
+    */
+  private[graft] def vectors(df: DataFrame, idCol: String, vecCol: String,
+      carry: Column*): DataFrame =
+    df.select((col(idCol).as("id") +: carry :+
+        col(vecCol).cast("array<double>").as("vec")): _*)
+      .withColumn("nrm", l2norm(col("vec")))
+
+  /** Cosine between the rows of two [[vectors]] frames joined under the
+    * aliases `a` and `b`, from their precomputed norms.
+    */
+  private[ext] def cosineOf(a: String, b: String): Column =
+    dot(col(s"$a.vec"), col(s"$b.vec")) / (col(s"$a.nrm") * col(s"$b.nrm"))
+
+  /** The deterministic coarse quantizer: every `every`-th row of a
+    * [[vectors]] frame by id — no RNG, no iterative k-means whose float
+    * reductions would be run-dependent, so cells are reproducible and
+    * SQL-portable.
+    */
+  private[ext] def centroids(v: DataFrame, every: Long): DataFrame =
+    v.filter(col("id") % every === 0)
+
+  /** Nearest-cell assignment: every row of the [[vectors]] frame `side`
+    * paired with its `n` nearest centroids (any [[vectors]]-shaped
+    * frame, usually [[centroids]]) by cosine. Returns `side`'s columns
+    * plus `cent_id`, the cell cosine `cell_cos` and the cell rank
+    * `cell_rank` (1 = nearest, ties to the smaller `cent_id`). The
+    * centroid set is tiny and broadcast; the side is scanned once and
+    * never shuffled against itself.
+    */
+  private[graft] def cells(side: DataFrame, cents: DataFrame,
+      n: Int): DataFrame = {
+    val w = Window.partitionBy(col("id"))
+      .orderBy(col("cell_cos").desc, col("cent_id"))
+    side.crossJoin(broadcast(cents.select(col("id").as("cent_id"),
+        col("vec").as("centv"), col("nrm").as("centnorm"))))
+      .withColumn("cell_cos",
+        dot(col("vec"), col("centv")) / (col("nrm") * col("centnorm")))
+      .withColumn("cell_rank", row_number().over(w))
+      .filter(col("cell_rank") <= n)
+      .drop("centv", "centnorm")
+  }
+
+  /** Per-query cosine top-k over candidate pairs of two [[vectors]]
+    * frames joined under the aliases `c` (corpus) and `q` (queries): a
+    * query never matches its own id, ties break by corpus id. Output
+    * (query_id, rank, corpus_id, cosine).
+    */
+  private def topKByCosine(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("corpus_id"))
+    pairs.filter(col("q.id") =!= col("c.id"))
+      .select(col("c.id").as("corpus_id"), col("q.id").as("query_id"),
+        cosineOf("c", "q").as("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine"))
+  }
+
   /** Random-projection dimensionality reduction, emitted in LONG form
     * (id, proj_dim, value): value[d] = <x, w_d> with deterministic
     * pseudo-random hyperplanes w_d[i] = lehmer(d*dims+i+1)/m - 0.5
@@ -72,23 +134,9 @@ object Similarity {
     * side. Ties break by corpus id for determinism.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
-                     vecCol: String, idCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", l2norm(col("cvec")))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", l2norm(col("qvec")))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("cosine",
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine"))
-  }
+                     vecCol: String, idCol: String, k: Int): DataFrame =
+    topKByCosine(vectors(corpus, idCol, vecCol).as("c")
+      .crossJoin(broadcast(vectors(queries, idCol, vecCol).as("q"))), k)
 
   /** Matryoshka truncation audit: exact top-k overlap between search
     * on the first `d'` dimensions and search on the full vector, per
@@ -140,41 +188,12 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
               idCol: String, k: Int, centroidEvery: Int = 50,
               nprobe: Int = 2): DataFrame = {
-    val c = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("cnorm", l2norm(col("cvec")))
-    val cents = corpus.filter(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"),
-        col(vecCol).cast("array<double>").as("centv"))
-      .withColumn("centnorm", l2norm(col("centv")))
-
-    def nearestCents(side: DataFrame, vec: String, norm: String,
-                     n: Int): DataFrame = {
-      val scored = side.crossJoin(broadcast(cents))
-        .withColumn("__cc", dot(col(vec), col("centv"))
-          / (col(norm) * col("centnorm")))
-      val w = Window.partitionBy(side.columns.head)
-        .orderBy(col("__cc").desc, col("cent_id"))
-      scored.withColumn("__cr", row_number().over(w))
-        .filter(col("__cr") <= n)
-        .drop("centv", "centnorm", "__cc", "__cr")
-    }
-
-    val invested = nearestCents(c, "cvec", "cnorm", 1)
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("qnorm", l2norm(col("qvec")))
-    val probes = nearestCents(q, "qvec", "qnorm", nprobe)
-
-    val scored = invested.join(broadcast(probes), Seq("cent_id"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("cosine",
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine"))
+    val c = vectors(corpus, idCol, vecCol)
+    val cents = centroids(c, centroidEvery)
+    val inverted = cells(c, cents, 1).as("c")
+    val probes = cells(vectors(queries, idCol, vecCol), cents, nprobe).as("q")
+    topKByCosine(inverted.join(broadcast(probes),
+      col("c.cent_id") === col("q.cent_id")), k)
   }
 
   /** Mutual-best-match alignment between two embedding collections —
@@ -197,32 +216,13 @@ object Similarity {
     */
   def mutualBestMatch(a: DataFrame, b: DataFrame, vecCol: String,
       idCol: String, centroidEvery: Int, nprobe: Int): DataFrame = {
-    val av = a.select(col(idCol).as("a_id"),
-      col(vecCol).cast("array<double>").as("avec"))
-      .withColumn("anorm", l2norm(col("avec")))
-    val bv = b.select(col(idCol).as("b_id"),
-      col(vecCol).cast("array<double>").as("bvec"))
-      .withColumn("bnorm", l2norm(col("bvec")))
-    val cents = b.filter(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"),
-        col(vecCol).cast("array<double>").as("centv"))
-      .withColumn("centnorm", l2norm(col("centv")))
-    def cells(side: DataFrame, key: String, vec: String, norm: String,
-        n: Int): DataFrame = {
-      val scored = side.crossJoin(broadcast(cents))
-        .withColumn("__cc",
-          dot(col(vec), col("centv")) / (col(norm) * col("centnorm")))
-      val w = Window.partitionBy(col(key))
-        .orderBy(col("__cc").desc, col("cent_id"))
-      scored.withColumn("__cr", row_number().over(w))
-        .filter(col("__cr") <= n)
-        .drop("centv", "centnorm", "__cc", "__cr")
-    }
-    val scored = cells(av, "a_id", "avec", "anorm", nprobe)
-      .join(cells(bv, "b_id", "bvec", "bnorm", 1), Seq("cent_id"))
-      .select(col("a_id"), col("b_id"),
-        (dot(col("avec"), col("bvec")) / (col("anorm") * col("bnorm")))
-          .as("cosine"))
+    val av = vectors(a, idCol, vecCol)
+    val bv = vectors(b, idCol, vecCol)
+    val cents = centroids(bv, centroidEvery)
+    val scored = cells(av, cents, nprobe).as("a")
+      .join(cells(bv, cents, 1).as("b"), col("a.cent_id") === col("b.cent_id"))
+      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
+        cosineOf("a", "b").as("cosine"))
       .distinct()
       // LAZY cut: scored feeds both direction windows; the blocks
       // persist at first compute inside the caller's single action —
@@ -279,32 +279,13 @@ object Similarity {
   def decontaminationCensus(train: DataFrame, evalSet: DataFrame,
       vecCol: String, idCol: String, threshold: Double,
       centroidEvery: Int = 50, nprobe: Int = 2): DataFrame = {
-    val tv = train.select(col(idCol).as("t_id"),
-      col(vecCol).cast("array<double>").as("tvec"))
-      .withColumn("tnorm", l2norm(col("tvec")))
-    val ev = evalSet.select(col(idCol).as("e_id"),
-      col(vecCol).cast("array<double>").as("evec"))
-      .withColumn("enorm", l2norm(col("evec")))
-    val cents = train.filter(col(idCol) % centroidEvery === 0)
-      .select(col(idCol).as("cent_id"),
-        col(vecCol).cast("array<double>").as("centv"))
-      .withColumn("centnorm", l2norm(col("centv")))
-    def cells(side: DataFrame, key: String, vec: String, norm: String,
-        n: Int): DataFrame = {
-      val scored = side.crossJoin(broadcast(cents))
-        .withColumn("__cc",
-          dot(col(vec), col("centv")) / (col(norm) * col("centnorm")))
-      val w = Window.partitionBy(col(key))
-        .orderBy(col("__cc").desc, col("cent_id"))
-      scored.withColumn("__cr", row_number().over(w))
-        .filter(col("__cr") <= n)
-        .drop("centv", "centnorm", "__cc", "__cr")
-    }
-    val top1 = cells(ev, "e_id", "evec", "enorm", nprobe)
-      .join(cells(tv, "t_id", "tvec", "tnorm", 1), Seq("cent_id"))
-      .select(col("e_id"), col("t_id"),
-        (dot(col("evec"), col("tvec")) / (col("enorm") * col("tnorm")))
-          .as("cosine"))
+    val tv = vectors(train, idCol, vecCol)
+    val ev = vectors(evalSet, idCol, vecCol)
+    val cents = centroids(tv, centroidEvery)
+    val top1 = cells(ev, cents, nprobe).as("e")
+      .join(cells(tv, cents, 1).as("t"), col("e.cent_id") === col("t.cent_id"))
+      .select(col("e.id").as("e_id"), col("t.id").as("t_id"),
+        cosineOf("e", "t").as("cosine"))
       .distinct()
       .groupBy("e_id")
       .agg(max(col("cosine")).as("top1"))
@@ -363,23 +344,12 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
               idCol: String, k: Int, bits: Int = 8): DataFrame = {
-    val c = corpus.select(col(idCol).as("corpus_id"),
-      col(vecCol).cast("array<double>").as("cvec"))
-      .withColumn("bucket", lshBucket(col("cvec"), bits))
-      .withColumn("cnorm", l2norm(col("cvec")))
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qvec"))
-      .withColumn("bucket", lshBucket(col("qvec"), bits))
-      .withColumn("qnorm", l2norm(col("qvec")))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .withColumn("cosine",
-        dot(col("cvec"), col("qvec")) / (col("cnorm") * col("qnorm")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("corpus_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("corpus_id"), col("cosine"))
+    def bucketed(df: DataFrame): DataFrame = vectors(df, idCol, vecCol)
+      .select(col("id"), col("vec"), lshBucket(col("vec"), bits).as("bucket"),
+        col("nrm"))
+    topKByCosine(bucketed(corpus).as("c")
+      .join(broadcast(bucketed(queries).as("q")),
+        col("c.bucket") === col("q.bucket")), k)
   }
 
   /** Embedding anisotropy (Ethayarajh 2019): the mean pairwise cosine

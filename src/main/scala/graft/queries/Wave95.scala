@@ -157,22 +157,10 @@ object Wave95Queries {
     */
   def q474(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.ext.Similarity
-    import org.apache.spark.sql.expressions.Window
-    val c = T(s, dir, "embeddings").select(
-        col("vec_id").cast("long").as("id"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", Similarity.l2norm(col("v")))
+    val c = Similarity.vectors(T(s, dir, "embeddings"), "vec_id", "embedding")
+      .withColumn("id", col("id").cast("long"))
       .withColumn("is_new", col("id") % 5 === 0)
-    val cents = c.filter(col("id") % 50 === 1)
-      .select(col("id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-    val w = Window.partitionBy("id")
-      .orderBy(col("__cos").desc, col("cent_id"))
-    val assigned = c.crossJoin(broadcast(cents))
-      .withColumn("__cos",
-        Similarity.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-      .withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
+    val assigned = Similarity.cells(c, c.filter(col("id") % 50 === 1), 1)
     val cells = assigned.groupBy("cent_id")
       .agg(sum(when(col("is_new"), 0L).otherwise(1L)).as("n_base"),
         sum(when(col("is_new"), 1L).otherwise(0L)).as("n_new"))

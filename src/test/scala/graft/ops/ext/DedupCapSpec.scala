@@ -101,4 +101,26 @@ class DedupCapSpec extends AnyFunSuite {
     assert(comp.values.toSet.size == 1, "flood cluster must stay connected")
     info(f"flood n=$n -> ${out.length} pairs in $sec%.1f s")
   }
+
+  test("Oph.nearDups drops an oversized hub whole; hammingNearDups stars it") {
+    val n = 300
+    // n identical texts: every OPH bin key and shingle key of the flood
+    // is a hub of n > maxBucket members; the lone pair outside it keys
+    // its own two-member buckets
+    val boiler = "the same boilerplate page text repeated on every mirror"
+    val unrelated = "quite different words about an unrelated subject entirely"
+    val docs = ((1 to n).map(i => (i.toLong, boiler)) ++
+      Seq((900001L, unrelated), (900002L, unrelated))).toDF("doc_id", "text")
+    val oph = Oph.nearDups(docs, "text", "doc_id", maxBucket = 100)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(oph.toSeq == Seq((900001L, 900002L)), "the hub must be dropped")
+    // the same flood as fingerprints: the Dedup cap keeps it connected
+    // as a star around the minimal member
+    val fp = (1 to n).map(i => (i.toLong, 0x5a5a5a5a5a5a5a5aL))
+      .toDF("id", "fp")
+    val ham = Dedup.hammingNearDups(fp, "fp", "id",
+        maxHamming = 3, bands = 8, maxBucket = 100)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(ham.sorted.toSeq == (2 to n).map(i => (1L, i.toLong)))
+  }
 }
