@@ -28,6 +28,30 @@ import org.apache.spark.sql.SparkSession
   *    build-side memory stays bounded at any scale. Measured at sf0.1
   *    (round 9): join-heavy stats/graph queries ~5–10% faster, none
   *    slower.
+  *  - generated code compiled once per JVM. Spark caches the classes it
+  *    compiles (Janino) in one JVM-wide cache keyed by the context
+  *    classloader and the Java source; three settings let a repeated
+  *    query find its classes there (`CodegenReuseSpec` holds it):
+  *     - `spark.sql.codegen.cache.maxEntries` = 2000. The default of 100
+  *       is smaller than one `query_mix` pass (about 220 classes, 260
+  *       with stage ids in class names; q13 alone ~80–110), so every
+  *       pass evicted the previous one and compiled ~260 classes again
+  *       (local[4], sf0.01, Spark's own compile count). Measured on all
+  *       474 queries at sf0.01 from an empty cache: median 27 classes
+  *       per query, p90 55, max 132 (q44); the whole suite ~6,150, ~295 MB
+  *       (source text and classes, ~47 KB each). 2000 holds several
+  *       passes of any one workload for at most ~95 MB. It is a static
+  *       conf, read once per JVM when the code generator first loads,
+  *       so it belongs here and nowhere later.
+  *     - `spark.sql.artifact.isolation.enabled` = false. With isolation
+  *       each session, and the session clone every streaming query runs
+  *       in, gets its own executor classloader, so byte-identical code
+  *       missed the cache (q177: 24 classes on every run). graft adds
+  *       no session artifacts (jars, files), so sharing loses nothing.
+  *     - `spark.sql.codegen.useIdInClassName` = false. AQE numbers
+  *       whole-stage codegen stages in the order it plans them, which
+  *       varies run to run; with the number in the class name the same
+  *       stage code was a new class (q109: 4, q13: 2–4 per repeat).
   */
 object Sessions {
   def builder(cpus: String): SparkSession.Builder =
@@ -35,6 +59,9 @@ object Sessions {
       .withExtensions(new graft.expr.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")

@@ -1,4 +1,5 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -25,28 +26,20 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // one `"name": "sql"` pair per query, every string escaped by
+    // Jackson (quotes, backslashes, control characters)
+    val mapper = new ObjectMapper()
+    def obj(m: Map[String, String]): String = m.map { case (k, v) =>
+      s"${mapper.writeValueAsString(k)}: ${mapper.writeValueAsString(v)}"
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql))
     // sf1-tier invariant oracles (linear DuckDB checks over the engine
     // output + raw tables; zero rows = pass) — consumed by
     // scripts/check_sf1_run.py for the queries whose full oracles are
     // quadratic at the 10x step
-    val inv = graft.queries.Sf1Invariants.sql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/sf1_invariants.json"), inv)
+    Files.writeString(Paths.get(s"$outDir/sf1_invariants.json"),
+      obj(graft.queries.Sf1Invariants.sql))
     spark.stop()
   }
 }

@@ -1054,8 +1054,8 @@ object TxLog {
       s"version $v does not exist in $table")
     val f = fs(table)
     f.mkdirs(new HPath(table, "_log/tags"))
-    writeString(f, tagPath(table, tag),
-      s"""{"tag":"$tag","version":$v}""")
+    writeString(f, tagPath(table, tag), json.writeValueAsString(
+      json.createObjectNode().put("tag", tag).put("version", v)))
     v
   }
 

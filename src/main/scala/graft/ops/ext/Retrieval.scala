@@ -42,10 +42,12 @@ object Retrieval {
       sum(col("dl").cast("long")).as("sum_dl"),
       count(lit(1)).as("n_docs"))
 
-    // postings restricted to the query terms BEFORE the shuffle
+    // postings restricted to the query terms BEFORE the shuffle: a row
+    // filter after the explode, so the tf projection stays in
+    // whole-stage codegen (a higher-order array filter would not)
     val tf = withLen
-      .select(col("doc_id"), col("dl"),
-        explode(filter(col("toks"), t => t.isInCollection(query))).as("term"))
+      .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+      .filter(col("term").isInCollection(query))
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
 
@@ -109,9 +111,8 @@ object Retrieval {
       sum(col("dl").cast("long")).as("sum_dl"),
       count(lit(1)).as("n_docs"))
     val tf = withLen
-      .select(col("doc_id"), col("dl"),
-        explode(filter(col("toks"), t => t.isInCollection(allTerms)))
-          .as("term"))
+      .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+      .filter(col("term").isInCollection(allTerms))
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("dfreq"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom stateful streaming (SURVEY §2.11's extension surface):
@@ -132,6 +133,14 @@ object Stateful {
   case class MgState(counters: Map[Long, Long])
   case class MgCounter(key: String, item: Long, est: Long)
 
+  /** Encoders of the map-holding states, built once per JVM. An encoder
+    * numbers its map's lambda variables from a JVM-wide counter, so one
+    * derived per call generated (and compiled) a new state serializer on
+    * every run of the same query. They are `ExpressionEncoder`s because
+    * Spark derives a fresh one from an `Encoders.product` on each use.
+    */
+  private val mgStateEncoder: Encoder[MgState] = ExpressionEncoder[MgState]()
+
   def updateMisraGries(m: Int)(key: String, events: Iterator[KeyedItem],
       state: GroupState[MgState]): Iterator[MgCounter] = {
     var c = state.getOption.map(_.counters).getOrElse(Map.empty[Long, Long])
@@ -152,7 +161,8 @@ object Stateful {
     import spark.implicits._
     events.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout())(updateMisraGries(m))
+        GroupStateTimeout.NoTimeout())(updateMisraGries(m))(
+        mgStateEncoder, implicitly[Encoder[MgCounter]])
   }
 
   /** Streaming latest-wins upsert (CDC materialization): per key, keep
@@ -235,6 +245,7 @@ object Stateful {
   case class LbState(totals: Map[Long, Long], version: Long)
   case class LbRow(key: String, version: Long, rank: Long,
       user_id: Long, total: Long)
+  private val lbStateEncoder: Encoder[LbState] = ExpressionEncoder[LbState]()
 
   def updateLeaderboard(k: Int)(key: String,
       events: Iterator[ValueEvent],
@@ -259,7 +270,8 @@ object Stateful {
     import spark.implicits._
     events.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout())(updateLeaderboard(k))
+        GroupStateTimeout.NoTimeout())(updateLeaderboard(k))(
+        lbStateEncoder, implicitly[Encoder[LbRow]])
   }
 
   // --------------------------------------------------- histogram state
@@ -273,6 +285,8 @@ object Stateful {
   case class HistState(counts: Map[Int, Long], version: Long)
   case class HistRow(key: String, version: Long, n: Long,
       p50_bucket: Long, p90_bucket: Long)
+  private val histStateEncoder: Encoder[HistState] =
+    ExpressionEncoder[HistState]()
 
   def updateHistogram(nBuckets: Int)(key: String,
       events: Iterator[ValueEvent],
@@ -305,7 +319,8 @@ object Stateful {
     import spark.implicits._
     events.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout())(updateHistogram(nBuckets))
+        GroupStateTimeout.NoTimeout())(updateHistogram(nBuckets))(
+        histStateEncoder, implicitly[Encoder[HistRow]])
   }
 
   // ------------------------------------------------------ conversions

@@ -123,4 +123,20 @@ class TxLogFormatSpec extends AnyFunSuite {
     val got = logFiles(t)
     assert(got == expected, got.mkString("\n"))
   }
+
+  test("a tag name with a quote and a backslash is escaped in its file") {
+    val t = Files.createTempDirectory("graft_txfmt").resolve("t").toString
+    val tag = "rel \"1\" \\ final"
+    TxLog.commit(spark, t, Seq((1L, "s1")).toDF("k", "s"), targetFiles = 1)
+    TxLog.tagCreate(t, tag)
+    val got = logFiles(t).filter(_._1.startsWith("tags/"))
+    assert(got == Seq(
+      s"tags/.$tag.json.crc" -> "crc-ok",
+      s"tags/$tag.json" -> """{"tag":"rel \"1\" \\ final","version":1}"""),
+      got.mkString("\n"))
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(got(1)._2)
+    assert(parsed.get("tag").asText == tag)
+    assert(TxLog.tags(t) == Map(tag -> 1))
+  }
 }

@@ -35,6 +35,31 @@ class Wave4OpsSpec extends AnyFunSuite {
     assert(byId(4L) > byId(1L)) // rare-term doc outranks common-term docs
   }
 
+  test("bm25 postings explode and filter inside whole-stage codegen") {
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec,
+      InputAdapter, SparkPlan, WholeStageCodegenExec}
+    val docs = Seq((1L, "spark fast engine"), (2L, "query spark"),
+      (3L, "nothing here")).toDF("doc_id", "text")
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case o => o.children.flatMap(stage)
+    })
+    Seq(Retrieval.bm25TopK(docs, "text", "doc_id", Seq("spark", "query")),
+      Retrieval.bm25TopKMulti(docs, "text", "doc_id",
+        Seq(1L -> Seq("spark"), 2L -> Seq("query", "engine")))).foreach { df =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val codegen = graft.PlanWalk.collectAll(plan)(
+        _.isInstanceOf[WholeStageCodegenExec]).flatMap(stage)
+      val gens = graft.PlanWalk.collectAll(plan)(_.isInstanceOf[GenerateExec])
+      assert(gens.nonEmpty, plan.treeString)
+      gens.foreach(g => assert(codegen.exists(_ eq g), plan.treeString))
+      assert(codegen.exists { case f: FilterExec =>
+        f.child.isInstanceOf[GenerateExec]; case _ => false },
+        plan.treeString)
+    }
+  }
+
   // ------------------------------------------------------ WebUrl
   test("normalize canonicalizes case, www, default port, params, fragment") {
     val cases = Seq(
