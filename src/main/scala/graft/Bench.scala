@@ -91,12 +91,12 @@ object Bench {
     // -- per-query timings: min/median of N, -1 sentinel on failure ----
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Either[String, Double] =
-      try {
+      // each timed run starts with nothing cached or checkpointed
+      try graft.exec.Scope.run(spark) {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
-      finally spark.catalog.clearCache() // each timed run starts uncached
 
     def loadavg(): String =
       try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)

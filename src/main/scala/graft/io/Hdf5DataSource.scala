@@ -3,6 +3,8 @@ package graft.io
 import graft.io.Hdf5Format._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -12,6 +14,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import java.util
 import scala.jdk.CollectionConverters._
@@ -35,6 +38,10 @@ import scala.jdk.CollectionConverters._
   *
   * Options: `rowsPerPartition` (explicit split size override),
   * `targetBytes` (default 128 MiB per partition).
+  *
+  * Files are opened with the session's Hadoop configuration
+  * (`spark.hadoop.*` and runtime `fs.*` settings included): on the
+  * driver directly, in the readers through one broadcast copy.
   */
 class Hdf5DataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "hdf5"
@@ -42,8 +49,8 @@ class Hdf5DataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val files = Hdf5DataSource.resolvePaths(options)
     require(files.nonEmpty, "hdf5: no input files")
-    val conf = new Configuration()
-    val meta = Hdf5DataSource.withIn(files.head, conf)(parseMeta)
+    val meta =
+      Hdf5DataSource.withIn(files.head, Hdf5DataSource.sessionConf())(parseMeta)
     Hdf5Source.schemaForMeta(meta)
   }
 
@@ -54,6 +61,10 @@ class Hdf5DataSource extends TableProvider with DataSourceRegister {
 }
 
 object Hdf5DataSource {
+  /** The active session's Hadoop configuration (driver side). */
+  def sessionConf(): Configuration =
+    SparkSession.active.sessionState.newHadoopConf()
+
   /** Paths arrive as option "path" (single) or "paths" (JSON string
     * array, DataFrameReader's multi-path form); globs expand via the
     * Hadoop FS.
@@ -62,7 +73,7 @@ object Hdf5DataSource {
     val raw: Seq[String] =
       Option(options.get("paths")).map(parseJsonStringArray)
         .getOrElse(Option(options.get("path")).toSeq)
-    val conf = new Configuration()
+    val conf = sessionConf()
     raw.flatMap { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
@@ -149,8 +160,9 @@ class Hdf5Scan(required: StructType, files: Seq[String],
   override def description(): String =
     s"hdf5 scan (${required.fieldNames.mkString(",")})"
 
+  private lazy val conf = Hdf5DataSource.sessionConf()
+
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = new Configuration()
     files.flatMap { f =>
       val meta = Hdf5DataSource.withIn(f, conf)(parseMeta)
       val used =
@@ -178,15 +190,17 @@ class Hdf5Scan(required: StructType, files: Seq[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new Hdf5PartitionReaderFactory(required)
+    new Hdf5PartitionReaderFactory(required, SparkSession.active.sparkContext
+      .broadcast(new SerializableConfiguration(conf)))
 }
 
-class Hdf5PartitionReaderFactory(required: StructType)
+class Hdf5PartitionReaderFactory(required: StructType,
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[Hdf5InputPartition]
-    new Hdf5PartitionReader(p, required)
+    new Hdf5PartitionReader(p, required, conf.value.value)
   }
 }
 
@@ -194,10 +208,10 @@ class Hdf5PartitionReaderFactory(required: StructType)
   * materialized once (bounded by the planner's target partition size),
   * then streamed out as InternalRows.
   */
-class Hdf5PartitionReader(p: Hdf5InputPartition, required: StructType)
-    extends PartitionReader[InternalRow] {
+class Hdf5PartitionReader(p: Hdf5InputPartition, required: StructType,
+    conf: Configuration) extends PartitionReader[InternalRow] {
   private val decoded: Seq[H5Dataset] =
-    Hdf5DataSource.withIn(p.path, new Configuration()) { in =>
+    Hdf5DataSource.withIn(p.path, conf) { in =>
       val meta = parseMeta(in)
       required.fields.toSeq.map { f =>
         val m = meta.find(_.name == f.name).getOrElse(

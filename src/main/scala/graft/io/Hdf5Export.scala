@@ -1,9 +1,9 @@
 package graft.io
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Distributed HDF5 export: one HDF5 file PER PARTITION, written by the
   * task that holds the partition — the many-files scale path for S11/X6
@@ -52,7 +52,12 @@ object Hdf5Export {
     val fields = df.schema.fields
     val kinds = fields.map(dtypeFor) // validates the schema up front
     val names = fields.map(_.name)
-    val fs = new HPath(dir).getFileSystem(new Configuration())
+    // the session's Hadoop settings, on the driver and (one broadcast
+    // copy) in every task
+    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
+    val conf = df.sparkSession.sparkContext
+      .broadcast(new SerializableConfiguration(hadoopConf))
+    val fs = new HPath(dir).getFileSystem(hadoopConf)
     fs.mkdirs(new HPath(dir))
     val written = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
       val nCols = kinds.length
@@ -97,7 +102,7 @@ object Hdf5Export {
             if (isArr) Seq(n, widths(c).max(0)) else Seq(n), data)
         }
         val bytes = Hdf5Writer.encode(dss)
-        val f = new HPath(dir).getFileSystem(new Configuration())
+        val f = new HPath(dir).getFileSystem(conf.value.value)
         val target = new HPath(dir, f"part-$pid%05d.h5")
         val tmp = new HPath(dir,
           f".part-$pid%05d.${System.nanoTime().toHexString}.tmp")

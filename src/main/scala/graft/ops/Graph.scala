@@ -172,10 +172,7 @@ object Graph {
     * deterministic and the job finite (same contract as [[kCorePeel]]).
     * Each round is one triangle enumeration over the SHRINKING survivor
     * set — the degree-ordered O(m^1.5) kernel, never an all-pairs
-    * surface — and the survivor set is `localCheckpoint`ed per round so
-    * the plan tree stays round-deep, not round-exponential (triangle
-    * enumeration references its input three times; without the cut the
-    * lineage would triple each round).
+    * surface — cut per round by [[Iterate.rounds]].
     */
   def trussPeel(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1 && rounds <= 8)
@@ -194,15 +191,12 @@ object Graph {
         .select(col("a"), col("b"),
           coalesce(col("c"), lit(0L)).as("support"))
     }
-    // LAZY checkpoints for the intermediate rounds (plan stays
-    // round-deep, zero driver jobs spent materializing), ONE eager on
-    // the last survivor set — the final support() pass reads its input
-    // three times, so the last frame is worth materialized blocks. All
-    // earlier rounds execute inside that single eager job.
-    var e = canonEdges(edges).localCheckpoint(false)
-    for (r <- 1 to rounds)
-      e = support(e).where(col("support") >= lit(k - 2))
-        .select("a", "b").localCheckpoint(r == rounds)
+    def peel(e: DataFrame): DataFrame =
+      support(e).where(col("support") >= lit(k - 2)).select("a", "b")
+    // the final support() pass reads the last survivor set three times,
+    // so that one frame is materialized eagerly
+    val e = peel(Iterate.rounds(canonEdges(edges).localCheckpoint(false),
+      rounds - 1)(peel)).localCheckpoint(true)
     support(e).select(col("a").as("src"), col("b").as("dst"),
       col("support"), (col("support") >= lit(k - 2)).as("in_truss"))
   }
@@ -224,24 +218,15 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-    // LAZY localCheckpoint per round: sym_r is referenced THREE times by
-    // round r+1 (the degree aggregate plus both membership joins), so an
-    // untruncated lineage triples per round — O(3^r) logical plan nodes
-    // (exchange reuse kept execution alive at toy scale, but analysis
-    // cost and the 10× step's ratio both grew with it; q159's sf1 ratio
-    // was the round-9 record's worst graph scaler at 9.1). The
-    // checkpoint pins each round to one LogicalRDD; all rounds still
-    // execute inside the caller's single action.
-    var sym = e.select(col("a").as("node"), col("b").as("nbr"))
+    val sym0 = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(e.select(col("b").as("node"), col("a").as("nbr")))
       .localCheckpoint(false)
-    for (_ <- 1 to rounds) {
+    val sym = Iterate.rounds(sym0, rounds) { sym =>
       val alive = sym.groupBy("node").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select("node")
-      sym = sym.join(alive, Seq("node"))
+      sym.join(alive, Seq("node"))
         .join(alive.withColumnRenamed("node", "nbr"), Seq("nbr"))
         .select("node", "nbr")
-        .localCheckpoint(false)
     }
     sym.groupBy("node").agg(count(lit(1)).as("deg"))
       .select(col("node"), col("deg"), (col("deg") >= k).as("in_core"))
@@ -459,21 +444,16 @@ object Graph {
   def hits(edges: DataFrame, rounds: Int,
            scale: Long = 1000000000000L): DataFrame = {
     require(rounds >= 1 && rounds <= 20)
-    // the edge frame feeds 2 gathers per round and the max() scalar of
-    // each normalization triggers its own job — persist it (and each
-    // round's gather output) or every scalar re-derives the whole
-    // upstream lineage, turning r rounds into O(r²) recomputes
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
+    // the edge frame feeds 2 gathers per round and each half-round's
+    // max() scalar — cut it (and each half-round's gather, read by the
+    // scalar and the normalization) or every consumer re-derives the
+    // whole upstream lineage, turning r rounds into O(r²) recomputes
+    val e = edges.select(col("src"), col("dst")).distinct()
+      .localCheckpoint(false)
     val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
+      .union(e.select(col("dst").as("node"))).distinct()
+      .localCheckpoint(false)
     def maxNorm(raw: DataFrame, c: String): DataFrame = {
-      // LAZY checkpoint: truncates the plan (r is referenced twice —
-      // the max() scalar and the normalization probe) without spending
-      // a driver job per half-round; the whole round chain materializes
-      // inside the ONE eager checkpoint at the end, where the shared
-      // shuffle under both consumers runs once. The eager form cost 2
-      // jobs per half-round (materialize + max), ~4r scheduler
-      // round-trips per call at toy scale for the same data work.
       val r = raw.localCheckpoint(false)
       val mx = r.agg(max(col(c)).as("mx"))
       // mx is a 1-row scalar; no hint needed — AQE broadcasts it
@@ -499,14 +479,11 @@ object Graph {
           .groupBy(col("src").as("node")).agg(sum("auth").as("hub")),
         "hub")
     }
-    val out = nodes
+    nodes
       .join(hub.withColumnRenamed("hub", "h"), Seq("node"), "left")
       .join(auth.withColumnRenamed("auth", "a"), Seq("node"), "left")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub"),
         coalesce(col("a"), lit(0L)).as("auth"))
-      .localCheckpoint()
-    e.unpersist(); nodes.unpersist()
-    out
   }
 
   /** Personalized PageRank: the restart mass lands ONLY on the seed
@@ -521,34 +498,26 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iterations: Int, scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && iterations <= 50)
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
+    val e = edges.select(col("src"), col("dst")).distinct()
+      .localCheckpoint(false)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .union(seeds.select(col("node"))).distinct().persist()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
+      .union(seeds.select(col("node"))).distinct().localCheckpoint(false)
     val seed = seeds.select(col("node")).distinct()
-      .withColumn("is_seed", lit(true)).persist()
+      .withColumn("is_seed", lit(true)).localCheckpoint(false)
     val nSeeds = seed.count()
     require(nSeeds > 0, "personalizedPageRank needs a non-empty seed set")
     val base = 15L * scale / 100 / nSeeds
-    var ranks = nodes.join(seed, Seq("node"), "left")
+    val ranks0 = nodes.join(seed, Seq("node"), "left")
       .select(col("node"),
         when(col("is_seed"), lit(scale / nSeeds)).otherwise(lit(0L))
           .as("rank"))
-    // out-degree is loop-invariant: join it onto the edge frame ONCE
-    // and persist — each round then runs one join instead of two
-    val eDeg = e.join(outdeg, "src").persist()
-    // localCheckpoint per round (the [[hits]] idiom): plan depth stays
-    // O(1) however high `iterations` goes — without it each round's
-    // plan embeds every prior round's joins and Catalyst cost grows
-    // O(r²) in analysis alone. LAZY for the intermediate rounds (each
-    // rank frame has exactly one downstream consumer, so nothing is
-    // recomputed) and EAGER only for the last: the whole loop then
-    // executes as ONE job instead of one per round — the per-round
-    // driver round-trips were the dominant cost at gate scale — and the
-    // eager final materialization must land BEFORE the persisted
-    // e/nodes/outdeg frames are released below.
-    for (i <- 1 to iterations) {
+    // out-degree is loop-invariant: join it onto the edge frame ONCE —
+    // each round then runs one join instead of two
+    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint(false)
+    val eDeg = e.join(outdeg, "src").localCheckpoint(false)
+    Iterate.rounds(ranks0, iterations) { ranks =>
       val contribs = eDeg
         // rank-0 nodes contribute exactly 0 to every neighbor (and the
         // downstream coalesce already maps "no contribution" to 0), so
@@ -558,16 +527,12 @@ object Graph {
           .withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("sum_c"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
+      nodes.join(contribs, Seq("node"), "left")
         .join(seed, Seq("node"), "left")
         .select(col("node"),
           (when(col("is_seed"), lit(base)).otherwise(lit(0L))
             + expr("85 * coalesce(sum_c, 0L) div 100")).as("rank"))
-        .localCheckpoint(i == iterations)
     }
-    e.unpersist(); nodes.unpersist(); outdeg.unpersist(); seed.unpersist()
-    eDeg.unpersist()
-    ranks
   }
 
   /** Bounded multi-source BFS: exact hop distance from the seed set,
@@ -585,41 +550,35 @@ object Graph {
     * broadcast of a node-count-sized frame OOMs the driver at 100×.
     * The frontier join shuffles on src (edge partitioning reused
     * across hops); AQE still picks a broadcast join at runtime for the
-    * early hops where the frontier is genuinely small. The per-hop
-    * convergence probe is the frontier `count()` that the persist
-    * needs anyway — one job per hop, not two. All per-hop frames are
-    * unpersisted before return (the result is materialized via
-    * `localCheckpoint`, so freeing its parents is safe).
+    * early hops where the frontier is genuinely small.
     */
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
+    val e = edges.select(col("src"), col("dst")).distinct()
+      .localCheckpoint(false)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .union(seeds.select(col("node"))).distinct().persist()
-    val out = bfsDistancesOn(e, nodes, seeds, maxHops)
-    e.unpersist(); nodes.unpersist()
-    out
+      .union(seeds.select(col("node"))).distinct().localCheckpoint(false)
+    bfsDistancesOn(e, nodes, seeds, maxHops)
   }
 
   /** [[bfsDistances]] over CALLER-prepared frames: `e` must be the
     * distinct (src, dst) edge set and `nodes` the node universe, both
-    * ideally persisted by the caller — so a query running BFS twice
+    * ideally checkpointed by the caller — so a query running BFS twice
     * over the same graph (e.g. a bow-tie census, forward + backward)
-    * builds and caches the graph once. Reversing direction is a
-    * column swap on the SAME persisted `e` (cache hit), not a rebuild.
+    * builds the graph once. Reversing direction is a column swap on the
+    * SAME `e`, not a rebuild.
+    *
+    * Each hop cuts its two frames (frontier, settled) lazily, the
+    * [[Iterate]] cadence: every hop references its predecessor twice
+    * (frontier join + settled anti-join). The result is materialized
+    * EAGERLY, so the traversal runs in the calling thread — q296 runs
+    * its two directions from two threads and needs the work done there,
+    * not in its final action.
     */
   def bfsDistancesOn(e: DataFrame, nodes: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30)
-    // LAZY localCheckpoint per hop: the plan is truncated immediately
-    // (each hop references its predecessor TWICE — frontier join +
-    // settled anti-join — so an unchecked lineage doubles per hop),
-    // but NO job runs per hop: all rounds execute inside the single
-    // eager checkpoint at the end. The old per-hop count() probe cost
-    // 2 jobs/hop (16 jobs for a 4-hop bow-tie census); with the
-    // bounded hop budgets every caller uses, a trailing empty
-    // frontier costs one empty-join stage, not a driver round-trip.
     var settled = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(false)
     var frontier = settled
@@ -634,8 +593,6 @@ object Graph {
       settled = settled.unionByName(next).localCheckpoint(false)
       frontier = next
     }
-    // ONE eager materialization — callers may unpersist their shared
-    // e/nodes right after this returns
     nodes.join(settled, Seq("node"), "left")
       .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
       .localCheckpoint()
@@ -644,34 +601,29 @@ object Graph {
   def pageRank(edges: DataFrame, iterations: Int,
                scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1 && iterations <= 50)
-    // e is referenced once per iteration and nodes twice — persist, or
-    // an expensive edge build (q252's token self-join) re-runs every
-    // round inside the single final action
-    val e = edges.select(col("src"), col("dst")).distinct().persist()
+    // e and outdeg are read once per iteration and nodes twice — cut
+    // them, or an expensive edge build (q252's token self-join) re-runs
+    // every round inside the single final action
+    val e = edges.select(col("src"), col("dst")).distinct()
+      .localCheckpoint(false)
     val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
+      .union(e.select(col("dst").as("node"))).distinct()
+      .localCheckpoint(false)
+    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint(false)
     val n = nodes.count()
     val base = 15L * scale / 100 / n
-    var ranks = nodes.withColumn("rank", lit(scale / n))
-    // localCheckpoint per round (the [[hits]] idiom) — bounded plan
-    // depth at any iteration count; LAZY except the last round, so the
-    // whole loop runs as ONE job and the final eager materialization
-    // lands before e/nodes/outdeg are unpersisted (see
-    // [[personalizedPageRank]]).
-    for (i <- 1 to iterations) {
+    Iterate.rounds(nodes.withColumn("rank", lit(scale / n)), iterations) {
+        ranks =>
       val contribs = e
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .join(outdeg, "src")
         .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
         .groupBy("node").agg(sum("c").as("sum_c"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
+      nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + expr("85 * coalesce(sum_c, 0L) div 100")).as("rank"))
-        .localCheckpoint(i == iterations)
     }
-    e.unpersist(); nodes.unpersist(); outdeg.unpersist()
-    ranks
   }
 
   /** Newman modularity of a node partition: Q = Σ_c (m_c/m −
@@ -695,9 +647,8 @@ object Graph {
     * shuffle.
     */
   def modularity(edges: DataFrame, communities: DataFrame): DataFrame = {
-    // EAGER localCheckpoint, not persist/unpersist: the returned frame
-    // is lazy, so an unpersist-before-return would evict e before the
-    // caller's action; the m-count is the materializing consumer.
+    // EAGER: the m count below reads e once and the caller's action
+    // again, so one job materializes it for both
     val e = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -725,12 +676,11 @@ object Graph {
           - (col("d_c").cast("double") / lit(2.0 * m))
             * (col("d_c").cast("double") / lit(2.0 * m))) * lit(1e9)
           + lit(0.5)).cast("long").as("qt"))
-    val out = terms.agg(count(lit(1)).as("n_communities"),
+    terms.agg(count(lit(1)).as("n_communities"),
         sum("m_c").as("intra_edges"), sum("qt").as("sq"))
       .select(lit(m).as("n_edges"), col("n_communities"),
         col("intra_edges"),
         round(col("sq").cast("double") / lit(1e9), 6).as("modularity"))
-    out
   }
 
   /** Onion (layer) decomposition: iterative minimum-degree peel where
@@ -748,10 +698,8 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-    // eager localCheckpoint EVERY round: sym_r references sym_{r-1}
-    // twice (directly and inside the peel set's degree agg), so an
-    // unchecked lineage doubles per round - O(2^r) plan nodes, driver
-    // OOM rendering the tree long before any data moves
+    // each round's minimum degree is a driver pick, so every round's
+    // frames are materialized EAGERLY (the [[Iterate]] cut, made eager)
     var sym = e.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(e.select(col("b").as("node"), col("a").as("nbr")))
       .localCheckpoint()

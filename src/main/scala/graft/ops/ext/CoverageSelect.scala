@@ -51,9 +51,7 @@ object CoverageSelect {
         covered = covered
           .unionByName(toks.filter(col("id") === id).select(col("w")))
           .distinct()
-          // LAZY cut: next round's winner collect materializes it —
-          // an eager cut spent one extra job per greedy round
-          .localCheckpoint(false)
+          .localCheckpoint(false) // next round's winner collect reads it
       }
     }
     picks.toSeq.toDF("round", "id", "new_elements", "total_covered")

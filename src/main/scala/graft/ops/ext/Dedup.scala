@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.ops.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -161,7 +162,7 @@ object Dedup {
     * same value as size(filter(split(lower(text)))) on the raw text.
     */
   private[ext] def prepTokenCount: Column =
-    size(filter(col("__toks"), t => length(t) > 0))
+    size(array_remove(col("__toks"), ""))
 
   /** Containment near-dup pairs — the ASYMMETRIC dedup signal (doc A
     * wholesale-included in doc B: quotes, mirrors, supersets — pairs
@@ -506,15 +507,10 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter > 0)
-    // symmetric edge list; labels LOCALCHECKPOINT per iteration — an
-    // iterative self-join doubles the plan tree every round, so bare
-    // persist still carries (and eventually OOMs on) an exponentially
-    // growing lineage; the checkpoint truncates it to the materialized
-    // blocks (the standard Spark iterative-algorithm idiom)
     val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(true)
-    var labels = sym.select(col("src").as("id")).distinct()
+    val labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint(true)
     // convergence probe: labels are monotonically non-increasing per
     // node (least(own, neighbor-min)), so the label SUM is strictly
@@ -525,33 +521,19 @@ object Dedup {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("component").cast(DecimalType(38, 0)))).head()
         .getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    Iterate.untilStable(labels, maxIter, labelSum) { labels =>
       // each node adopts the min of (its label, neighbors' labels)
       val neighborMin = sym
         .join(labels.select(col("id").as("src"),
           col("component").as("src_comp")), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("src_comp")).as("neighbor_comp"))
-      // LAZY checkpoint: the convergence probe right below is the first
-      // action, so one job both materializes this round's labels and
-      // computes the sum (an eager checkpoint would spend a separate
-      // job per round just materializing — measurable at small graph
-      // sizes where per-round fixed cost dominates)
-      labels = labels.join(neighborMin, Seq("id"), "left")
+      labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"),
             coalesce(col("neighbor_comp"), col("component")))
             .as("component"))
-        .localCheckpoint(false)
-      val sumNow = labelSum(labels)
-      converged = sumNow.compareTo(prevSum) == 0
-      prevSum = sumNow
-      iter += 1
     }
-    labels
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
@@ -606,32 +588,22 @@ object Dedup {
       (r.getLong(0),
         Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
     }
-    var edges = pairs
+    val start = pairs
       .select(col("id_a").cast("long").as("u"),
         col("id_b").cast("long").as("v"))
       .localCheckpoint(true)
     // node set from the CHECKPOINTED edges — deriving it from `pairs`
     // would re-run the (possibly expensive) upstream pair generation a
     // second time at the final join
-    val nodes = edges.select(col("u").as("id"))
-      .unionByName(edges.select(col("v").as("id"))).distinct()
-    var prev = fingerprint(edges)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val dir = edges.unionByName(
-        edges.select(col("v").as("u"), col("u").as("v"))).distinct()
-      // LAZY checkpoint: the fingerprint probe is the materializing
-      // action, so each round costs one job. (Pairing two rounds per
-      // probe was measured SLOWER on this corpus: near-dup components
-      // are shallow stars converging in 2-3 rounds, and the extra
-      // confirm-pair's two full contraction shuffles cost more than
-      // the per-round probe jobs they replace.)
-      edges = smallStar(largeStar(dir)).localCheckpoint(false)
-      val now = fingerprint(edges)
-      converged = now == prev
-      prev = now
-      iter += 1
+    val nodes = start.select(col("u").as("id"))
+      .unionByName(start.select(col("v").as("id"))).distinct()
+    // one fingerprint job per round: pairing two rounds per probe was
+    // measured SLOWER on this corpus — near-dup components are shallow
+    // stars converging in 2-3 rounds, and the extra confirm-pair's two
+    // full contraction shuffles cost more than the probes they replace
+    val edges = Iterate.untilStable(start, maxIter, fingerprint) { edges =>
+      smallStar(largeStar(edges.unionByName(
+        edges.select(col("v").as("u"), col("u").as("v"))).distinct()))
     }
     // at the fixpoint the edge set IS the star forest (node -> root);
     // roots themselves carry their own id

@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.ops.Iterate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -35,16 +36,12 @@ object GeoMedian {
       .select(col("id"), col("i").cast("long").as("i"), col("x"))
       .persist()
     val n = df.count()
-    var y = e.groupBy("i")
+    val y0 = e.groupBy("i")
       .agg(sum(col("x").cast(dec)).as("s"))
       .select(col("i"),
         (col("s").cast("double") / lit(n.toDouble)).as("y"))
-      // LAZY cut (round 10): y feeds two consumers per round (dist and
-      // parts) so the lineage needs truncating, but a d-row frame never
-      // needs its own driver job — the caller's single action
-      // materializes the whole Weiszfeld chain
       .localCheckpoint(false)
-    for (_ <- 1 to iters) {
+    val y = Iterate.rounds(y0, iters) { y =>
       val dist = e.join(broadcast(y), Seq("i"))
         .groupBy("id")
         .agg(sqrt(sum(((col("x") - col("y")) * (col("x") - col("y")))
@@ -56,11 +53,8 @@ object GeoMedian {
             .cast("long")).as("numq"),
           sum(floor(lit(1.0) / col("d") * lit(1e9) + lit(0.5))
             .cast("long")).as("denq"))
-      y = parts
-        .select(col("i"),
-          (col("numq").cast("double") / col("denq").cast("double"))
-            .as("y"))
-        .localCheckpoint(false)
+      parts.select(col("i"),
+        (col("numq").cast("double") / col("denq").cast("double")).as("y"))
     }
     y.select(col("i").as("dim"), round(col("y"), 6).as("coord"))
       .orderBy("dim")

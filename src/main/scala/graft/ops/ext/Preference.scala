@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.ops.Iterate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,10 +45,10 @@ object Preference {
     val totals = pairs.groupBy("i")
       .agg(sum("w").as("wins"), sum("g").as("games"))
       .persist()
-    var piq = totals.select(col("i"), lit(S.toLong).as("piq"))
-    for (_ <- 1 to rounds) {
+    val piq = Iterate.rounds(
+        totals.select(col("i"), lit(S.toLong).as("piq")), rounds) { piq =>
       val opp = piq.select(col("i").as("j"), col("piq").as("pjq"))
-      val next = pairs.join(broadcast(piq), "i").join(broadcast(opp), "j")
+      pairs.join(broadcast(piq), "i").join(broadcast(opp), "j")
         .select(col("i"),
           floor(col("g").cast("double") /
             ((col("piq") + col("pjq")).cast("double") / S) * S + 0.5)
@@ -58,15 +59,6 @@ object Preference {
           floor(col("wins").cast("double") /
             (col("den").cast("double") / S) * S + 0.5)
             .cast("long").as("piq"))
-        // truncate lineage between rounds: the round frame feeds TWO
-        // broadcasts next round, and without a hard cut the replay
-        // grows 2^r (persist alone does NOT dedupe the broadcast
-        // subqueries under AQE — measured on the q232 pipeline). LAZY
-        // cut (round 10): same LogicalRDD sharing — the first broadcast
-        // build materializes the blocks, the second reuses them — minus
-        // the per-round eager materialization job.
-        .localCheckpoint(false)
-      piq = next
     }
     totals.join(broadcast(piq), "i")
       .select(col("i").as("player"), col("wins"), col("games"),

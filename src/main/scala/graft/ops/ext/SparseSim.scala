@@ -33,13 +33,11 @@ object SparseSim {
     * shared phrases. The `maxDf` cap is the belt to that suspender at
     * corpus scale.
     *
-    * CACHE CONTRACT (round-9 advice): the returned frame is LAZY and
-    * reads two internal `persist`ed intermediates (tf, weights), which
-    * this method cannot unpersist without evicting them before the
-    * caller's first action. A long-lived session calling this
-    * repeatedly must `spark.catalog.clearCache()` between invocations
-    * (the bench/verify harnesses already do, per timed run) or persist-
-    * materialize the result and clear then.
+    * CACHE CONTRACT: the returned frame is LAZY and reads two internal
+    * `persist`ed intermediates (tf, weights), which stay cached after
+    * the caller's action. Run the call and its action inside
+    * [[graft.exec.Scope.run]] to free them (Bench, Verify and the dev
+    * timers run every query in one).
     */
   def cosineJoin(docs: DataFrame, textCol: String, idCol: String,
                  threshold: Double, maxDf: Long = 100000L,

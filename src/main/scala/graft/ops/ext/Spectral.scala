@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.ops.Iterate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -63,32 +64,37 @@ object Spectral {
 
   private val dec = DecimalType(38, 18)
 
-  /** One power round: w = M·v (DECIMAL matvec sums), ‖w‖, v' = w/‖w‖.
-    * Returns (w-frame with column `w`, norm scalar frame `nrm`).
-    * `w` is LAZILY localCheckpointed: it feeds BOTH the norm scalar and
-    * the next vector, so an uncut lineage doubles per round (2^iters
-    * logical plan nodes), while an EAGER cut would spend a driver job
-    * per round on a d-row frame — the lazy cut keeps the plan
-    * round-deep and lets the caller's single action materialize every
-    * round in one job.
-    */
-  private def powerRound(m: DataFrame, v: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val w = m.join(broadcast(v.select(col("i").as("j"), col("v").as("vj"))),
+  /** w = M·v (DECIMAL matvec sums) as (i, w). */
+  private def matvec(m: DataFrame, v: DataFrame): DataFrame =
+    m.join(broadcast(v.select(col("i").as("j"), col("v").as("vj"))),
         Seq("j"))
       .groupBy(col("i"))
       .agg(sum((col("m") * col("vj")).cast(dec)).as("sw"))
       .select(col("i"), col("sw").cast("double").as("w"))
-      .localCheckpoint(false)
-    val nrm = w.agg(
+
+  /** ‖w‖ as a one-row frame (`nrm`). */
+  private def norm(w: DataFrame): DataFrame =
+    w.agg(
       sqrt(sum((col("w") * col("w")).cast(dec)).cast("double")).as("nrm"))
-    (w, nrm)
-  }
+
+  /** v' = w/‖w‖ as (i, v). */
+  private def unit(w: DataFrame, nrm: DataFrame): DataFrame =
+    w.crossJoin(broadcast(nrm))
+      .select(col("i"), (col("w") / col("nrm")).as("v"))
 
   private def unitStart(df: DataFrame, dims: Int): DataFrame =
     df.sparkSession.range(0, dims.toLong)
       .select(col("id").as("i"),
         lit(1.0 / math.sqrt(dims.toDouble)).as("v"))
+
+  /** `iters` power rounds on `m` from the unit start: the last round's
+    * w = M·v, each round cut by [[graft.ops.Iterate]] (w feeds both the
+    * norm and the next vector).
+    */
+  private def powerIterate(m: DataFrame, df: DataFrame, dims: Int,
+      iters: Int): DataFrame =
+    Iterate.rounds(matvec(m, unitStart(df, dims)).localCheckpoint(false),
+      iters - 1)(w => matvec(m, unit(w, norm(w))))
 
   /** `iters` power-iteration rounds on the d-dimensional second-moment
     * matrix of `vecCol`. Output: (dim, loading, eigenvalue) — the unit
@@ -98,16 +104,9 @@ object Spectral {
   def dominantEigen(df: DataFrame, vecCol: String, idCol: String,
       dims: Int, iters: Int): DataFrame = {
     require(iters >= 1 && dims >= 1)
-    val m = gramMatrix(df, vecCol, dims)
-    var v = unitStart(df, dims)
-    var nrm: DataFrame = null
-    for (_ <- 1 to iters) {
-      val (w, n) = powerRound(m, v)
-      nrm = n
-      v = w.crossJoin(broadcast(nrm))
-        .select(col("i"), (col("w") / col("nrm")).as("v"))
-    }
-    v.crossJoin(broadcast(nrm))
+    val w = powerIterate(gramMatrix(df, vecCol, dims), df, dims, iters)
+    val nrm = norm(w)
+    unit(w, nrm).crossJoin(broadcast(nrm))
       .select(col("i").as("dim"), round(col("v"), 6).as("loading"),
         round(col("nrm"), 6).as("eigenvalue"))
       .orderBy("dim")
@@ -134,29 +133,18 @@ object Spectral {
     require(iters >= 1 && dims >= 1)
     val m = gramMatrix(df, vecCol, dims)
     // pass 1: dominant direction + lambda1
-    var v1 = unitStart(df, dims)
-    var nrm1: DataFrame = null
-    for (_ <- 1 to iters) {
-      val (w, n) = powerRound(m, v1)
-      nrm1 = n
-      v1 = w.crossJoin(broadcast(nrm1))
-        .select(col("i"), (col("w") / col("nrm")).as("v"))
-    }
-    val v1c = v1.localCheckpoint(false)
+    val w1 = powerIterate(m, df, dims, iters)
+    val nrm1 = norm(w1)
+    val v1c = unit(w1, nrm1).localCheckpoint(false)
     val lam1 = nrm1.select(col("nrm").as("lam")).localCheckpoint(false)
-    // pass 2: deflated iteration. Each round's vector localCheckpoints
-    // LAZILY (64 rows): the round body embeds THREE scalar broadcast
-    // subplans (dot, λ₁, norm), and without cutting the lineage every
-    // broadcast exchange of round r re-executes the full round-(r−1)
-    // tree — a blowup that dwarfs the actual arithmetic. The lazy cut
-    // (vs the round-9 eager one) removes the per-round materialization
-    // job too: the whole two-pass chain now runs inside the caller's
-    // single action, with the checkpointed blocks persisting on first
-    // compute for the multi-consumer frames.
+    // pass 2: deflated iteration. Each round embeds THREE scalar
+    // broadcast subplans (dot, λ₁, norm) over two frames (w, the
+    // deflated w), so both are cut per round, lazily (the Iterate
+    // cadence); uncut, every broadcast of round r re-executes round r−1
     var u = unitStart(df, dims)
     var nrm2: DataFrame = null
     for (_ <- 1 to iters) {
-      val (w, _) = powerRound(m, u)
+      val w = matvec(m, u).localCheckpoint(false)
       val d = u.join(v1c.select(col("i"), col("v").as("v1")), Seq("i"))
         .agg(sum((col("v") * col("v1")).cast(dec)).cast("double").as("d"))
       val wd = w.join(broadcast(v1c.select(col("i"), col("v").as("v1"))),
@@ -165,10 +153,8 @@ object Spectral {
         .select(col("i"),
           (col("w") - col("lam") * col("d") * col("v1")).as("w"))
         .localCheckpoint(false)
-      nrm2 = wd.agg(
-        sqrt(sum((col("w") * col("w")).cast(dec)).cast("double")).as("nrm"))
-      u = wd.crossJoin(broadcast(nrm2))
-        .select(col("i"), (col("w") / col("nrm")).as("v"))
+      nrm2 = norm(wd)
+      u = unit(wd, nrm2)
     }
     val resid = u.join(v1c.select(col("i"), col("v").as("v1")), Seq("i"))
       .agg(sum((col("v") * col("v1")).cast(dec)).cast("double").as("resid"))

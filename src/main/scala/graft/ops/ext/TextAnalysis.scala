@@ -15,7 +15,7 @@ object TextAnalysis {
 
   /** Word tokens: lowercase, split on non-alphanumerics, drop empties. */
   def tokens(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)
+    array_remove(split(lower(text), "[^a-z0-9]+"), "")
 
   def tokenCount(text: Column): Column = size(tokens(text))
 

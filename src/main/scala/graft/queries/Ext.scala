@@ -349,7 +349,7 @@ object ExtQueries {
     */
   def q21(s: SparkSession, dir: String): DataFrame =
     T(s, dir, "documents").select(col("doc_id"),
-      size(filter(split(col("text"), "\\s+"), t => length(t) > 0))
+      size(array_remove(split(col("text"), "\\s+"), ""))
         .cast("long").as("n_ws_tokens"),
       regexp_count(col("text"), lit("[A-Za-z0-9_]+|[^A-Za-z0-9_\\s]"))
         .cast("long").as("n_bpeish_tokens"))

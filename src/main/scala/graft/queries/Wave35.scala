@@ -171,21 +171,20 @@ object Wave35Queries {
     * — the classic web-graph structure census.
     */
   def q296(s: SparkSession, dir: String): DataFrame = {
-    // one persisted graph feeds BOTH bfs directions — the backward
-    // pass is a column swap over the same cached edge set, not a
+    // one checkpointed graph feeds BOTH bfs directions — the backward
+    // pass is a column swap over the same edge blocks, not a
     // rebuild-and-redistinct of the lineitem scan
     val e = shipReturnEdges(s, dir)
-      .select(col("src"), col("dst")).distinct().persist()
+      .select(col("src"), col("dst")).distinct().localCheckpoint(false)
     val seeds = T(s, dir, "supplier").filter(col("s_suppkey") <= 3)
       .select(col("s_suppkey").as("node"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .union(seeds.select(col("node"))).distinct().persist()
-    // the two directions are INDEPENDENT hop-per-job traversals over
-    // the same persisted edge frame — submit them from two threads so
-    // their per-hop jobs interleave on the scheduler instead of
-    // serializing two traversals' fixed costs (the q391 idiom; each
-    // traversal's own hops stay sequential, results are deterministic)
+      .union(seeds.select(col("node"))).distinct().localCheckpoint(false)
+    // the two directions are INDEPENDENT traversals over the same edge
+    // frame — submit them from two threads so their jobs interleave on
+    // the scheduler instead of serializing two traversals' fixed costs
+    // (the q391 idiom; results are deterministic)
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -200,7 +199,6 @@ object Wave35Queries {
           .select(col("node"), (col("dist") >= 0).as("b"))))),
         Duration.Inf)
       finally pool.shutdown()
-    e.unpersist(); nodes.unpersist()
     fwd.join(bwd, Seq("node"), "full")
       .na.fill(false, Seq("f", "b"))
       .select(when(col("f") && col("b"), "core")

@@ -21,7 +21,7 @@ object DevPlan {
     val outDir = Paths.get("plans/r10")
     Files.createDirectories(outDir)
     for (name <- qs) {
-      try {
+      try graft.exec.Scope.run(spark) {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -30,7 +30,7 @@ object DevPlan {
         println(s"[devplan] $name -> ${name}_$tag.txt (Exchange x$exch)")
       } catch {
         case e: Throwable => println(s"[devplan] $name FAILED: ${e.getMessage}")
-      } finally spark.catalog.clearCache()
+      }
     }
     spark.stop()
   }

@@ -435,6 +435,27 @@ class PlanSpec extends AnyFunSuite {
       s"deflate_len operator not codegen'd:\n$plan")
   }
 
+  test("q101 tokenize Project runs inside whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec,
+      SparkPlan, WholeStageCodegenExec}
+    val df = SparkEntry.queries("q101_bm25")(spark, dir)
+    df.collect() // finalize the adaptive plan so codegen stages are real
+    val root = df.queryExecution.executedPlan
+    def tokenizes(p: SparkPlan): Boolean = p.isInstanceOf[ProjectExec] &&
+      p.expressions.exists(_.exists(_.isInstanceOf[StringSplit]))
+    // a codegen stage ends at an InputAdapter: what sits below one runs
+    // row by row outside the stage's generated code
+    def inStage(n: SparkPlan, p: SparkPlan): Boolean = (n eq p) ||
+      (!n.isInstanceOf[InputAdapter] && n.children.exists(inStage(_, p)))
+    val projects = PlanWalk.collectAll(root)(tokenizes)
+    assert(projects.nonEmpty, s"expected the tokenize Project:\n$root")
+    val stages = PlanWalk.collectAll(root)(_.isInstanceOf[WholeStageCodegenExec])
+    for (p <- projects)
+      assert(stages.exists(s => inStage(s.asInstanceOf[WholeStageCodegenExec]
+        .child, p)), s"tokenize Project outside codegen:\n$root")
+  }
+
   test("q402 exposure: linear shape — aggregates and one equi join only") {
     val df = SparkEntry.queries("q402_ngram_exposure")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString

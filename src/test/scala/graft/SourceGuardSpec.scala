@@ -128,6 +128,19 @@ class SourceGuardSpec extends AnyFunSuite {
       f == "graft/io/TxLog.scala" && layout.findFirstIn(src).isDefined })
   }
 
+  test("only graft.exec.Scope (and Bpe's per-round bound) releases state") {
+    // operators persist and checkpoint freely; the enclosing Scope frees
+    val release = """\.unpersist\(|\bgetPersistentRDDs\b""".r
+    val owners = Set("graft/exec/Scope.scala", "graft/ops/ext/Bpe.scala")
+    val offenders = sources.collect {
+      case (f, src) if !owners(f) && release.findFirstIn(src).isDefined => f
+    }
+    assert(offenders.isEmpty,
+      "leave releasing to graft.exec.Scope.run: " + offenders.mkString(", "))
+    assert(owners.forall(o => sources.exists { case (f, src) =>
+      f == o && release.findFirstIn(src).isDefined }))
+  }
+
   test("graft.Sessions is the only session builder in src/main and src/test") {
     val builder = """\bSparkSession\s*\.\s*builder\b""".r
     val scanned = sources.filterNot(_._1 == "graft/Sessions.scala") ++

@@ -82,4 +82,27 @@ class Hdf5ExportSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("'s'"))
   }
+
+  test("export and read resolve a file system set on the session") {
+    // the scheme is known only to the session's runtime conf, with the
+    // FileSystem cache off so no earlier instance can stand in for it
+    val dir = "h5test://" + freshDir()
+    spark.conf.set("fs.h5test.impl", classOf[H5TestFs].getName)
+    spark.conf.set("fs.h5test.impl.disable.cache", "true")
+    try {
+      val df = (1L to 50L).map(i => (i, i / 2.0)).toDF("k", "x")
+        .repartition(2, col("k"))
+      assert(Hdf5Export.write(df, dir) == 2)
+      val back = spark.read.format("hdf5").load(s"$dir/*.h5")
+      assert(back.except(df).isEmpty && df.except(back).isEmpty)
+    } finally {
+      spark.conf.unset("fs.h5test.impl")
+      spark.conf.unset("fs.h5test.impl.disable.cache")
+    }
+  }
+}
+
+/** The local file system under its own scheme, `h5test`. */
+class H5TestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("h5test:///")
 }
