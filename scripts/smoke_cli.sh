@@ -39,9 +39,18 @@ run annotate --input "$WORK" --config "$WORK/config.json" \
   --fields "$WORK/fields.json" --out "$WORK/manifest.json"
 # --data-dir IS the dataset root the manifest's `data/...` sources are
 # anchored to (the reference's $data_directory), not its parent
-run run --manifest "$WORK/manifest.json" --data-dir "$WORK/data" \
-  --out "$WORK/parquet_out"
+# under a process umask of 077: output modes come from Hadoop's umask
+# (fs.permissions.umask-mode, default 022) applied by the file system
+(umask 077; run run --manifest "$WORK/manifest.json" \
+  --data-dir "$WORK/data" --out "$WORK/parquet_out")
 test -n "$(find "$WORK/parquet_out" -name '*.parquet' | head -1)"
+file_modes=$(find "$WORK/parquet_out" -type f -exec stat -c %a {} + | sort -u)
+dir_modes=$(find "$WORK/parquet_out" -type d -exec stat -c %a {} + | sort -u)
+if [ "$file_modes" != 644 ] || [ "$dir_modes" != 755 ]; then
+  echo "run output modes: files $file_modes, directories $dir_modes" \
+    "(want 644 and 755)"
+  exit 1
+fi
 
 # 3. profile the executed output (targets are named after the source file)
 run profile --input "$WORK/parquet_out/rra.sgrna_summary.parquet"

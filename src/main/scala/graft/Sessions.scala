@@ -52,6 +52,25 @@ import org.apache.spark.sql.SparkSession
   *       whole-stage codegen stages in the order it plans them, which
   *       varies run to run; with the number in the class name the same
   *       stage code was a new class (q109: 4, q13: 2–4 per repeat).
+  *  - local writes start no child process. Spark ships no native Hadoop
+  *    library, so two stock paths start one per file. JFR
+  *    `jdk.ProcessStart` over one `query_mix` run (seed 7, 4 cores):
+  *    1,611 (729 `chmod`, 864 `readlink`; ~400 per pass, ~290 in q177),
+  *    each forked from a 2.8 GB JVM. With both settings: 18, none per
+  *    write (16 `rm -rf` of Spark's temporary directories when a session
+  *    stops, and two one-time probes, `setsid` and `getconf`).
+  *     - `spark.hadoop.fs.file.impl` = [[graft.io.LocalFs]]. Hadoop's
+  *       local file system runs `chmod` for every file and directory it
+  *       creates (Parquet parts, committer directories, table-log
+  *       entries, HDF5 exports, checkpoint files); `LocalFs` sets the
+  *       same modes through `java.nio`. Graft's session-less lookups use
+  *       [[graft.io.LocalFs.conf]], which agrees, so which one resolves
+  *       `file:` first in a JVM does not matter.
+  *     - `spark.sql.streaming.checkpointFileManagerClass` = the
+  *       FileSystem-based manager. Spark's default goes through
+  *       FileContext, whose rename runs `readlink` twice per checkpoint
+  *       file. Both managers write the same files, so a checkpoint
+  *       either wrote resumes under the other (`StreamSinkSpec`).
   */
 object Sessions {
   def builder(cpus: String): SparkSession.Builder =
@@ -62,6 +81,10 @@ object Sessions {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFs].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")

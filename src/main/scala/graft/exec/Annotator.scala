@@ -1,6 +1,6 @@
 package graft.exec
 
-import graft.io.Sniffer
+import graft.io.{LocalFs, Sniffer}
 import graft.model._
 import graft.ops.Tokens
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -84,7 +84,7 @@ object Annotator {
 
   /** Recursive file scan relative to `root`, extension-filtered (S1). */
   def listFiles(root: String, extensions: Seq[String],
-                conf: Configuration = new Configuration()): Seq[String] = {
+                conf: Configuration = LocalFs.conf): Seq[String] = {
     val dataDir = new Path(root, "data")
     val fs = dataDir.getFileSystem(conf)
     if (!fs.exists(dataDir)) return Nil
@@ -102,7 +102,7 @@ object Annotator {
 
   /** Header columns of one file via the sniffer's head sample. */
   def headerColumns(root: String, relPath: String,
-                    conf: Configuration = new Configuration())
+                    conf: Configuration = LocalFs.conf)
       : Seq[String] = {
     val full = s"${root.stripSuffix("/")}/$relPath"
     val lines = {
@@ -130,7 +130,7 @@ object Annotator {
                     newColumns: Seq[String])
 
   def annotate(inputDir: String, config: Config, catalog: FieldsCatalog,
-               conf: Configuration = new Configuration()): Result = {
+               conf: Configuration = LocalFs.conf): Result = {
     val files = listFiles(inputDir, config.extensions, conf)
 
     // 2. partition into variable groups (first pattern wins)

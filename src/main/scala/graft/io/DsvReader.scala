@@ -48,7 +48,7 @@ object DsvReader {
 
   def read(spark: SparkSession, source: String,
            opts: ReadOpts = ReadOpts()): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val sampleFile = Sniffer.firstMatchingFile(source, conf).getOrElse(source)
     val sep = opts.sep.getOrElse(Sniffer.sniffSep(sampleFile, conf))
     val reader = spark.read

@@ -47,7 +47,7 @@ object Hdf5Source {
   /** Glob variant + the end-to-end conversion. */
   def hdf5ToParquet(spark: SparkSession, inGlob: String, out: String,
                     select: Seq[String] = Nil): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val p = new Path(inGlob)
     val fs = p.getFileSystem(conf)
     val files = Option(fs.globStatus(p)).getOrElse(Array.empty)

@@ -109,7 +109,7 @@ object Layout {
               outPath: String, targetBytes: Long = 128L << 20): Long = {
     require(targetBytes > 0)
     val hPath = new org.apache.hadoop.fs.Path(inPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes = fs.getContentSummary(hPath).getLength
     val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     Parquet.read(spark, inPath).repartition(files)
@@ -169,7 +169,7 @@ object Layout {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     val files =

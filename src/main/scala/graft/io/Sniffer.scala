@@ -27,7 +27,7 @@ object Sniffer {
     * gzip-transparent by extension, matching the reference's allowlist
     * `run_annotate.py:259`). Falls back to comma for single-column files.
     */
-  def sniffSep(path: String, conf: Configuration = new Configuration())
+  def sniffSep(path: String, conf: Configuration = LocalFs.conf)
       : String = {
     val lines = sampleLines(path, conf)
     sniffFromLines(lines).toString
@@ -105,7 +105,7 @@ object Sniffer {
     * explicitly via ReadOpts.sampleInference.
     */
   def inferSchemaFromSample(path: String, sep: Char,
-                            conf: Configuration = new Configuration())
+                            conf: Configuration = LocalFs.conf)
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     val lines = sampleLines(path, conf, maxLines = 200)
@@ -133,7 +133,7 @@ object Sniffer {
     * match); driver-side listing only.
     */
   def firstMatchingFile(globPath: String,
-                        conf: Configuration = new Configuration())
+                        conf: Configuration = LocalFs.conf)
       : Option[String] = {
     val p = new Path(globPath)
     val fs = p.getFileSystem(conf)

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.io.JsonStringEncoder
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -46,14 +45,10 @@ object TxLog {
   final class ConcurrentCommitException(msg: String)
     extends RuntimeException(msg)
 
-  // one shared Configuration: every log operation resolves a FileSystem
-  // (FileSystem.get caches instances per scheme+authority, but each
-  // `new Configuration()` re-parses the default XML resources — pure
-  // overhead multiplied by the many small log reads a txlog query does)
-  private lazy val hadoopConf = new Configuration()
-
-  private def fs(table: String): FileSystem =
-    new HPath(table).getFileSystem(hadoopConf)
+  // every log operation resolves a FileSystem, many without a session:
+  // through the one shared conf that resolves `file:` as the session does
+  private[io] def fs(table: String): FileSystem =
+    new HPath(table).getFileSystem(LocalFs.conf)
 
   /** A log entry normally lists table-relative directories
     * (`data/cNNNNN`). A SHALLOW CLONE's entry lists ABSOLUTE

@@ -27,8 +27,7 @@ object Wave73Queries {
   def q417(s: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
     val out = s"${CoreQueries.fixDir(dir)}/q417_h5_export"
-    val fs = new HPath(out)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = new HPath(out).getFileSystem(s.sessionState.newHadoopConf())
     if (!fs.exists(new HPath(out, "_SUCCESS"))) {
       val src = T(s, dir, "orders").select(col("o_orderkey"),
           col("o_custkey"),
@@ -69,8 +68,7 @@ object Wave73Queries {
   def q418(s: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
     val out = s"${CoreQueries.fixDir(dir)}/q418_h5_matrix"
-    val fs = new HPath(out)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = new HPath(out).getFileSystem(s.sessionState.newHadoopConf())
     if (!fs.exists(new HPath(out, "_SUCCESS"))) {
       val src = T(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"), col("label"))

@@ -141,6 +141,17 @@ class SourceGuardSpec extends AnyFunSuite {
       f == o && release.findFirstIn(src).isDefined }))
   }
 
+  test("no Hadoop conf from sparkContext.hadoopConfiguration in src/main") {
+    // it misses the session's runtime fs.* settings; resolve through
+    // sessionState.newHadoopConf(), or graft.io.LocalFs.conf without one
+    val offenders = sources.collect {
+      case (f, src) if """\bsparkContext\s*\.\s*hadoopConfiguration\b""".r
+        .findFirstIn(src).isDefined => f
+    }
+    assert(offenders.isEmpty,
+      "use spark.sessionState.newHadoopConf(): " + offenders.mkString(", "))
+  }
+
   test("graft.Sessions is the only session builder in src/main and src/test") {
     val builder = """\bSparkSession\s*\.\s*builder\b""".r
     val scanned = sources.filterNot(_._1 == "graft/Sessions.scala") ++

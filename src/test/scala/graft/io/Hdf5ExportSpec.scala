@@ -100,6 +100,24 @@ class Hdf5ExportSpec extends AnyFunSuite {
       spark.conf.unset("fs.h5test.impl.disable.cache")
     }
   }
+
+  test("hdf5ToParquet globs through a file system set on the session") {
+    val dir = "h5test://" + freshDir()
+    val out = freshDir()
+    spark.conf.set("fs.h5test.impl", classOf[H5TestFs].getName)
+    spark.conf.set("fs.h5test.impl.disable.cache", "true")
+    try {
+      val df = (1L to 50L).map(i => (i, i / 2.0)).toDF("k", "x")
+        .repartition(2, col("k"))
+      assert(Hdf5Export.write(df, dir) == 2)
+      Hdf5Source.hdf5ToParquet(spark, s"$dir/*.h5", out)
+      val back = Parquet.read(spark, out)
+      assert(back.except(df).isEmpty && df.except(back).isEmpty)
+    } finally {
+      spark.conf.unset("fs.h5test.impl")
+      spark.conf.unset("fs.h5test.impl.disable.cache")
+    }
+  }
 }
 
 /** The local file system under its own scheme, `h5test`. */

@@ -30,6 +30,42 @@ class StreamSinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() == want.size)
   }
 
+  private val checkpointManager =
+    "spark.sql.streaming.checkpointFileManagerClass"
+  private val managers = "org.apache.spark.sql.execution.streaming." +
+    "checkpointing."
+
+  /** Streams `src` to a fresh output on one checkpoint twice, appending
+    * a new input file between the runs (the first run under
+    * `firstManager`), and returns the ids the output holds.
+    */
+  private def restartedIds(firstManager: Option[String]): Seq[Long] = {
+    val src = Files.createTempDirectory("restart_src").toString + "/ev"
+    val out = Files.createTempDirectory("restart_out").toString + "/t"
+    val ckpt = Files.createTempDirectory("restart_ckpt").toString
+    (1L to 300L).toDF("id").coalesce(1).write.parquet(src)
+    firstManager match {
+      case Some(m) => withConf(checkpointManager -> (managers + m)) {
+        StreamOps.streamToParquet(spark, src, out, ckpt)
+      }
+      case None => StreamOps.streamToParquet(spark, src, out, ckpt)
+    }
+    (301L to 500L).toDF("id").coalesce(1).write.mode("append").parquet(src)
+    StreamOps.streamToParquet(spark, src, out, ckpt)
+    spark.read.parquet(out).as[Long].collect().toSeq.sorted
+  }
+
+  test("a restarted file stream emits every row exactly once") {
+    assert(restartedIds(None) == (1L to 500L))
+  }
+
+  test("a checkpoint the FileContext manager wrote resumes") {
+    assert(spark.conf.get(checkpointManager) ==
+      managers + "FileSystemBasedCheckpointFileManager")
+    assert(restartedIds(Some("FileContextBasedCheckpointFileManager")) ==
+      (1L to 500L))
+  }
+
   test("streamDistinct over derived keys matches the batch distinct") {
     val src = Files.createTempDirectory("sd_src").toString
     (1L to 300L).map(i => (i, s"k${i % 40}")).toDF("id", "raw")
