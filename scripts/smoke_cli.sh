@@ -17,9 +17,11 @@ run() { echo "== $*"; sbt -batch "runMain graft.cli.Main $*" | grep -E '^\[info\
 mkdir -p "$WORK/data/mageck/count/combined"
 printf 'sgRNA\tGene\tsampleA\tsampleB\ns1\tBRCA1\t10\t20\ns2\tTP53\t30\t40\n' \
   > "$WORK/data/mageck/count/combined/counts.txt"
+# the two files of the [GENE] group spell their header differently
 for g in BRCA1 TP53; do
   mkdir -p "$WORK/data/mageck/$g"
-  printf 'sgrna\tscore\ns1\t0.5\ns2\t0.9\n' \
+  header='sgrna\tscore'; [ "$g" = TP53 ] && header='SGRNA\tSCORE'
+  printf "$header"'\ns1\t0.5\ns2\t0.9\n' \
     > "$WORK/data/mageck/$g/rra.sgrna_summary.txt"
 done
 cat > "$WORK/config.json" <<'EOF'
@@ -49,6 +51,15 @@ dir_modes=$(find "$WORK/parquet_out" -type d -exec stat -c %a {} + | sort -u)
 if [ "$file_modes" != 644 ] || [ "$dir_modes" != 755 ]; then
   echo "run output modes: files $file_modes, directories $dir_modes" \
     "(want 644 and 755)"
+  exit 1
+fi
+
+# each file's own header line is dropped before types are inferred
+score_type=$(python3 -c 'import sys, pyarrow.parquet as pq
+print(pq.read_schema(sys.argv[1]).field("score").type)' \
+  "$(find "$WORK/parquet_out/rra.sgrna_summary.parquet" -type f -name '*.parquet' | head -1)")
+if [ "$score_type" != double ]; then
+  echo "run output: score is $score_type (want double)"
   exit 1
 fi
 

@@ -19,8 +19,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - column names: trim + lowercase + first-seen dedup
   *    (`run_annotate.py:47-49`), collisions suffixed `_2`, `_3`, ...
   *
-  * One `spark.read` per source glob — at scale the scan parallelizes per
-  * file/split; only the sniff (a few KB) touches the driver.
+  * One `spark.read` per source glob through [[DsvFormat]]. Full
+  * inference is one job at plan build: split like the scan, each split
+  * drops its file's own header line (files of one glob may spell the
+  * header differently) and folds the rest into column types. The scan
+  * then parallelizes per file/split; only the sniff and the header line
+  * (a few KB) touch the driver.
   */
 object DsvReader {
 
@@ -46,29 +50,37 @@ object DsvReader {
     }
   }
 
+  /** The reader options of every DSV read: pandas NA semantics
+    * (NA/empty/NaN -> null, SURVEY §7.4.2), permissive rows.
+    */
+  private[io] def options(sep: String, header: Boolean): Map[String, String] =
+    Map("sep" -> sep, "header" -> header.toString, "nullValue" -> "NA",
+      "nanValue" -> "NaN", "mode" -> "PERMISSIVE")
+
   def read(spark: SparkSession, source: String,
            opts: ReadOpts = ReadOpts()): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val sampleFile = Sniffer.firstMatchingFile(source, conf).getOrElse(source)
     val sep = opts.sep.getOrElse(Sniffer.sniffSep(sampleFile, conf))
-    val reader = spark.read
-      .option("sep", sep)
-      .option("header", opts.header)
-      // pandas NA semantics: NA/empty/NaN -> null (SURVEY §7.4.2)
-      .option("nullValue", "NA")
-      .option("nanValue", "NaN")
-      .option("mode", "PERMISSIVE")
-    // full inference = a second complete pass over the source; the
-    // sample path types from the sniffer's head sample instead (one
-    // data pass total — the 100 TB default trade, opt-in here)
+    val reader = spark.read.format(classOf[DsvFormat].getName)
+      .options(options(sep, opts.header))
+    // full inference is one job at plan build (see DsvFormat); the
+    // sample path types from the sniffer's head sample instead and
+    // starts no job until the scan
     val df =
       if (opts.sampleInference)
         reader.schema(Sniffer.inferSchemaFromSample(sampleFile, sep.head,
-          conf)).csv(source)
-      else reader.option("inferSchema", "true").csv(source)
+          conf)).load(source)
+      else reader.option("inferSchema", "true").load(source)
+    clean(df)
+  }
+
+  /** Normalized names, and the remaining pandas NA tokens on string
+    * columns -> null (numeric columns already coerce failures to null
+    * via PERMISSIVE + nanValue).
+    */
+  private[io] def clean(df: DataFrame): DataFrame = {
     val named = df.toDF(normalizeNames(df.columns.toSeq): _*)
-    // remaining pandas NA tokens on string columns -> null (numeric
-    // columns already coerce failures to null via PERMISSIVE + nanValue)
     import graft.Cols.ref
     import org.apache.spark.sql.functions.when
     import org.apache.spark.sql.types.StringType

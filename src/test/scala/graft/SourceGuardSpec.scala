@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * to seconds per call and changes no result, so only this check sees it.
   * The same scan keeps every session on the one engine config
   * ([[graft.Sessions]]), in the tests as well as the program, and the
-  * table log's on-disk layout behind the one module that writes it.
+  * table log's on-disk layout behind the one module that writes it,
+  * and every DSV read on [[graft.io.DsvFormat]].
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -104,6 +105,26 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(mergeSchemaReads.subsetOf(rawReads.toSet),
       s"stale exemptions: ${mergeSchemaReads -- rawReads.toSet}")
     assert(rawReads.exists(_._1 == helper))
+  }
+
+  /** A batch CSV read: `.read`, any `.option(...)`, `.options(...)` or
+    * `.schema(...)` calls, then `.csv(` or `.format("csv")`.
+    */
+  private val csvRead =
+    ("""\.read(\s*\.\s*(option|options|schema)\((?:[^()]|\([^()]*\))*\))*""" +
+      """\s*\.\s*(csv\(|format\(\s*"csv"\s*\))""").r
+
+  test("no CSV read outside graft.io: DSV input takes graft.io.DsvFormat") {
+    assert(csvRead.findFirstIn("spark.read.option(\"sep\", sep).csv(p)")
+      .isDefined)
+    assert(csvRead.findFirstIn(
+      "s.read.schema(f(a, b))\n  .format(\"csv\").load(p)").isDefined)
+    val offenders = sources.collect {
+      case (f, src) if !f.startsWith("graft/io/") &&
+        csvRead.findFirstIn(src).isDefined => f
+    }
+    assert(offenders.isEmpty,
+      "read DSV through graft.io.DsvReader: " + offenders.mkString(", "))
   }
 
   test("no fixed state-store instance count in src/main") {

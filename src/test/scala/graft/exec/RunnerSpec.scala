@@ -33,6 +33,29 @@ class RunnerSpec extends AnyFunSuite {
     assert(back.select("gene").distinct().count() == 2)
   }
 
+  test("a variable-file group whose files spell the header differently stays numeric") {
+    val root = Files.createTempDirectory("graft-run-case")
+    val data = root.resolve("data")
+    for ((g, header) <- Seq("G1" -> "sgrna\tscore\tlfc",
+                            "G2" -> "SGRNA\tSCORE\tLFC")) {
+      val d = data.resolve("m").resolve(g)
+      Files.createDirectories(d)
+      Files.write(d.resolve("s.txt"),
+        s"$header\nr1\t0.5\t-1.0\nr2\t0.7\t2\n".getBytes)
+    }
+    val manifest = ManifestParser.parse(
+      """{"dsv":[{"source":"$data_directory/m/[GENE]/s.txt",
+        |"target":"out.parquet",
+        |"tokens":[{"token":"[GENE]","name":"gene"}],
+        |"cols":[{"col":"sgrna"},{"col":"score"},{"col":"lfc"}]}]}""".stripMargin)
+    val out = root.resolve("out").toString
+    Runner.run(spark, manifest, data.toString, out)
+    val back = spark.read.parquet(s"$out/out.parquet")
+    assert(back.schema("score").dataType.typeName == "double")
+    assert(back.schema("lfc").dataType.typeName == "double")
+    assert(back.count() == 4)
+  }
+
   test("json and parquet sources run through the same manifest pipeline") {
     val root = Files.createTempDirectory("graft-fmt")
     val data = root.resolve("data")

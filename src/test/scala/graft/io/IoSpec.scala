@@ -123,6 +123,16 @@ class DsvReaderSpec extends AnyFunSuite {
     assert(vals == Set("a, b, c", "plain"))
   }
 
+  test("files of one glob that spell the header differently still infer numeric") {
+    val d = Files.createTempDirectory("graft-dsv-case")
+    Files.write(d.resolve("a.tsv"), "Gene\tScore\ng1\t1.5\ng2\t2\n".getBytes("UTF-8"))
+    Files.write(d.resolve("b.tsv"), "GENE\tSCORE\ng3\t3.25\n".getBytes("UTF-8"))
+    val df = DsvReader.read(spark, s"$d/*.tsv")
+    assert(df.columns.toSeq == Seq("gene", "score"))
+    assert(df.schema("score").dataType.typeName == "double")
+    assert(df.collect().map(_.getDouble(1)).sorted.toSeq == Seq(1.5, 2.0, 3.25))
+  }
+
   test("duplicate headers get suffixes (Spark indexes case dups; the normalizer suffixes whitespace-variant dups)") {
     // exact case-insensitive duplicates: Spark's CSV reader indexes them
     val p1 = tmpFile("d1.tsv", "Gene\tgene\tScore\ng1\tg2\t5\n")
